@@ -19,49 +19,25 @@ All built-in Column expressions — no Python UDFs.
 
 from __future__ import annotations
 
-import itertools
 import os
 import shutil
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
-#: monotonic suffix for driver-loop temp views (the ADVICE-r12 naming
-#: rule: never key session-global view names on id())
-_VIEW_IDS = itertools.count()
-
+from .loop_sql import sql_lazy
 from .text import fingerprint_col
-
-
-def _sql_lazy(df: DataFrame, sql_for_view) -> DataFrame:
-    """Build a lazy result as ONE SQL statement over a throwaway view of
-    ``df`` — the r13 construction pattern for builders whose Column form
-    needs hundreds of py4j round trips (the 124-sum simhash agg measured
-    ~2.3 s of pure driver-side construction per bench run). The SQL text
-    spells out the SAME operators in the SAME order as the Column chain it
-    replaces, so plans and results are bit-identical. ``.schema`` forces
-    analysis while the view still exists; after that the returned frame's
-    analyzed plan embeds the resolved subtree, so the view is dropped
-    immediately (no catalog leak, no cross-call collision — monotonic
-    counter names)."""
-    spark = df.sparkSession
-    view = f"__sig_v_{next(_VIEW_IDS)}"
-    df.createOrReplaceTempView(view)
-    try:
-        out = spark.sql(sql_for_view(view))
-        out.schema  # force analysis so the plan survives the view drop
-    finally:
-        spark.catalog.dropTempView(view)
-    return out
 
 
 class _RoundCheckpointer:
     """Per-round checkpoint manager for iterative graph loops.
 
     Two modes:
-     - local (default, ``checkpoint_dir=None``): ``localCheckpoint(eager)``
-       — fastest, but blocks live on executors, so an executor loss on a
-       real cluster kills the job mid-loop; fine on local[*].
+     - local (default, ``checkpoint_dir=None``): DISK_ONLY
+       ``localCheckpoint(eager)`` — fastest, but blocks live on
+       executors, so an executor loss on a real cluster kills the job
+       mid-loop; fine on local[*].
      - reliable (``checkpoint_dir`` set, or env
        ``SPARK_GRAFT_CHECKPOINT_DIR``): ``checkpoint(eager)`` against the
        dir — data lands on the checkpoint filesystem (HDFS/object store),
@@ -82,6 +58,10 @@ class _RoundCheckpointer:
         self.reliable = checkpoint_dir is not None
         if self.reliable:
             spark.sparkContext.setCheckpointDir(checkpoint_dir)
+
+    def __call__(self, df: DataFrame) -> DataFrame:
+        if self.reliable:
+            return df.checkpoint(eager=True)
         # Heap posture for the LOCAL mode: localCheckpoint's default
         # storage keeps deserialized blocks ON-HEAP, which is what set the
         # ×100 graph family's 16 g floor (BASELINE.md round-10 batch 10 —
@@ -91,22 +71,8 @@ class _RoundCheckpointer:
         # read. Measured round 11: ×100 dedup_clusters GREEN at 8 g in
         # 102.8 s (vs 105.7 s at 16 g on-heap — the re-read is cheaper than
         # the GC pressure it replaces) and parity-neutral at sf0.1 (4.40 vs
-        # 4.56 s median). DISK_ONLY is therefore the LOCAL DEFAULT;
-        # `SPARK_GRAFT_CC_STORAGE=memory` opts back into on-heap blocks.
-        self._storage = None
-        if not self.reliable and os.environ.get(
-            "SPARK_GRAFT_CC_STORAGE", "disk"
-        ).lower() == "disk":
-            from pyspark.storagelevel import StorageLevel
-
-            self._storage = StorageLevel.DISK_ONLY
-
-    def __call__(self, df: DataFrame) -> DataFrame:
-        if self.reliable:
-            return df.checkpoint(eager=True)
-        if self._storage is not None:
-            return df.localCheckpoint(eager=True, storageLevel=self._storage)
-        return df.localCheckpoint(eager=True)
+        # 4.56 s median).
+        return df.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
 
     def free(self, df: DataFrame) -> None:
         """Release a SUPERSEDED generation (never the one still feeding
@@ -616,7 +582,6 @@ def connected_components_star(
     edges = ck(edges_pre)
     sig = _sig_get(obs0)
     ck.free(pairs)  # verts + edges are self-contained now
-    converged = False
     # r12 (guide §2.4: window keyed like the preceding shuffle needs no
     # second exchange; §3.3: the join was the accidental part): each
     # star step used to be groupBy(u).min + join back on u — two
@@ -642,43 +607,38 @@ def connected_components_star(
     # and the round's final distinct dedups the set, so it saves one
     # Exchange per round (guide §2.4) while the row multiset feeding it
     # is bounded by |sym|/2.
-    spark = pairs.sparkSession
-    view = f"__cc_star_edges_{next(_VIEW_IDS)}"
-    round_sql = (
-        "SELECT DISTINCT x AS u, m AS v FROM ("
-        " SELECT explode(array(v, u)) AS x, m FROM ("
-        # large-star output is already oriented u > v (m ≤ min-nbr < v)
-        "  SELECT u, v, least(u, min(v) OVER (PARTITION BY u)) AS m FROM ("
-        "   SELECT v AS u, m AS v FROM ("
-        "    SELECT u, v, least(u, min(v) OVER (PARTITION BY u)) AS m"
-        f"    FROM (SELECT u, v FROM {view}"
-        f"          UNION ALL SELECT v, u FROM {view})"
-        "   ) WHERE v > u AND v != m"
-        "  )"
-        " )"
-        ") WHERE x != m"
-    )
-    try:
-        for _ in range(max_iters):
-            edges.createOrReplaceTempView(view)
-            small_pre, obs = _sig_observe(spark.sql(round_sql))
-            small = ck(small_pre)
-            new_sig = _sig_get(obs)
-            fixpoint = (
-                new_sig == sig
-                and small.join(edges, ["u", "v"], "left_anti").count() == 0
-            )
-            # the anti-join above was this round's last read of the
-            # previous generation — drop it NOW, keeping at most
-            # current + in-flight generations in storage
-            ck.free(edges)
-            edges, sig = small, new_sig
-            if fixpoint:
-                converged = True
-                break
-    finally:
-        spark.catalog.dropTempView(view)
-    if not converged:
+    def round_sql(view: str) -> str:
+        return (
+            "SELECT DISTINCT x AS u, m AS v FROM ("
+            " SELECT explode(array(v, u)) AS x, m FROM ("
+            # large-star output is already oriented u > v (m ≤ min-nbr < v)
+            "  SELECT u, v, least(u, min(v) OVER (PARTITION BY u)) AS m FROM ("
+            "   SELECT v AS u, m AS v FROM ("
+            "    SELECT u, v, least(u, min(v) OVER (PARTITION BY u)) AS m"
+            f"    FROM (SELECT u, v FROM {view}"
+            f"          UNION ALL SELECT v, u FROM {view})"
+            "   ) WHERE v > u AND v != m"
+            "  )"
+            " )"
+            ") WHERE x != m"
+        )
+
+    for _ in range(max_iters):
+        small_pre, obs = _sig_observe(sql_lazy(edges, round_sql))
+        small = ck(small_pre)
+        new_sig = _sig_get(obs)
+        fixpoint = (
+            new_sig == sig
+            and small.join(edges, ["u", "v"], "left_anti").count() == 0
+        )
+        # the anti-join above was this round's last read of the
+        # previous generation — drop it NOW, keeping at most
+        # current + in-flight generations in storage
+        ck.free(edges)
+        edges, sig = small, new_sig
+        if fixpoint:
+            break
+    else:
         raise RuntimeError(
             f"connected_components_star did not converge in {max_iters} rounds;"
             " O(log n) bound implies a graph with > 2^max_iters vertices —"
@@ -793,7 +753,7 @@ def simhash_signatures(docs: DataFrame, text_col: str = "text", bits: int = 32) 
         " ELSE CAST(0 AS BIGINT) END"
         for b in range(bits)
     )
-    return _sql_lazy(
+    return sql_lazy(
         docs,
         lambda view: f"""
 WITH toks AS (
@@ -1236,7 +1196,7 @@ def simhash_signatures_2w(
         " ELSE CAST(0 AS BIGINT) END"
         for b in range(62, bits)
     )
-    return _sql_lazy(
+    return sql_lazy(
         docs,
         lambda view: f"""
 WITH toks AS (

@@ -45,15 +45,12 @@ doubles (k = |domains|). Reference analogue: none — extension track
 
 from __future__ import annotations
 
-import itertools
 from decimal import ROUND_HALF_UP, Decimal
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: monotonic suffix for driver-loop temp views (the ADVICE-r12 naming
-#: rule: never key session-global view names on id())
-_VIEW_IDS = itertools.count()
+from .loop_sql import sql_double, temp_view
 
 #: fixed optimization configuration — part of the cross-engine contract
 ITERS = 8
@@ -167,12 +164,10 @@ def doremi_trajectory(
     # Weight literals round-trip exactly (shortest repr + correctly-
     # rounded parse); source names are SQL-escaped.
     spark = model.sparkSession
-    view = f"__doremi_model_{next(_VIEW_IDS)}"
-    model.createOrReplaceTempView(view)
 
-    def mix_loss(weights: dict[str, float]) -> dict[str, Decimal]:
+    def mix_loss(view: str, weights: dict[str, float]) -> dict[str, Decimal]:
         wmap = ", ".join(
-            f"'{s.replace(chr(39), chr(39) * 2)}', {weights[s]!r}D"
+            f"'{s.replace(chr(39), chr(39) * 2)}', {sql_double(weights[s])}"
             for s in sources
         )
         # fail-loud underflow guard: when every w_d·p_d(t) term rounds
@@ -201,9 +196,9 @@ def doremi_trajectory(
             )
         return {r["source"]: r["lneg"] for r in rows}
 
-    try:
+    with temp_view(model, "__doremi_model") as view:
         for _ in range(iters):
-            lneg = mix_loss(w)
+            lneg = mix_loss(view, w)
             u = {}
             for s in sources:
                 ex = hneg[s] - lneg[s]  # exact DECIMAL: KL on the grid
@@ -212,9 +207,7 @@ def doremi_trajectory(
             z = sum(u.values())  # exact DECIMAL sum — order-free
             w = {s: float(_q12(float(u[s]) / float(z))) for s in sources}
 
-        final_lneg = mix_loss(w)
-    finally:
-        spark.catalog.dropTempView(view)
+        final_lneg = mix_loss(view, w)
     excess = {
         s: max(hneg[s] - final_lneg[s], Decimal(0)) for s in sources
     }

@@ -4,8 +4,7 @@ analytics engine must run without driver-side graph state).
 
 Spark-first: each iteration is ONE edge⋈rank join + one dst-grain
 aggregate — the edge table is the fact (shuffled on src, then dst), the
-rank table is node-grain (small relative to edges; broadcastable for
-dimension-sized graphs, co-partitioned for web-scale ones). Iterations
+rank table is node-grain (small relative to edges) and broadcast. Iterations
 unroll into the logical plan (bounded iters) — for long runs compose
 with the CC module's round checkpointer to keep lineage flat.
 
@@ -32,8 +31,6 @@ def pagerank(
     damping: float = 0.85,
     src: str = "src",
     dst: str = "dst",
-    materialize: bool = True,
-    broadcast_ranks: bool = False,
     redistribute: bool = False,
 ) -> DataFrame:
     """Ranks after ``iters`` power iterations on a DIRECTED edge list
@@ -51,30 +48,25 @@ def pagerank(
 
     Output: (node, rank) with rank a 12-dp-grid double, summing to ≤ 1.
 
-    ``broadcast_ranks``: hint the node-grain side of every per-round
-    join as broadcast — right whenever nodes ≪ edges (dimension-sized
-    graphs like the item graph: localCheckpointed inputs carry no
-    stats, so Spark falls to SortMergeJoin without the hint). Leave
-    False for web-scale graphs where ranks must shuffle-join.
+    The node-grain side of every per-round join is hinted broadcast —
+    right whenever nodes ≪ edges (dimension-sized graphs like the item
+    graph: localCheckpointed inputs carry no stats, so Spark falls to
+    SortMergeJoin without the hint).
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    if materialize:
-        # the edge subtree feeds EVERY iteration's join plus nodes/deg —
-        # unrolled lazily it re-derives per consumer (measured: the
-        # 3-iteration registry query planned 105 exchanges / 9 SMJs;
-        # materialized: the edge build runs once and each round starts
-        # from a flat scan). Same eager-at-construction contract as the
-        # CC loop's round checkpointer.
-        e = e.localCheckpoint()
+    # the edge subtree feeds EVERY iteration's join plus nodes/deg —
+    # unrolled lazily it re-derives per consumer (measured: the
+    # 3-iteration registry query planned 105 exchanges / 9 SMJs;
+    # materialized: the edge build runs once and each round starts
+    # from a flat scan). Same eager-at-construction contract as the
+    # CC loop's round checkpointer.
+    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).localCheckpoint()
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
+        .localCheckpoint()
     )
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
-    if materialize:
-        nodes = nodes.localCheckpoint()
-        deg = deg.localCheckpoint()
+    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg")).localCheckpoint()
     n_df = nodes.agg(F.count(F.lit(1)).alias("n_nodes"))
     # rank0 = round(1/N, 12): one double division + half-away round —
     # engine-identical
@@ -86,20 +78,15 @@ def pagerank(
         .alias("rank"),
     )
     for _ in range(iters):
-        if redistribute and materialize:
+        if redistribute:
             # the dangling sum makes ranks a TWO-consumer subtree per
             # round (contribs + D) — unrolled lazily the plan doubles
             # per iteration (measured: 63 exchanges at 3 rounds vs 19
             # materialized). Node-grain checkpoint, cheap by definition.
             ranks = ranks.localCheckpoint()
-        rank_side = ranks.select(F.col("node").alias("src"), "rank")
-        deg_side = deg
-        if broadcast_ranks:
-            rank_side = F.broadcast(rank_side)
-            deg_side = F.broadcast(deg_side)
         contribs = (
-            e.join(rank_side, "src")
-            .join(deg_side, "src")
+            e.join(F.broadcast(ranks.select(F.col("node").alias("src"), "rank")), "src")
+            .join(F.broadcast(deg), "src")
             .select(
                 F.col("dst").alias("node"),
                 F.round(
@@ -118,17 +105,15 @@ def pagerank(
             * F.coalesce(F.col("in_sum").cast("double"), F.lit(0.0))
         )
         base = ranks.select("node", "n_nodes", "rank").join(
-            F.broadcast(in_sums) if broadcast_ranks else in_sums, "node", "left"
+            F.broadcast(in_sums), "node", "left"
         )
         if redistribute:
             # D = exact decimal sum of the grid ranks on sink nodes
             # (anti-join against out-degrees); its per-node share is a
             # single-op double chain, order-mirrored by the oracle
-            sink_probe = deg.select(F.col("src").alias("node"))
-            if broadcast_ranks:
-                # checkpointed deg carries no stats → the anti-join
-                # would fall to SMJ without the hint (node-grain side)
-                sink_probe = F.broadcast(sink_probe)
+            # checkpointed deg carries no stats → the anti-join would
+            # fall to SMJ without the hint (node-grain side)
+            sink_probe = F.broadcast(deg.select(F.col("src").alias("node")))
             dang = ranks.join(sink_probe, "node", "left_anti").agg(
                 F.coalesce(
                     F.sum("rank"), F.lit(0).cast(f"decimal(32,{GRID})")
@@ -152,8 +137,6 @@ def triangle_counts(
     edges: DataFrame,
     u: str = "u",
     v: str = "v",
-    materialize: bool = True,
-    broadcast_degrees: bool = True,
 ) -> DataFrame:
     """Exact per-node triangle counts on an UNDIRECTED edge list (one row
     per unordered pair, any orientation; duplicates/self-loops dropped).
@@ -186,8 +169,6 @@ def triangle_counts(
             F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
         )
         .distinct()
-    )
-    if materialize:
         # the canonical edge table feeds THREE consumers (degrees + both
         # orientation joins) and the oriented table three more — unrolled
         # lazily each consumer re-derives the upstream build (measured on
@@ -195,7 +176,8 @@ def triangle_counts(
         # two materialization points: the build runs once and the
         # downstream plan is flat). Same eager-at-construction contract
         # as pagerank/the CC round checkpointer.
-        e_raw = e_raw.localCheckpoint()
+        .localCheckpoint()
+    )
     # degree per node (undirected)
     deg = (
         e_raw.select(F.col("a").alias("node"))
@@ -208,10 +190,8 @@ def triangle_counts(
     nodes = deg.select("node")
     # node-grain (≪ edges for any graph with average degree > 2);
     # checkpointed inputs carry no stats, so Spark would fall to SMJ
-    # without the hint — same lesson as pagerank's broadcast_ranks.
-    # Disable for web-scale node sets that must shuffle-join.
-    if broadcast_degrees:
-        deg = F.broadcast(deg)
+    # without the hint — same lesson as pagerank's broadcast joins.
+    deg = F.broadcast(deg)
     da = deg.select(F.col("node").alias("a"), F.col("deg").alias("deg_a"))
     db = deg.select(F.col("node").alias("b"), F.col("deg").alias("deg_b"))
     # orient low-(deg,id) -> high-(deg,id); node ids give the total tiebreak
@@ -227,9 +207,8 @@ def triangle_counts(
             F.when(lt, F.col("deg_a")).otherwise(F.col("deg_b")).alias("deg_src"),
             F.when(lt, F.col("deg_b")).otherwise(F.col("deg_a")).alias("deg_dst"),
         )
+        .localCheckpoint()
     )
-    if materialize:
-        oriented = oriented.localCheckpoint()
     # r12 (guide §2.3 "shuffle fewer bytes" / §2.4): the wedge-join form
     # materialized Σ outdeg² wedge ROWS and shuffled them into a closing
     # hash join — the measured dominant stage (27.7 s of a 38.8 s run,
@@ -244,15 +223,15 @@ def triangle_counts(
     # (u→v, u→w, v→w) is found exactly once, at edge (u,v) with common
     # neighbor w — the identical multiset of (node, +1) contributions
     # the closed-wedge explode emitted, so counts are bit-identical.
-    adj = oriented.groupBy("src").agg(F.collect_list("dst").alias("nbrs"))
-    if materialize:
-        # adj feeds BOTH endpoint joins below; without a materialization
-        # point the planner re-runs the collect_list agg once per join —
-        # the r12 committed plan shows two partial_collect_list towers
-        # and no ReusedExchange (ADVICE r12). Node-grain rows (≤ one
-        # O(√E)-bounded array per node), so the checkpoint is tiny
-        # relative to re-aggregating the edge stream.
-        adj = adj.localCheckpoint()
+    # adj feeds BOTH endpoint joins below; without a materialization
+    # point the planner re-runs the collect_list agg once per join —
+    # the r12 committed plan shows two partial_collect_list towers
+    # and no ReusedExchange (ADVICE r12). Node-grain rows (≤ one
+    # O(√E)-bounded array per node), so the checkpoint is tiny
+    # relative to re-aggregating the edge stream.
+    adj = (
+        oriented.groupBy("src").agg(F.collect_list("dst").alias("nbrs")).localCheckpoint()
+    )
     closed = (
         oriented.select("src", "dst")
         .join(adj.select(F.col("src").alias("_sa"), F.col("nbrs").alias("na")),
@@ -290,8 +269,6 @@ def kcore(
     max_iters: int = 8,
     u: str = "u",
     v: str = "v",
-    materialize: bool = True,
-    broadcast_nodes: bool = True,
 ) -> DataFrame:
     """Members of the k-core (the maximal subgraph where every node has
     degree ≥ k) of an UNDIRECTED edge list, with each member's in-core
@@ -309,7 +286,7 @@ def kcore(
     converge (peeling depth is bounded by the graph's degeneracy
     ordering depth, single digits for organic co-occurrence graphs;
     raise it for adversarial chains). 100 TB posture: every round
-    shuffles the edge table on its keys only (survivors broadcast when
+    shuffles the edge table on its keys only (survivors broadcast:
     node-grain ≪ edge-grain), no driver-side graph state beyond one
     count per round.
     """
@@ -318,28 +295,23 @@ def kcore(
         .filter(F.col("a") != F.col("b"))
         .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
         .distinct()
+        .localCheckpoint()
     )
-    if materialize:
-        e_all = e_all.localCheckpoint()
     alive = (
         e_all.select(F.col("a").alias("node"))
         .unionAll(e_all.select(F.col("b").alias("node")))
         .distinct()
+        .localCheckpoint()
     )
-    if materialize:
-        alive = alive.localCheckpoint()
     n_alive = alive.count()
-    # survivor sets are node-grain; broadcast them only while that holds
-    # (disable for web-scale sparse graphs where |nodes| ~ |edges| and the
-    # build side would blow the broadcast limit — same contract as
-    # pagerank's broadcast_ranks / triangle_counts' broadcast_degrees)
-    _bc = F.broadcast if broadcast_nodes else (lambda df: df)
+    # survivor sets are node-grain, so they broadcast (same contract as
+    # pagerank / triangle_counts)
     for _ in range(max_iters):
         surv = (
             e_all.join(
-                _bc(alive.select(F.col("node").alias("a"))), "a", "left_semi"
+                F.broadcast(alive.select(F.col("node").alias("a"))), "a", "left_semi"
             ).join(
-                _bc(alive.select(F.col("node").alias("b"))), "b", "left_semi"
+                F.broadcast(alive.select(F.col("node").alias("b"))), "b", "left_semi"
             )
         )
         deg = (
@@ -347,9 +319,7 @@ def kcore(
             .groupBy("node")
             .agg(F.count(F.lit(1)).alias("core_deg"))
         )
-        new_alive = deg.filter(F.col("core_deg") >= k)
-        if materialize:
-            new_alive = new_alive.localCheckpoint()
+        new_alive = deg.filter(F.col("core_deg") >= k).localCheckpoint()
         n_new = new_alive.count()
         alive = new_alive.select("node")
         if n_new == n_alive:
@@ -366,8 +336,6 @@ def label_propagation(
     rounds: int = 4,
     u: str = "u",
     v: str = "v",
-    materialize: bool = True,
-    broadcast_nodes: bool = True,
 ) -> DataFrame:
     """Community detection by SYNCHRONOUS label propagation over an
     undirected edge list: every node starts as its own label; each round
@@ -381,7 +349,7 @@ def label_propagation(
 
     Spark shape per round: one edge⋈label join per direction (the edge
     table shuffles on its key once; label tables are node-grain and
-    broadcast when ≪ edges), a (node, label) count, and an
+    broadcast), a (node, label) count, and an
     argmax-by-(count, −label) picked as a struct MIN — partial-
     aggregable, no window. Labels localCheckpoint per round (the CC/
     kcore round-checkpointer contract) so lineage stays flat.
@@ -392,27 +360,23 @@ def label_propagation(
         .filter(F.col("a") != F.col("b"))
         .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
         .distinct()
+        .localCheckpoint()
     )
-    if materialize:
-        e = e.localCheckpoint()
     labels = (
         e.select(F.col("a").alias("node"))
         .unionAll(e.select(F.col("b").alias("node")))
         .distinct()
         .select("node", F.col("node").alias("label"))
+        .localCheckpoint()
     )
-    if materialize:
-        labels = labels.localCheckpoint()
     # same broadcast contract as kcore: node-grain label tables broadcast
-    # by default, flag off for sparse web-scale graphs
-    _bc = F.broadcast if broadcast_nodes else (lambda df: df)
     for _ in range(rounds):
         la = labels.select(F.col("node").alias("a"), "label")
         lb = labels.select(F.col("node").alias("b"), "label")
         msgs = (
-            e.join(_bc(la), "a").select(F.col("b").alias("node"), "label")
+            e.join(F.broadcast(la), "a").select(F.col("b").alias("node"), "label")
             .unionAll(
-                e.join(_bc(lb), "b").select(
+                e.join(F.broadcast(lb), "b").select(
                     F.col("a").alias("node"), "label"
                 )
             )
@@ -423,9 +387,8 @@ def label_propagation(
             cnt.groupBy("node")
             .agg(F.min(F.struct((-F.col("c")).alias("nc"), F.col("label").alias("l"))).alias("p"))
             .select("node", F.col("p.l").alias("label"))
+            .localCheckpoint()
         )
-        if materialize:
-            labels = labels.localCheckpoint()
     return labels
 
 
@@ -435,8 +398,6 @@ def adamic_adar(
     v: str = "v",
     max_center_degree: int = 1024,
     min_common: int = 2,
-    materialize: bool = True,
-    broadcast_degrees: bool = True,
 ) -> DataFrame:
     """Adamic–Adar link prediction on an UNDIRECTED edge list: for every
     NON-adjacent pair (a, b) sharing >= ``min_common`` neighbors, the
@@ -470,19 +431,16 @@ def adamic_adar(
         .filter(F.col("a") != F.col("b"))
         .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
         .distinct()
-    )
-    if materialize:
         # feeds the adjacency build twice (via the union) + the final
         # anti-join — same multi-consumer contract as triangle_counts
-        e = e.localCheckpoint()
+        .localCheckpoint()
+    )
     adj = e.select(F.col("a").alias("node"), F.col("b").alias("nbr")).unionAll(
         e.select(F.col("b").alias("node"), F.col("a").alias("nbr"))
     )
-    deg = adj.groupBy("node").agg(F.count(F.lit(1)).alias("d"))
-    if broadcast_degrees:
-        # node-grain side onto the edge-grain adjacency; checkpointed
-        # inputs carry no stats -> explicit hint (triangle_counts lesson)
-        deg = F.broadcast(deg)
+    # node-grain side onto the edge-grain adjacency; checkpointed inputs
+    # carry no stats -> explicit hint (triangle_counts lesson)
+    deg = F.broadcast(adj.groupBy("node").agg(F.count(F.lit(1)).alias("d")))
     ctr = adj.join(deg, "node").filter(F.col("d") <= max_center_degree)
     ca = ctr.select("node", F.col("nbr").alias("node_a"), "d")
     cb = ctr.select("node", F.col("nbr").alias("node_b"))

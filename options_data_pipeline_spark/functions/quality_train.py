@@ -51,13 +51,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .loop_sql import sql_double, temp_view
+
 #: fixed training configuration — part of the cross-engine contract
 ITERS = 32
 LR = 8.0  # power of two: the update multiply is exact
-
-#: monotonic suffix for the GD loop's temp view — session-global names
-#: keyed on id() can collide after GC (ADVICE r12 on the kmeans view)
-_VIEW_IDS = __import__("itertools").count()
 
 
 def quality_features(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -160,16 +158,12 @@ def quality_train(
     # round-12 DECIMAL(38,12) sums, CAST(count(1) AS DOUBLE)) is the
     # same operators in the same order as the Column form, so the
     # trajectory — and the oracle hash — is unchanged. Weight literals
-    # round-trip exactly: repr() emits the shortest decimal that parses
-    # back to the same IEEE double, and the D suffix keeps Spark from
-    # reading them as DECIMAL.
+    # round-trip exactly (see sql_double).
     spark = feats.sparkSession
-    view = f"__quality_gd_{next(_VIEW_IDS)}"
-    feats.createOrReplaceTempView(view)
     w = [0.0, 0.0, 0.0, 0.0]
-    try:
+    with temp_view(feats, "__quality_gd") as view:
         for _ in range(iters):
-            wl = [f"{x!r}D" for x in w]
+            wl = [sql_double(x) for x in w]
             z = f"(({wl[0]} + {wl[1]} * x1) + {wl[2]} * x2) + {wl[3]} * x3"
             row = spark.sql(
                 "SELECT sum(CAST(round(g, 12) AS DECIMAL(38,12))) AS sb,"
@@ -188,8 +182,6 @@ def quality_train(
                 w[2] - lr * (float(row["s2"]) / n),
                 w[3] - lr * (float(row["s3"]) / n),
             ]
-    finally:
-        spark.catalog.dropTempView(view)
     return w
 
 

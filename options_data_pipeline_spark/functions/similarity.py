@@ -19,14 +19,17 @@ Scale design (100 TB / billions of vectors):
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-#: monotonic suffix for driver-loop temp views (ADVICE r12: id()-keyed
-#: names can collide after GC)
-_VIEW_IDS = itertools.count()
+from .loop_sql import (
+    dot_sql,
+    sign_bit_sql,
+    sql_double,
+    sql_double_array,
+    sql_lazy,
+    temp_view,
+)
 
 
 def dot_col(a: str | Column, b: str | Column) -> Column:
@@ -177,32 +180,28 @@ def rp_lsh_near_dup_pairs(
     # ONE SQL statement instead of ~1,000 py4j Column constructions (the
     # 16×64 plane-literal trees measured ~1.3 s of pure driver-side
     # construction per bench run) — same operators in the same order
-    # (cast/norm → per-plane sign bits → concat_ws bands → stack →
+    # (cast/norm → per-plane sign bits → concat bands → stack →
     # bucket self-join → cosine → DISTINCT → threshold), so plans and
     # results are bit-identical. Plane literals round-trip exactly
-    # (shortest-repr + correctly-rounded parse).
-    from .dedupe import _sql_lazy
-
+    # (shortest-repr + correctly-rounded parse). A NULL vector has NULL
+    # sign bits and a NULL band key, so it never shares a bucket.
     bit_sql = ",\n         ".join(
-        "CASE WHEN "
-        + _dot_sql("v", "array(" + ", ".join(_sql_double(w) for w in plane) + ")")
-        + f" >= 0 THEN 1 ELSE 0 END AS bit{j}"
-        for j, plane in enumerate(planes)
+        f"{sign_bit_sql('v', plane)} AS bit{j}" for j, plane in enumerate(planes)
     )
     band_sql = ",\n         ".join(
-        "concat_ws(''"
-        + "".join(f", bit{j}" for j in range(b * rows_per_band, (b + 1) * rows_per_band))
+        "concat("
+        + ", ".join(f"bit{j}" for j in range(b * rows_per_band, (b + 1) * rows_per_band))
         + f") AS band{b}"
         for b in range(bands)
     )
     stack_args = ", ".join(f"{b}, band{b}" for b in range(bands))
     vcast = f"CAST({vec_col} AS ARRAY<DOUBLE>)"
-    return _sql_lazy(
+    return sql_lazy(
         vectors,
         lambda view: f"""
 WITH v AS (
   SELECT {id_col} AS vid, {vcast} AS v,
-         sqrt({_dot_sql(vcast, vcast)}) AS nrm
+         sqrt({dot_sql(vcast, vcast)}) AS nrm
   FROM {view}
 ),
 sig AS (
@@ -222,11 +221,11 @@ banded AS (
 ),
 cand AS (
   SELECT DISTINCT a.vid AS id_a, b.vid AS id_b,
-         {_dot_sql('a.v', 'b.v')} / (a.nrm * b.nrm) AS cosine
+         {dot_sql('a.v', 'b.v')} / (a.nrm * b.nrm) AS cosine
   FROM banded a JOIN banded b USING (band, bucket)
   WHERE a.vid < b.vid
 )
-SELECT id_a, id_b, cosine FROM cand WHERE cosine >= {_sql_double(threshold)}""",
+SELECT id_a, id_b, cosine FROM cand WHERE cosine >= {sql_double(threshold)}""",
     )
 
 
@@ -246,21 +245,6 @@ def fixed_centroids(k: int = 8, dim: int = 64) -> list[list[float]]:
             row.append(int(h, 16) / float(1 << 31) - 1.0)
         cents.append(row)
     return cents
-
-
-def _sql_double(x: float) -> str:
-    """Render a Python float as a Spark SQL DOUBLE literal. ``repr`` emits
-    the shortest decimal that round-trips (both Python and the JVM parse
-    via correctly-rounded decimal→binary64), so the parsed literal is
-    bit-identical to ``F.lit(x)``."""
-    return repr(float(x)) + "D"
-
-
-def _dot_sql(a: str, b: str) -> str:
-    """SQL text of the sequential dot-product fold — the string twin of
-    :func:`dot_col` (zip_with + aggregate, same summation order, so values
-    stay bit-identical with DuckDB's list_dot_product where dot_col was)."""
-    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, (a, x) -> a + x)"
 
 
 def _score_entries_sql(
@@ -284,11 +268,11 @@ def _score_entries_sql(
     v = f"CAST(`{vec_col}` AS ARRAY<DOUBLE>)"
     parts = []
     for ci, c in enumerate(cents):
-        arr = "array(" + ",".join(_sql_double(x) for x in c) + ")"
-        c2 = _sql_double(sum(x * x for x in c))
+        arr = sql_double_array(c)
+        c2 = sql_double(sum(x * x for x in c))
         cid = ci if ids is None else int(ids[ci])
         parts.append(
-            f"named_struct('score', {c2} - 2.0D * {_dot_sql(v, arr)}, 'cell', {cid})"
+            f"named_struct('score', {c2} - 2.0D * {dot_sql(v, arr)}, 'cell', {cid})"
         )
     return "array(" + ",".join(parts) + ")"
 
@@ -458,18 +442,12 @@ def kmeans_centroids(
     # py4j call + one parse; the expression tree (argmin string, avg,
     # round) is the same operators in the same order, so the float
     # trajectory — and the oracle hash — is unchanged.
-    # monotonic counter, not id(): id() values can be reused after GC and
-    # the view namespace is session-global, so two interleaved builds
-    # could collide and one's finally-block would drop the other's view
-    # mid-loop (ADVICE r12)
-    view = f"__kmeans_v_{next(_VIEW_IDS)}"
-    v.createOrReplaceTempView(view)
     mean_sql = (
         (lambda d: f"avg(v[{d}]) AS d{d}")
         if round_dp is None
         else (lambda d: f"round(avg(v[{d}]), {int(round_dp)}) AS d{d}")
     )
-    try:
+    with temp_view(v, "__kmeans_v") as view:
         for _ in range(iters):
             argmin = f"array_min({_score_entries_sql('v', centroids)}).cell"
             means = spark.sql(
@@ -480,8 +458,6 @@ def kmeans_centroids(
             for r in means:
                 new_cents[r["cell"]] = [r[f"d{d}"] for d in range(dim)]
             centroids = new_cents
-    finally:
-        spark.catalog.dropTempView(view)
     return centroids
 
 
@@ -688,15 +664,15 @@ def pq_encode(
     stage1 = [F.col(id_col)] + [F.col(c) for c in extra_cols]
     for j, book in enumerate(books):
         vj = f"slice({v}, {j * sub + 1}, {sub})"
-        vj2 = _dot_sql(vj, vj)
+        vj2 = dot_sql(vj, vj)
         parts = []
         for ci, c in enumerate(book):
-            arr = "array(" + ",".join(_sql_double(x) for x in c) + ")"
-            c2 = _sql_double(sum(x * x for x in c))
+            arr = sql_double_array(c)
+            c2 = sql_double(sum(x * x for x in c))
             # |v_j|² + |c|² − 2·v_j·c, strict-< first-wins ties via the
             # struct<err,code> ordering of array_min (lower code on ties)
             parts.append(
-                f"named_struct('err', {vj2} + {c2} - 2.0D * {_dot_sql(vj, arr)},"
+                f"named_struct('err', {vj2} + {c2} - 2.0D * {dot_sql(vj, arr)},"
                 f" 'code', {ci})"
             )
         stage1.append(
@@ -1395,14 +1371,14 @@ def pq_adc_topk_from_codes(
     for j, book in enumerate(books):
         qj = f"slice(`q`, {j * sub + 1}, {sub})"
         book_lit = "array(" + ",".join(
-            "array(" + ",".join(_sql_double(x) for x in c) + ")" for c in book
+            sql_double_array(c) for c in book
         ) + ")"
         c2_lit = "array(" + ",".join(
-            _sql_double(sum(x * x for x in c)) for c in book
+            sql_double(sum(x * x for x in c)) for c in book
         ) + ")"
         cvec = f"element_at({book_lit}, `code_{j}` + 1)"
         c2 = f"element_at({c2_lit}, `code_{j}` + 1)"
-        terms.append(f"({_dot_sql(qj, qj)} + {c2} - 2.0D * {_dot_sql(qj, cvec)})")
+        terms.append(f"({dot_sql(qj, qj)} + {c2} - 2.0D * {dot_sql(qj, cvec)})")
     dist = F.expr("round(0.0D + " + " + ".join(terms) + ", 9)")
     scored = joined.select("query_id", "neighbor_id", dist.alias("adc_dist"))
     w = Window.partitionBy("query_id").orderBy(
@@ -1502,6 +1478,17 @@ def hard_negative_topk(
     )
 
 
+def _cosine_sql(center: list[float], center_nrm: float) -> str:
+    """Cosine of column ``v`` (norm ``nrm``) against a driver-side center
+    with its Spark-computed norm — the literal-center fold shared by the
+    k-center and MMR greedy rounds."""
+    vec = f"CAST({sql_double_array(center)} AS ARRAY<DOUBLE>)"
+    return (
+        f"({dot_sql('CAST(v AS ARRAY<DOUBLE>)', vec)}"
+        f" / (nrm * {sql_double(center_nrm)}))"
+    )
+
+
 def kcenter_coreset(
     vectors: DataFrame,
     k: int = 6,
@@ -1563,18 +1550,11 @@ def kcenter_coreset(
     # over the same fold dot product, so every distance — and the
     # greedy trajectory — is bit-identical (repr literals parse back to
     # the same IEEE doubles).
-    view = f"__kcenter_v_{next(_VIEW_IDS)}"
-    v.createOrReplaceTempView(view)
-    try:
+    with temp_view(v, "__kcenter_v") as view:
         for _ in range(k - 1):
             dist_sql = None
             for _cid, cv, cn, _d in chosen:
-                arr = "array(" + ", ".join(f"{float(x)!r}D" for x in cv) + ")"
-                d = (
-                    "(1 - aggregate(zip_with(CAST(v AS ARRAY<DOUBLE>),"
-                    f" CAST({arr} AS ARRAY<DOUBLE>), (x, y) -> x * y),"
-                    f" 0.0D, (acc, x) -> acc + x) / (nrm * {cn!r}D))"
-                )
+                d = f"(1 - {_cosine_sql(cv, cn)})"
                 dist_sql = d if dist_sql is None else f"least({dist_sql}, {d})"
             ids = ", ".join(str(c[0]) for c in chosen)
             far = spark.sql(
@@ -1589,8 +1569,6 @@ def kcenter_coreset(
             chosen.append(
                 (int(far.vid), list(far.v), float(far.nrm), float(far.d))
             )
-    finally:
-        spark.catalog.dropTempView(view)
     rows = [(i, cid, d) for i, (cid, _v, _n, d) in enumerate(chosen)]
     return spark.createDataFrame(rows, "rank long, vec_id long, sel_dist double")
 
@@ -1663,24 +1641,17 @@ def mmr_topk(
     # arrays, the same left-nested greatest chain over the same fold
     # dot product; max_sim feeds the score as a named column (same
     # value, same ops), so the MMR trajectory is bit-identical.
-    view = f"__mmr_cand_{next(_VIEW_IDS)}"
-    cand.createOrReplaceTempView(view)
-    try:
+    with temp_view(cand, "__mmr_cand") as view:
         for _ in range(k - 1):
             ms_sql = None
             for _cid, cv, cn, _r, _ms, _mm in chosen:
-                arr = "array(" + ", ".join(f"{float(x)!r}D" for x in cv) + ")"
-                s = (
-                    "(aggregate(zip_with(CAST(v AS ARRAY<DOUBLE>),"
-                    f" CAST({arr} AS ARRAY<DOUBLE>), (x, y) -> x * y),"
-                    f" 0.0D, (acc, x) -> acc + x) / (nrm * {cn!r}D))"
-                )
+                s = _cosine_sql(cv, cn)
                 ms_sql = s if ms_sql is None else f"greatest({ms_sql}, {s})"
             ids = ", ".join(str(c[0]) for c in chosen)
             pick = spark.sql(
                 "SELECT max(struct(sc, -vid AS neg, vid, v, nrm, rel, ms))"
                 " AS m FROM (SELECT vid, v, nrm, rel, ms,"
-                f" {lam!r}D * rel - {(1.0 - lam)!r}D * ms AS sc"
+                f" {sql_double(lam)} * rel - {sql_double(1.0 - lam)} * ms AS sc"
                 f" FROM (SELECT vid, v, nrm, rel, {ms_sql} AS ms"
                 f" FROM {view} WHERE vid NOT IN ({ids})))"
             ).collect()[0].m
@@ -1690,8 +1661,6 @@ def mmr_topk(
                 (int(pick.vid), list(pick.v), float(pick.nrm), float(pick.rel),
                  float(pick.ms), float(pick.sc))
             )
-    finally:
-        spark.catalog.dropTempView(view)
     rows = [
         (i + 1, cid, r, ms, mm)
         for i, (cid, _v, _n, r, ms, mm) in enumerate(chosen)
@@ -1737,27 +1706,22 @@ def knn_label_noise_frame(
     # ONE SQL statement instead of ~500 py4j Column constructions (the
     # plane-literal trees measured ~1.2 s of driver-side construction per
     # bench run) — same operators in the same order (cast/norm → sign
-    # bits → concat_ws bucket → in-bucket self-join → cosine → window
+    # bits → concat bucket → in-bucket self-join → cosine → window
     # top-k → disagreement agg), so plans and results are bit-identical.
-    from .dedupe import _sql_lazy
-
+    # A NULL vector's bucket key is NULL (see sign_bit_sql), so it never
+    # enters a real vector's neighborhood.
     bit_sql = ",\n         ".join(
-        "CASE WHEN "
-        + _dot_sql("v", "array(" + ", ".join(_sql_double(w) for w in plane) + ")")
-        + f" >= 0 THEN 1 ELSE 0 END AS bit{j}"
-        for j, plane in enumerate(planes)
+        f"{sign_bit_sql('v', plane)} AS bit{j}" for j, plane in enumerate(planes)
     )
-    bucket_sql = (
-        "concat_ws(''" + "".join(f", bit{j}" for j in range(n_planes)) + ")"
-    )
+    bucket_sql = "concat(" + ", ".join(f"bit{j}" for j in range(n_planes)) + ")"
     vcast = f"CAST({vec_col} AS ARRAY<DOUBLE>)"
     dis = "count(CASE WHEN label_b <> label_a THEN 1 END)"
-    return _sql_lazy(
+    return sql_lazy(
         vectors,
         lambda view: f"""
 WITH v AS (
   SELECT {id_col} AS vid, {label_col} AS label, {vcast} AS v,
-         sqrt({_dot_sql(vcast, vcast)}) AS nrm
+         sqrt({dot_sql(vcast, vcast)}) AS nrm
   FROM {view}
 ),
 sig AS (
@@ -1770,7 +1734,7 @@ buck AS (
 ),
 pairs AS (
   SELECT a.vid AS vid, a.label AS label_a, b.label AS label_b,
-         {_dot_sql('a.v', 'b.v')} / (a.nrm * b.nrm) AS cosine,
+         {dot_sql('a.v', 'b.v')} / (a.nrm * b.nrm) AS cosine,
          b.vid AS nb
   FROM buck a JOIN buck b USING (bucket)
   WHERE a.vid <> b.vid

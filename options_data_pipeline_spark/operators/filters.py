@@ -1,42 +1,18 @@
-"""Tick parsing, validity filters, and session-hours predicates
-(reference P1–P4, W3).
+"""Session-hours predicates (reference P3–P4).
 
-Reference: field-name-fallback parse + null drop
-(``ws_client.py:146-174``), market-hours inclusive-open/exclusive-close
-predicate (``utils/time_utils.py:140-164``), out-of-session drop
-(``time_utils.py:183-222``), late/future-tick drop (``tick_buffer.py:111-126``).
+Reference: market-hours inclusive-open/exclusive-close predicate
+(``utils/time_utils.py:140-164``), out-of-session drop
+(``time_utils.py:183-222``).
 
-All pure Column expressions so every predicate pushes down into the
-parquet scan (check: ``PushedFilters`` in ``.explain("formatted")``).
-The reference's exception-based control flow becomes one range filter.
+Pure Column expressions, so the predicate pushes down into the parquet
+scan (check: ``PushedFilters`` in ``.explain("formatted")``). The
+reference's exception-based control flow becomes one filter.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def parse_ticks_from_json(raw: DataFrame, json_col: str = "payload") -> DataFrame:
-    """P1 twin for props-style JSON payloads: ``from_json`` + coalesce over
-    alias field names (reference tolerates ``tk``/``instrument_token`` and
-    ``ltp``/``last_traded_price`` — ``ws_client.py:146-174``)."""
-    schema = (
-        "tk string, instrument_token string, ltp double, last_traded_price double,"
-        " exchange_timestamp string, ft string, feed_time string"
-    )
-    parsed = raw.withColumn("j", F.from_json(F.col(json_col), schema))
-    ts = F.coalesce(
-        F.to_timestamp(F.col("j.exchange_timestamp")),
-        F.to_timestamp(F.from_unixtime(F.col("j.ft").cast("double"))),
-        F.to_timestamp(F.from_unixtime(F.col("j.feed_time").cast("double"))),
-        F.current_timestamp(),  # processing-time fallback (🔒1 fallback branch)
-    )
-    return parsed.select(
-        F.coalesce("j.tk", "j.instrument_token").alias("token"),
-        F.coalesce("j.ltp", "j.last_traded_price").alias("price"),
-        ts.alias("ts"),
-    ).filter(F.col("price").isNotNull() & F.col("token").isNotNull() & (F.col("token") != ""))
 
 
 def market_hours_predicate(
@@ -52,8 +28,3 @@ def in_session(ticks: DataFrame, open_hm: str = "09:15", close_hm: str = "15:30"
     """P3+P4: one predicate replaces the reference's raise-and-drop."""
     return ticks.filter(market_hours_predicate(ts_col, open_hm, close_hm))
 
-
-def drop_late(ticks: DataFrame, watermark_ts, ts_col: str = "ts") -> DataFrame:
-    """W3 batch emulation: drop ticks older than the active-window start.
-    In streaming this is ``withWatermark`` (see streaming/ohlc_stream.py)."""
-    return ticks.filter(F.col(ts_col) >= F.lit(watermark_ts))

@@ -6,7 +6,7 @@ enrichment → dedup write → state snapshot — collapses into two Spark
 programs:
 
  - :func:`run_batch` — one declarative DataFrame chain over a day (or any
-   range) of stored ticks, ending in an idempotent partitioned write.
+   range) of stored ticks, ending in an idempotent append.
    This is the "DataFrame transforms + scheduled jobs" shape from
    BASELINE.json: a scheduler triggers it per session; the calendar gate
    is a job predicate, not dataflow.
@@ -16,7 +16,9 @@ programs:
 Scale: everything between the tick scan and the sink groups/windows by
 symbol — one shuffle into (symbol, window) grain, then symbol-partitioned
 window functions and the ATR grouped-map reuse that partitioning. The
-sink is (year, month)-partitioned so the dedup read prunes.
+batch sink is not partitioned: the append's dedup read prunes by a
+``window_start`` range filter over the batch's own bounds, which parquet
+row-group statistics turn into skipped reads.
 """
 
 from __future__ import annotations

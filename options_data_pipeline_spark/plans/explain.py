@@ -27,10 +27,6 @@ def physical_plan(df: DataFrame) -> str:
     return _explain(df, "formatted")
 
 
-def simple_plan(df: DataFrame) -> str:
-    return _explain(df, "simple")
-
-
 def count_exchanges(df: DataFrame) -> int:
     """Number of shuffle exchanges (excludes broadcast exchanges).
 

@@ -55,12 +55,7 @@ from .functions.similarity import (
     rp_lsh_near_dup_pairs,
     random_hyperplanes,
 )
-
-# monotonic suffix for driver-loop temp views — session-global names keyed
-# on id() can collide after GC (ADVICE r12 on the kmeans view)
-import itertools as _itertools
-
-_VIEW_IDS = _itertools.count()
+from .functions.loop_sql import sql_double_array, temp_view
 
 # ---------------------------------------------------------------------------
 # shared SQL fragments (DuckDB dialect)
@@ -1980,15 +1975,28 @@ def q_lineitem_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: the embedding as DOUBLE[], rebuilt through a CASE so a NULL row reaches
+#: list_dot_product as a clean NULL (DuckDB 1.0 raises "can not contain
+#: NULL values" on a NULL list read straight from parquet)
+_DD_VEC = "CASE WHEN embedding IS NOT NULL THEN embedding::DOUBLE[] END"
+
+
+def _dd_sign_bits(planes: list[list[float]]) -> str:
+    """DuckDB twin of loop_sql.sign_bit_sql over column ``v``: one
+    ``bit<j>`` per plane, NULL when the dot product is NULL; buckets
+    concatenate with the NULL-propagating ``||``."""
+    return ",\n         ".join(
+        "CAST(list_dot_product(v, ["
+        + ", ".join(repr(w) for w in plane)
+        + f"]) >= 0 AS INTEGER) AS bit{j}"
+        for j, plane in enumerate(planes)
+    )
+
+
 def _rp_lsh_oracle(threshold: float = 0.35, n_planes: int = 16, bands: int = 4) -> str:
     planes = random_hyperplanes(64, n_planes)
     rows_per_band = n_planes // bands
-    bit_exprs = ",\n         ".join(
-        "CASE WHEN list_dot_product(v, ["
-        + ", ".join(repr(w) for w in plane)
-        + f"]) >= 0 THEN 1 ELSE 0 END AS bit{j}"
-        for j, plane in enumerate(planes)
-    )
+    bit_exprs = _dd_sign_bits(planes)
     band_selects = []
     for b in range(bands):
         js = range(b * rows_per_band, (b + 1) * rows_per_band)
@@ -1996,8 +2004,8 @@ def _rp_lsh_oracle(threshold: float = 0.35, n_planes: int = 16, bands: int = 4) 
         band_selects.append(f"SELECT vid, v, nrm, {b} AS band, {concat} AS bucket FROM sig")
     banded = "\n  UNION ALL\n  ".join(band_selects)
     return f"""WITH v AS (
-  SELECT vec_id AS vid, embedding::DOUBLE[] AS v,
-         sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
+  SELECT vec_id AS vid, {_DD_VEC} AS v,
+         sqrt(list_dot_product({_DD_VEC}, {_DD_VEC})) AS nrm
   FROM embeddings
 ),
 sig AS (
@@ -8953,7 +8961,7 @@ def q_item_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = half.unionByName(
         half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    return pagerank(edges, iters=3, damping=0.85, broadcast_ranks=True)
+    return pagerank(edges, iters=3, damping=0.85)
 
 
 @register(
@@ -11546,9 +11554,7 @@ def q_pagerank_dangling(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("a.item").alias("src"), F.col("b.item").alias("dst"))
         .distinct()
     )
-    return pagerank(
-        edges, iters=3, redistribute=True, broadcast_ranks=True
-    )
+    return pagerank(edges, iters=3, redistribute=True)
 
 
 @register(
@@ -12092,18 +12098,15 @@ def q_embedding_top_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # trajectory is bit-identical. Driver floats round-trip exactly:
     # repr() emits the shortest decimal that parses back to the same
     # IEEE double, and Spark's literal parser is correctly rounded.
-    view = f"__top_pc_cov_{next(_VIEW_IDS)}"
-    cov.createOrReplaceTempView(view)
     v = [0.125] * 64
     rows: list = []
     nrm = None
-    try:
+    with temp_view(cov, "__top_pc_cov") as view:
         for _ in range(8):
-            arr = ", ".join(f"{x!r}D" for x in v)
             rows = spark.sql(
                 "WITH wt AS (SELECT di AS dim,"
-                " CAST(sum(CAST(round(c * element_at(array("
-                f"{arr}), dj + 1), 12) AS DECIMAL(32,12))) AS DOUBLE) AS w"
+                " CAST(sum(CAST(round(c * element_at("
+                f"{sql_double_array(v)}, dj + 1), 12) AS DECIMAL(32,12))) AS DOUBLE) AS w"
                 f" FROM {view} GROUP BY di),"
                 " nr AS (SELECT sqrt(CAST(sum(CAST(round(w * w, 12)"
                 " AS DECIMAL(32,12))) AS DOUBLE)) AS nrm FROM wt)"
@@ -12115,8 +12118,6 @@ def q_embedding_top_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
                 nv[r["dim"]] = r["v"]
                 nrm = r["nrm"]
             v = nv
-    finally:
-        spark.catalog.dropTempView(view)
     trace = cov.filter(F.col("di") == F.col("dj")).agg(
         F.sum(F.round(F.col("c"), 12).cast("decimal(32,12)"))
         .cast("double")
@@ -14234,16 +14235,11 @@ def q_hll_segment_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _knn_label_noise_oracle(n_planes: int = 6, k: int = 5) -> str:
     planes = random_hyperplanes(64, n_planes)
-    bit_exprs = ",\n         ".join(
-        "CASE WHEN list_dot_product(v, ["
-        + ", ".join(repr(w) for w in plane)
-        + f"]) >= 0 THEN 1 ELSE 0 END AS bit{j}"
-        for j, plane in enumerate(planes)
-    )
+    bit_exprs = _dd_sign_bits(planes)
     bucket = " || ".join(f"bit{j}::VARCHAR" for j in range(n_planes))
     return f"""WITH v AS (
-  SELECT vec_id AS vid, label, embedding::DOUBLE[] AS v,
-         sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
+  SELECT vec_id AS vid, label, {_DD_VEC} AS v,
+         sqrt(list_dot_product({_DD_VEC}, {_DD_VEC})) AS nrm
   FROM embeddings
 ),
 sig AS (

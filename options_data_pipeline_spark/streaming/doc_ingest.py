@@ -83,8 +83,9 @@ def dedup_ingest_batch(
     """Process one micro-batch of documents; returns docs appended.
 
     Steps (each deterministic, so failure-replay converges):
-      1. id-grain replay guard: drop doc_ids already in the corpus
-         (anti-join, pruned read — a replayed batch becomes empty here).
+      1. id-grain replay guard: drop doc_ids already in the corpus or in
+         the dropped-id ledger (anti-joins, pruned reads — a replayed
+         batch becomes empty here).
       2. ingest-time DECONTAMINATION (when ``eval_docs`` is given): drop
          batch docs sharing any ``decontaminate_n``-gram with the eval
          suite — leakage is cheapest to stop at the door, before the doc
@@ -96,21 +97,31 @@ def dedup_ingest_batch(
       5. within-batch near-dup: connected components over the survivors'
          own candidate pairs, keep the min doc_id per component
          (`dedup_canonical` semantics).
-      6. append kept docs to the corpus and exactly their signature rows
-         to the signature table (stage-and-promote appends).
+      6. append the step-5 drops to the dropped-id ledger, then kept docs'
+         signature rows to the signature table, then the docs to the
+         corpus (stage-and-promote appends).
+
+    The ledger (``<sig_path>_dropped``) is what makes step 5 replayable:
+    a doc dropped only through a within-batch chain (A~B, B~C, A≁C keeps
+    A, drops B and C) has no stored signature it collides with on
+    replay — C matches nothing in the index — so without the ledger a
+    replay would append it.
     """
     spark = batch.sparkSession
+    ledger_path = f"{sig_path.rstrip('/')}_dropped"
+    guards = [p for p in (corpus_path, ledger_path) if sink_has_data(p)]
     fresh = batch
-    if sink_has_data(corpus_path):
-        # replay guard: the anti-join read is PRUNED to the batch's own
+    if guards:
+        # replay guard: each anti-join read is PRUNED to the batch's own
         # doc_id range — replays carry the same id window, so row-group
         # min/max stats skip the rest of the corpus (a full-corpus id
         # scan per batch would grow linearly with corpus age)
         b = batch.agg(F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")).collect()[0]
-        corpus_ids = spark.read.parquet(corpus_path).select("doc_id")
-        if b.lo is not None:
-            corpus_ids = corpus_ids.filter(F.col("doc_id").between(b.lo, b.hi))
-        fresh = batch.join(corpus_ids, "doc_id", "left_anti")
+        for path in guards:
+            seen = spark.read.parquet(path).select("doc_id")
+            if b.lo is not None:
+                seen = seen.filter(F.col("doc_id").between(b.lo, b.hi))
+            fresh = fresh.join(seen, "doc_id", "left_anti")
     if eval_docs is not None or eval_grams is not None:
         from ..functions.text import decontamination_hits
 
@@ -169,6 +180,7 @@ def dedup_ingest_batch(
         # the contraction loop costs several checkpointed jobs even on an
         # empty graph (measured in the vector soak).
         pairs = pairs.cache()
+        drop = None
         if pairs.take(1):
             comp = connected_components_star(pairs)
             drop = comp.filter(F.col("doc_id") != F.col("label")).select("doc_id")
@@ -177,10 +189,13 @@ def dedup_ingest_batch(
             kept_sigs = survivors
         pairs.unpersist()
         kept_docs = fresh.join(kept_sigs.select("doc_id"), "doc_id")
-        # ORDER MATTERS: signatures first. A crash between the two appends
-        # then leaves sigs-without-docs, and the replay (docs still absent
-        # from the corpus ⇒ still "fresh") deterministically recomputes
-        # the same kept set — each survivor's own stored signature is
+        # ORDER MATTERS: ledger, then signatures, then docs. A crash after
+        # the ledger append leaves the replay to re-derive the same kept
+        # set from the remaining docs (kept docs are one per component,
+        # so they share no candidate pair). A crash between the signature
+        # and doc appends leaves sigs-without-docs, and the replay (docs
+        # still absent from the corpus ⇒ still "fresh") deterministically
+        # recomputes the same kept set — each survivor's own stored signature is
         # excluded as a self-pair, so nothing is falsely dropped — and
         # the doc append completes. The reverse order is a PERMANENT
         # index gap: docs-without-sigs are dropped by the replay guard
@@ -191,6 +206,10 @@ def dedup_ingest_batch(
         # later batch re-lists them — file count is a growing per-batch
         # tax (measured in the vector soak; deployments size to ~128 MB
         # files)
+        if drop is not None:
+            idempotent_append_batch(
+                drop.coalesce(1), ledger_path, id_col="doc_id", prune_col="doc_id"
+            )
         idempotent_append_batch(
             kept_sigs.coalesce(1), sig_path, id_col="doc_id", prune_col="doc_id"
         )
@@ -215,8 +234,9 @@ def run_doc_ingest(
 ):
     """File-source stream over parquet document drops → foreachBatch
     incremental dedup ingest. Returns the started query; corpus lands in
-    ``work_dir/corpus``, signatures in ``work_dir/signatures``, stream
-    state in ``work_dir/_checkpoint``. The paced trigger bound follows the
+    ``work_dir/corpus``, signatures in ``work_dir/signatures``, the
+    dropped-id ledger in ``work_dir/signatures_dropped``, stream state in
+    ``work_dir/_checkpoint``. The paced trigger bound follows the
     densify lesson (BASELINE §7): bounded micro-batches keep per-trigger
     latency inside the write-timeout NFR.
 

@@ -23,8 +23,6 @@ this module hermetic.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -135,31 +133,3 @@ def dedup_vec_ingest_batch(
     finally:
         fresh.unpersist()
 
-
-def run_vec_ingest(
-    spark,
-    source_dir: str,
-    work_dir: str,
-    threshold: float = 0.99,
-    max_files_per_trigger: int = 8,
-    schema: str = "vec_id long, embedding array<float>, label int",
-):
-    """File-source stream over parquet embedding drops → foreachBatch
-    incremental semantic dedup. Corpus/index lands in
-    ``work_dir/corpus`` partitioned by cell."""
-    corpus = os.path.join(work_dir, "corpus")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(source_dir)
-    )
-
-    def _process(bdf: DataFrame, _bid: int) -> None:
-        dedup_vec_ingest_batch(bdf, corpus, threshold)
-
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", os.path.join(work_dir, "_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )

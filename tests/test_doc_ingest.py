@@ -72,6 +72,30 @@ def test_replay_is_idempotent(spark, tmp_path):
     assert sig_rows == 2  # signature table didn't double either
 
 
+def test_replay_after_within_batch_chain_appends_nothing(spark, tmp_path):
+    """A~B and B~C but A≁C: the within-batch components keep A and drop B
+    and C. On replay B still collides with A's stored signature, but C
+    collides with nothing stored — only the dropped-id ledger keeps the
+    replay from appending it."""
+    words = [f"lima11x{i}" for i in range(56)]
+    a, b, c = (" ".join(words[k : k + 40]) for k in (0, 8, 16))
+    # the fixture is a chain: A-B is a near-dup pair, A-C is not
+    assert dedup_ingest_batch(
+        docs(spark, [(1, a), (2, b)]), str(tmp_path / "ab"), str(tmp_path / "ab_sigs")
+    ) == 1
+    assert dedup_ingest_batch(
+        docs(spark, [(1, a), (3, c)]), str(tmp_path / "ac"), str(tmp_path / "ac_sigs")
+    ) == 2
+
+    corpus = str(tmp_path / "corpus")
+    sigs = str(tmp_path / "sigs")
+    batch = docs(spark, [(1, a), (2, b), (3, c)])
+    assert dedup_ingest_batch(batch, corpus, sigs) == 1
+    assert dedup_ingest_batch(batch, corpus, sigs) == 0  # replay
+    assert corpus_ids(spark, corpus) == {1}
+    assert corpus_ids(spark, sigs) == {1}
+
+
 def test_streaming_ingest_matches_sequential_batches(spark, tmp_path):
     """Drive the same three document drops through the file-source stream
     and through direct sequential dedup_ingest_batch calls — identical
@@ -119,7 +143,9 @@ def test_crash_between_appends_converges_on_replay(spark, tmp_path, monkeypatch)
     append (the only non-atomic window): the replay must deterministically
     re-keep the same docs — its own stored signatures are self-pairs, not
     drop reasons — and complete the corpus append. Also pins the append
-    ORDER: sigs first (the reverse order leaves a permanent index gap)."""
+    ORDER: the dropped-id ledger, then sigs, then docs (docs before sigs
+    leaves a permanent index gap; sigs before the ledger lets a replay
+    re-keep a doc dropped through a within-batch chain)."""
     import options_data_pipeline_spark.streaming.doc_ingest as di
 
     corpus = str(tmp_path / "corpus")
@@ -141,7 +167,9 @@ def test_crash_between_appends_converges_on_replay(spark, tmp_path, monkeypatch)
         di.dedup_ingest_batch(batch, corpus, sigs)
     except RuntimeError:
         pass
-    assert calls == [sigs]  # pins the order: signatures append FIRST
+    ledger = sigs + "_dropped"
+    assert calls == [ledger, sigs]  # pins the order: ledger, then signatures
+    assert corpus_ids(spark, ledger) == {2}  # the cluster's non-rep
     sig_ids = {r.doc_id for r in spark.read.parquet(sigs).select("doc_id").collect()}
     assert sig_ids == {1, 3}  # kept set landed in the index
     assert corpus_ids(spark, corpus) == set()  # corpus append never ran

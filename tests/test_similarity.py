@@ -501,3 +501,75 @@ def test_ivf_cell_balance_shares_sum_to_one(spark):
     assert abs(sum(r.share for r in rows) - 1.0) < 1e-12
     n = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").count()
     assert sum(r.n_vecs for r in rows) == n  # every vector lands in a cell
+
+
+def _null_vector_fixture(tmp_path, with_null_elements):
+    """Three real vectors whose every sign bit is 0 (the all-zeros bucket
+    a NULL dot product used to fall into), two NULL embeddings and,
+    optionally, one vector with a NULL element. Written as an
+    ``embeddings`` table so registry queries and oracles can read it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from options_data_pipeline_spark.functions.similarity import random_hyperplanes
+
+    planes = random_hyperplanes(64, 16)
+    base = [-sum(p[d] for p in planes) for d in range(64)]
+    real = [[x + 0.05 * i * (d % 3 - 1) for d, x in enumerate(base)] for i in range(3)]
+    for v in real:  # fixture sanity: all-negative dots on every plane
+        assert all(sum(a * b for a, b in zip(v, p)) < 0 for p in planes)
+    rows = [(i + 1, v, 0) for i, v in enumerate(real)]
+    rows += [(10, None, 1), (11, None, 1)]
+    if with_null_elements:
+        rows.append((20, [None] + base[1:], 1))
+    table = pa.table(
+        {
+            "vec_id": pa.array([r[0] for r in rows], pa.int64()),
+            "embedding": pa.array([r[1] for r in rows], pa.list_(pa.float32())),
+            "label": pa.array([r[2] for r in rows], pa.int32()),
+        }
+    )
+    pq.write_table(table, tmp_path / "embeddings.parquet")
+    return str(tmp_path)
+
+
+@pytest.mark.parametrize("with_null_elements", [False, True])
+def test_null_vectors_never_share_a_real_lsh_bucket(spark, tmp_path, with_null_elements):
+    """A NULL embedding (or one with a NULL element) has a NULL dot
+    product with every plane. Its sign bits are NULL, not 0, so it never
+    pairs with a real vector in rp-LSH and never enters a real vector's
+    top-k in the label-noise kNN."""
+    from options_data_pipeline_spark.functions.similarity import (
+        knn_label_noise_frame,
+        rp_lsh_near_dup_pairs,
+    )
+
+    sf = _null_vector_fixture(tmp_path, with_null_elements)
+    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
+    pairs = {
+        (r.id_a, r.id_b)
+        for r in rp_lsh_near_dup_pairs(emb, 0.35, n_planes=16, bands=4).collect()
+    }
+    assert pairs == {(1, 2), (1, 3), (2, 3)}
+    noise = {r.vec_id: r for r in knn_label_noise_frame(emb, k=5, n_planes=6).collect()}
+    assert set(noise) == {1, 2, 3}
+    assert all(r.n_neighbors == 2 and r.n_disagree == 0 for r in noise.values())
+
+
+def test_null_vector_lsh_engine_matches_oracle(spark, tmp_path):
+    """rp_lsh_near_dup and knn_label_noise agree with their DuckDB twins
+    on NULL embeddings. (DuckDB's list_dot_product rejects NULL elements,
+    so the oracle fixture carries whole-NULL vectors only.)"""
+    import duckdb
+
+    from options_data_pipeline_spark import registry
+
+    sf = _null_vector_fixture(tmp_path, with_null_elements=False)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{sf}/embeddings.parquet'")
+    for name in ("rp_lsh_near_dup", "knn_label_noise"):
+        got = sorted(tuple(r) for r in registry.queries()[name](spark, sf).collect())
+        want = sorted(con.execute(registry.oracle_sql()[name]).fetchall())
+        assert len(got) == len(want) > 0
+        for g, w in zip(got, want):
+            assert list(g) == [pytest.approx(x) if isinstance(x, float) else x for x in w]
