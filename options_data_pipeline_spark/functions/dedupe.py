@@ -20,12 +20,12 @@ All built-in Column expressions — no Python UDFs.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..sources import store
 from .loop_sql import sql_lazy
 from .text import fingerprint_col
 
@@ -871,74 +871,10 @@ def band_bucket_cols() -> list:
     return cols
 
 
-def _lsh_current(path: str) -> str | None:
-    """Resolve the published index generation under ``path`` via the
-    shared ``_CURRENT`` pointer (cdc_stream's helper — the one atomic
-    publish primitive every store in this repo uses).
-
-    A pre-round-8 FLAT layout (parquet files + _SUCCESS directly at
-    ``path``, no pointer) is migrated in place: its data files move
-    into a ``v_0`` generation dir and the pointer is published — no
-    silent full rebuild, no stale root files left un-GC'd.
-
-    Writer contract (same as the CDC/bitmap/drift stores): build,
-    append, and compaction are SINGLE-WRITER maintenance operations —
-    ``_publish_version``'s GC removes superseded ``v_*`` dirs, so two
-    concurrent maintainers of one index path could GC each other's
-    in-flight generation. Readers are always safe (the pointer swap is
-    atomic); writers must be serialized by the caller."""
-    from ..streaming.cdc_stream import _current_version_dir, _publish_version
-
-    cur = _current_version_dir(path)
-    if cur is None and os.path.exists(os.path.join(path, "_SUCCESS")):
-        # Crash-atomic migration: the pointer swap is the SOLE commit
-        # point. Files are HARD-LINKED (not moved) into a staging dir
-        # with a DETERMINISTIC name, so a crash before publish leaves
-        # the flat layout fully intact and the retry discards the
-        # partial staging dir instead of minting a fresh generation
-        # (an os.rename-per-file loop would split rows between the
-        # orphaned staging dir and the root, and the retry's new
-        # generation would silently drop the orphaned half).
-        vdir = os.path.join(path, "v_0-migrate")
-        if os.path.isdir(vdir):
-            shutil.rmtree(vdir)  # partial staging from a crashed attempt
-        os.makedirs(vdir)
-        for name in os.listdir(path):
-            if name.endswith(".parquet") or name == "_SUCCESS":
-                os.link(os.path.join(path, name), os.path.join(vdir, name))
-        _publish_version(path, vdir)
-        cur = _current_version_dir(path)
-    if cur is not None:
-        # Post-commit cleanup (idempotent, crash-safe to repeat): drop
-        # flat-layout root files already committed into the current
-        # generation — same inode, because the migration hard-linked
-        # them. Root files that are NOT in the generation are left
-        # untouched (they belong to someone else, never this migration).
-        for name in os.listdir(path):
-            if not (name.endswith(".parquet") or name == "_SUCCESS"):
-                continue
-            p, q = os.path.join(path, name), os.path.join(cur, name)
-            if os.path.isfile(p) and os.path.exists(q) and os.path.samefile(p, q):
-                os.remove(p)
-    return cur
-
-
-def _lsh_next_version_dir(path: str) -> str:
-    """Next generation dir — cdc_stream's shared convention."""
-    from ..streaming.cdc_stream import _next_version_dir
-
-    return _next_version_dir(path)
-
-
 def read_lsh_index(spark, path: str) -> DataFrame:
     """Read the published generation of a stored LSH index. Raises
     FileNotFoundError if nothing has been published at ``path``."""
-    cur = _lsh_current(path)
-    if cur is None:
-        raise FileNotFoundError(
-            f"read_lsh_index: no published index at {path!r} — build_lsh_index first"
-        )
-    return spark.read.parquet(cur)
+    return spark.read.parquet(store.require(path, "read_lsh_index"))
 
 
 def build_lsh_index(
@@ -963,29 +899,27 @@ def build_lsh_index(
     against already-written ids before appending) from exact-id grain to
     near-dup grain.
 
-    Publishes through the versioned-dir + atomic ``_CURRENT`` pointer
-    scheme shared with cdc_stream/bitmap_stream/drift_stream: the
-    generation is written beside any live one and becomes visible only
-    at the single ``os.replace`` of the pointer file, so a crash at ANY
-    point leaves either no index (first build) or the previous
-    generation fully readable — readers never see half-state.
+    Publishes through the generation commit every store shares
+    (``sources/store.py``): the generation is written beside any live
+    one and becomes visible only at the atomic pointer commit, so a
+    crash at ANY point leaves either no index (first build) or the
+    previous generation fully readable — readers never see half-state.
+    A directory holding data but no pointer raises (``overwrite=True``
+    rebuilds it as a generation).
 
-    SINGLE-WRITER: build/append/compact on one index path must be
-    serialized by the caller — ``_publish_version``'s GC removes
-    superseded ``v_*`` dirs, so two concurrent maintainers could GC
-    each other's in-flight generation. Readers are always safe."""
-    from ..streaming.cdc_stream import _publish_version
+    SINGLE-WRITER: append/compact on one index path must be serialized
+    by the caller — the post-publish cleanup removes superseded
+    generations, so two concurrent maintainers could delete each
+    other's in-flight one. Readers are always safe."""
 
-    spark = docs.sparkSession
-    if _lsh_current(path) is None or overwrite:
+    def write(vdir: str) -> None:
         wide = minhash_signatures_wide(docs, text_col, k)
-        idx = wide.select("doc_id", *[f"mh{j}" for j in range(len(MINHASH_PARAMS))],
-                          *band_bucket_cols())
-        os.makedirs(path, exist_ok=True)
-        vdir = _lsh_next_version_dir(path)
-        idx.write.mode("overwrite").parquet(vdir)
-        _publish_version(path, vdir)
-    return read_lsh_index(spark, path)
+        wide.select(
+            "doc_id", *[f"mh{j}" for j in range(len(MINHASH_PARAMS))],
+            *band_bucket_cols(),
+        ).write.mode("overwrite").parquet(vdir)
+
+    return docs.sparkSession.read.parquet(store.build_once(path, write, overwrite))
 
 
 def incremental_lsh_candidates(
@@ -1054,17 +988,13 @@ def append_lsh_index(
 
     Appends land INSIDE the published generation dir (Spark's job-commit
     protocol makes the parquet append itself all-or-nothing); the
-    ``_CURRENT`` pointer is untouched, so a crashed append can never
-    unpublish the index.
+    pointer is untouched, so a crashed append can never unpublish the
+    index.
 
     SINGLE-WRITER: serialize with any concurrent build/compact on the
     same path (see :func:`build_lsh_index`) — a concurrent compaction's
     publish-and-GC could drop files this append just wrote."""
-    cur = _lsh_current(path)
-    if cur is None:
-        raise FileNotFoundError(
-            f"append_lsh_index: no index at {path!r} — build_lsh_index first"
-        )
+    cur = store.require(path, "append_lsh_index")
     wide = minhash_signatures_wide(batch, text_col, k)
     idx = wide.select(
         "doc_id",
@@ -1096,9 +1026,8 @@ def compact_lsh_index(
     4. merge small files: rewrite at ``ceil(n / rows_per_file)`` files,
        hash-partitioned and sorted by doc_id (deterministic bytes).
 
-    Publish is the versioned-dir + atomic ``_CURRENT`` pointer swap
-    shared with cdc_stream (``_publish_version``): the compacted
-    generation is written as a NEW ``v_<n>`` dir beside the live one and
+    Publish is the shared generation commit (``sources/store.py``): the
+    compacted generation is written as a NEW dir beside the live one and
     becomes visible at a single ``os.replace`` of the pointer — a crash
     anywhere before the swap leaves the live index untouched and
     readable (no rename window where no index exists at ``path``);
@@ -1117,11 +1046,7 @@ def compact_lsh_index(
     """
     import math
 
-    from ..streaming.cdc_stream import _publish_version
-
-    cur = _lsh_current(path)
-    if cur is None:
-        raise FileNotFoundError(f"compact_lsh_index: no index at {path!r}")
+    cur = store.require(path, "compact_lsh_index")
     files_before = sum(
         1 for f in os.listdir(cur) if f.endswith(".parquet")
     )
@@ -1138,14 +1063,14 @@ def compact_lsh_index(
         live = live.filter(retention_filter)
     rows_after = live.count()
     n_files = max(1, math.ceil(rows_after / rows_per_file))
-    vdir = _lsh_next_version_dir(path)
+    vdir = store.next_generation(path)
     (
         live.repartition(n_files, "doc_id")
         .sortWithinPartitions("doc_id")
         .write.mode("overwrite")
         .parquet(vdir)
     )
-    _publish_version(path, vdir)
+    store.publish(path, vdir)
     files_after = sum(
         1 for f in os.listdir(vdir) if f.endswith(".parquet")
     )
@@ -1510,28 +1435,19 @@ def build_cluster_map(
     for every doc in the candidate graph (label = min doc_id of the
     component, `connected_components` contract; singletons absent =
     self-labeled), persisted hash-partitioned by ``part =
-    pmod(hash(doc_id), 64)`` under the versioned-dir + atomic
-    ``_CURRENT`` pointer scheme. Partitioning by DOC hash — not label —
+    pmod(hash(doc_id), 64)`` under the shared generation commit
+    (``sources/store.py``). Partitioning by DOC hash — not label —
     is what makes incremental maintenance cheap: a relabeled row keeps
     its doc_id, hence its partition, so :func:`merge_cluster_map`
     rewrites only partitions that hold touched rows and hard-links the
     rest. At 100 TB the map is one skinny row per clustered doc; a
     daily merge rewrites the partitions its batch touches, never the
     corpus-wide map. SINGLE-WRITER, like every pointer store."""
-    from ..streaming.cdc_stream import (
-        _current_version_dir,
-        _next_version_dir,
-        _publish_version,
-    )
 
-    spark = pairs.sparkSession
-    cur = _current_version_dir(path)
-    if cur is None:
+    def write(vdir: str) -> None:
         labels = connected_components_star(
             pairs, checkpoint_dir=checkpoint_dir
         ).withColumn("part", F.pmod(F.hash("doc_id"), F.lit(_CLUSTER_PARTS)))
-        os.makedirs(path, exist_ok=True)
-        vdir = _next_version_dir(path)
         if labels.isEmpty():
             # a pairless corpus is a VALID map (every doc a singleton):
             # partitionBy on zero rows writes no schema-bearing file and
@@ -1541,22 +1457,15 @@ def build_cluster_map(
         else:
             labels.write.mode("overwrite").partitionBy("part").parquet(vdir)
         _write_label_index(labels, vdir)
-        _publish_version(path, vdir)
-        cur = _current_version_dir(path)
-    return spark.read.parquet(cur).select("doc_id", "label")
+
+    cur = store.build_once(path, write)
+    return pairs.sparkSession.read.parquet(cur).select("doc_id", "label")
 
 
 def read_cluster_map(spark, path: str) -> DataFrame:
     """(doc_id, label) at the published pointer. Raises
     FileNotFoundError when nothing has been published."""
-    from ..streaming.cdc_stream import _current_version_dir
-
-    cur = _current_version_dir(path)
-    if cur is None:
-        raise FileNotFoundError(
-            f"read_cluster_map: no published map at {path!r} — "
-            f"build_cluster_map first"
-        )
+    cur = store.require(path, "read_cluster_map", "map")
     return spark.read.parquet(cur).select("doc_id", "label")
 
 
@@ -1590,17 +1499,13 @@ def merge_cluster_map(new_pairs: DataFrame, path: str) -> dict:
     — the *_scanned counts are the IO-bound evidence that the merge read
     ≪ 64 map partitions (label→part sidecar index + endpoint-hash
     pruning; see _write_label_index)."""
-    from ..streaming.cdc_stream import (
-        _current_version_dir,
-        _next_version_dir,
-        _publish_version,
-    )
-
     spark = new_pairs.sparkSession
-    cur = _current_version_dir(path)
-    if cur is None:
+    cur = store.require(path, "merge_cluster_map", "map")
+    idx_dir = os.path.join(cur, _LABEL_INDEX)
+    if not os.path.isdir(idx_dir):
         raise FileNotFoundError(
-            f"merge_cluster_map: no map at {path!r} — build_cluster_map first"
+            f"merge_cluster_map: the map at {path!r} has no label index "
+            f"({_LABEL_INDEX}); rebuild it into a fresh path with build_cluster_map"
         )
     stored = spark.read.parquet(cur)  # doc_id, label, part
     # The endpoint/label partition pruning below is pmod(F.hash(...), 64)
@@ -1689,32 +1594,25 @@ def merge_cluster_map(new_pairs: DataFrame, path: str) -> dict:
     # label→part pruning: the sidecar index says which doc-hash partitions
     # can hold a changed label, so the relabel join reads ≪ 64 partitions
     # for a small batch instead of full-scanning the map (see
-    # _write_label_index). Legacy stores without the sidecar fall back to
-    # the full scan once and get the index written on publish.
-    idx_dir = os.path.join(cur, _LABEL_INDEX)
-    has_index = os.path.isdir(idx_dir)
-    if has_index:
-        lparts = sorted(
-            int(r[0])
-            for r in upd.select(
-                F.pmod(F.hash("label"), F.lit(_CLUSTER_PARTS)).alias("lp")
-            )
-            .distinct()
-            .collect()
+    # _write_label_index).
+    lparts = sorted(
+        int(r[0])
+        for r in upd.select(
+            F.pmod(F.hash("label"), F.lit(_CLUSTER_PARTS)).alias("lp")
         )
-        cand_parts = sorted(
-            int(r[0])
-            for r in spark.read.parquet(idx_dir)
-            .filter(F.col("lpart").isin(lparts))
-            .join(F.broadcast(upd.select("label")), "label", "left_semi")
-            .select("part")
-            .distinct()
-            .collect()
-        )
-        relabel_src = stored.filter(F.col("part").isin(cand_parts))
-    else:
-        cand_parts = list(range(_CLUSTER_PARTS))
-        relabel_src = stored
+        .distinct()
+        .collect()
+    )
+    cand_parts = sorted(
+        int(r[0])
+        for r in spark.read.parquet(idx_dir)
+        .filter(F.col("lpart").isin(lparts))
+        .join(F.broadcast(upd.select("label")), "label", "left_semi")
+        .select("part")
+        .distinct()
+        .collect()
+    )
+    relabel_src = stored.filter(F.col("part").isin(cand_parts))
     changed = relabel_src.join(F.broadcast(upd), "label").select(
         "doc_id", F.col("label_new").alias("label"), "part"
     )
@@ -1749,11 +1647,11 @@ def merge_cluster_map(new_pairs: DataFrame, path: str) -> dict:
             "parts_linked": _CLUSTER_PARTS,
             "relabel_parts_scanned": len(cand_parts),
             "known_parts_scanned": len(eparts),
-            "index": "pruned" if has_index else "noop",
+            "index": "pruned",
             "version": os.path.basename(cur),
         }
     aff = sorted(int(r["part"]) for r in touched.select("part").distinct().collect())
-    vdir = _next_version_dir(path)
+    vdir = store.next_generation(path)
     rewrite = (
         stored.filter(F.col("part").isin(aff))
         .join(touched.select("doc_id"), "doc_id", "left_anti")
@@ -1761,19 +1659,9 @@ def merge_cluster_map(new_pairs: DataFrame, path: str) -> dict:
         .filter(F.col("part").isin(aff))
     )
     rewrite.write.mode("overwrite").partitionBy("part").parquet(vdir)
-    linked = 0
-    for d in os.listdir(cur):
-        if not d.startswith("part="):
-            continue
-        pid = int(d.split("=", 1)[1])
-        if pid in aff:
-            continue
-        src = os.path.join(cur, d)
-        dst = os.path.join(vdir, d)
-        os.makedirs(dst, exist_ok=True)
-        for name in os.listdir(src):
-            os.link(os.path.join(src, name), os.path.join(dst, name))
-        linked += 1
+    linked = store.link_forward(
+        cur, vdir, lambda d: store.partition_value(d, "part") not in (None, *aff)
+    )
     # --- label-index maintenance (same O(batch) + hard-link discipline as
     # the map itself). Changed labels die wholesale (every row carrying one
     # was relabeled above), touched rows contribute the complete new entry
@@ -1786,52 +1674,40 @@ def merge_cluster_map(new_pairs: DataFrame, path: str) -> dict:
         .withColumn("lpart", F.pmod(F.hash("label"), F.lit(_CLUSTER_PARTS)))
         .localCheckpoint(eager=True)
     )
-    idx_dst = os.path.join(vdir, _LABEL_INDEX)
-    if has_index:
-        aff_lp = sorted(
-            {
-                int(r[0])
-                for r in dead.select(
-                    F.pmod(F.hash("label"), F.lit(_CLUSTER_PARTS))
-                )
-                .distinct()
-                .collect()
-            }
-            | {int(r[0]) for r in add.select("lpart").distinct().collect()}
-        )
-        new_idx = (
-            spark.read.parquet(idx_dir)
-            .filter(F.col("lpart").isin(aff_lp))
-            .join(F.broadcast(dead), "label", "left_anti")
-            .unionByName(add)
+    aff_lp = sorted(
+        {
+            int(r[0])
+            for r in dead.select(F.pmod(F.hash("label"), F.lit(_CLUSTER_PARTS)))
             .distinct()
-        )
-        new_idx.write.mode("overwrite").partitionBy("lpart").parquet(idx_dst)
-        for d in os.listdir(idx_dir):
-            if not d.startswith("lpart="):
-                continue  # footer-only empty-index file: zero rows, skip
-            lp = int(d.split("=", 1)[1])
-            if lp in aff_lp:
-                continue
-            src = os.path.join(idx_dir, d)
-            dst = os.path.join(idx_dst, d)
-            os.makedirs(dst, exist_ok=True)
-            for name in os.listdir(src):
-                os.link(os.path.join(src, name), os.path.join(dst, name))
-    else:
-        # one-time legacy migration: exact rebuild from the merged map
-        merged = stored.join(
-            touched.select("doc_id"), "doc_id", "left_anti"
-        ).unionByName(touched)
-        _write_label_index(merged, vdir)
-    _publish_version(path, vdir)
+            .collect()
+        }
+        | {int(r[0]) for r in add.select("lpart").distinct().collect()}
+    )
+    idx_dst = os.path.join(vdir, _LABEL_INDEX)
+    (
+        spark.read.parquet(idx_dir)
+        .filter(F.col("lpart").isin(aff_lp))
+        .join(F.broadcast(dead), "label", "left_anti")
+        .unionByName(add)
+        .distinct()
+        .write.mode("overwrite")
+        .partitionBy("lpart")
+        .parquet(idx_dst)
+    )
+    # a footer-only empty-index file has no lpart dir: zero rows, skipped
+    store.link_forward(
+        idx_dir,
+        idx_dst,
+        lambda d: store.partition_value(d, "lpart") not in (None, *aff_lp),
+    )
+    store.publish(path, vdir)
     return {
         "relabeled": n_relabel,
         "new_docs": n_new,
         "parts_rewritten": aff,
-        "parts_linked": linked,
+        "parts_linked": len(linked),
         "relabel_parts_scanned": len(cand_parts),
         "known_parts_scanned": len(eparts),
-        "index": "pruned" if has_index else "rebuilt",
+        "index": "pruned",
         "version": os.path.basename(vdir),
     }

@@ -33,6 +33,7 @@ import io
 import math
 import struct
 import wave
+import zlib
 from collections.abc import Iterator
 
 import numpy as _np
@@ -168,8 +169,6 @@ def _decode_png(payload: bytes) -> list[float]:
     ignored for the luminance features), no interlacing. Adam7/16-bit/
     palette stay NotImplementedError — the majority of real-corpus PNGs
     are 8-bit (A)RGB non-interlaced."""
-    import zlib
-
     if payload[:8] != PNG_SIG:
         raise NotImplementedError("not a PNG signature")
     pos = 8
@@ -231,8 +230,6 @@ def make_png(width: int, height: int, pixel_fn, filter_type: int = 4) -> bytes:
     the given scanline filter to every row — fixture builder that lets the
     tests exercise each unfilter path (0=None, 1=Sub, 2=Up, 3=Average,
     4=Paeth). ``pixel_fn(x, y) -> (r, g, b)`` with y=0 at the top."""
-    import zlib
-
     def chunk(tag: bytes, data: bytes) -> bytes:
         return (
             struct.pack(">I", len(data))
@@ -532,23 +529,32 @@ DECODERS = {
 }
 
 
+# What a truncated or corrupt payload raises inside the stdlib codecs:
+# zlib inflate, struct unpack, the wave chunk walk (a seek past the end
+# is a bare RuntimeError) and the hand-rolled PNG/BMP/JPEG/MP3 parsers.
+# NotImplementedError, the unsupported-variant signal, is a RuntimeError.
+_UNDECODABLE = (
+    RuntimeError, ValueError, EOFError, LookupError, struct.error, zlib.error, wave.Error
+)
+
+
 def extract_features(media: DataFrame, decoder: str = "fake") -> DataFrame:
     """mapInPandas feature extraction: payload → fixed-width feature vector
     + cheap integrity stats. Batches stream through Arrow; the payload
     column is dropped inside the iterator (first row of output never
     carries bytes). ``decoder="auto"`` dispatches per row on the ``kind``
     column and degrades gracefully on mixed corpora: a row whose kind has
-    no available codec gets ``feature = NULL`` (integrity stats still
-    emitted) instead of failing the whole job — the hard
-    ``NotImplementedError`` is reserved for explicitly named decoders,
-    where the caller asserted the corpus is decodable."""
+    no available codec, or whose payload is truncated or corrupt, gets
+    ``feature = NULL`` (integrity stats still emitted) instead of
+    failing the whole job — the hard failure is reserved for explicitly
+    named decoders, where the caller asserted the corpus is decodable."""
     if decoder != "auto":
         DECODERS[decoder]  # fail fast on unknown names, on the driver
 
     def auto_decode(kind: str, payload: bytes) -> list[float] | None:
         try:
             return DECODERS.get(kind, _unavailable)(payload)
-        except NotImplementedError:
+        except _UNDECODABLE:
             return None
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

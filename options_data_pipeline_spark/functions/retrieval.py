@@ -7,8 +7,8 @@ O(query terms + touched postings) with no corpus-grain work at all.
 The in-query form (`bm25_rank`) recomputes tf/dl/df/avgdl from the raw
 text on every call — the self-contained registry convention. A search
 deployment indexes once and serves many: this store is that shape, under
-the same versioned-dir + atomic ``_CURRENT`` pointer discipline as the
-quality-weight store (`quality_stream._publish_version`) — a republish
+the versioned-dir + atomic pointer commit every store shares
+(``sources/store.py``) — a republish
 after corpus growth swaps the pointer atomically, readers see old or new
 stats in full (never a torn pair: df from one corpus and avgdl from
 another would mis-rank silently), and every build's version string is
@@ -46,11 +46,7 @@ import os
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..streaming.cdc_stream import (
-    _current_version_dir,
-    _next_version_dir,
-    _publish_version,
-)
+from ..sources import store
 
 K1 = 1.2
 B = 0.75
@@ -82,18 +78,11 @@ def _corpus_stats(docs: DataFrame, text_col: str = "text"):
     return postings, df, stats
 
 
-def publish_bm25_index(
-    docs: DataFrame, path: str, text_col: str = "text"
-) -> dict:
-    """Index (or RE-index after corpus growth) ``docs`` and publish the
-    stats as a NEW version — postings/ df/ stats/ staged together under
-    one version dir, one atomic pointer swap (old or new stats in full,
-    never df-from-one-corpus with avgdl-from-another). Returns
-    {"version", "n_docs", "total_len"}."""
-    spark = docs.sparkSession
+def _write_bm25(docs: DataFrame, text_col: str, vdir: str) -> None:
+    """Write postings/ df/ stats/ of ``docs`` together into one
+    generation dir (old or new stats in full, never df-from-one-corpus
+    with avgdl-from-another)."""
     postings, df, stats = _corpus_stats(docs, text_col)
-    os.makedirs(path, exist_ok=True)
-    vdir = _next_version_dir(path)
     (
         postings.repartition(32, "tok")
         .sortWithinPartitions("tok", "doc_id")
@@ -103,10 +92,10 @@ def publish_bm25_index(
     df.repartition(4, "tok").sortWithinPartitions("tok").write.mode(
         "overwrite"
     ).parquet(os.path.join(vdir, "df"))
-    stats.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(vdir, "stats")
-    )
-    _publish_version(path, vdir)
+    stats.coalesce(1).write.mode("overwrite").parquet(os.path.join(vdir, "stats"))
+
+
+def _bm25_report(spark, vdir: str) -> dict:
     s = spark.read.parquet(os.path.join(vdir, "stats")).collect()[0]
     return {
         "version": os.path.basename(vdir),
@@ -115,20 +104,24 @@ def publish_bm25_index(
     }
 
 
+def publish_bm25_index(
+    docs: DataFrame, path: str, text_col: str = "text"
+) -> dict:
+    """Index (or RE-index after corpus growth) ``docs`` and publish the
+    stats as a NEW version with one atomic pointer swap. Returns
+    {"version", "n_docs", "total_len"}."""
+    vdir = store.next_generation(path)
+    _write_bm25(docs, text_col, vdir)
+    store.publish(path, vdir)
+    return _bm25_report(docs.sparkSession, vdir)
+
+
 def build_bm25_index(docs: DataFrame, path: str, text_col: str = "text") -> dict:
     """Write-once build: publish only when nothing is published yet
-    (the `build_gram_index` convention — a repeated call is a no-op
-    read of the live version). Returns the live version's report."""
-    spark = docs.sparkSession
-    cur = _current_version_dir(path)
-    if cur is None:
-        return publish_bm25_index(docs, path, text_col)
-    s = spark.read.parquet(os.path.join(cur, "stats")).collect()[0]
-    return {
-        "version": os.path.basename(cur),
-        "n_docs": s["n_docs"],
-        "total_len": s["total_len"],
-    }
+    (a repeated call is a no-op read of the live version). Returns the
+    live version's report."""
+    gen = store.build_once(path, lambda vdir: _write_bm25(docs, text_col, vdir))
+    return _bm25_report(docs.sparkSession, gen)
 
 
 def merge_bm25_index(batch: DataFrame, path: str, text_col: str = "text") -> dict:
@@ -155,11 +148,7 @@ def merge_bm25_index(batch: DataFrame, path: str, text_col: str = "text") -> dic
     {"version", "fresh_docs", "n_docs", "total_len"}; a full replay
     reports fresh_docs == 0 and publishes NO new version."""
     spark = batch.sparkSession
-    cur = _current_version_dir(path)
-    if cur is None:
-        raise FileNotFoundError(
-            f"merge_bm25_index: no index at {path!r} — build_bm25_index first"
-        )
+    cur = store.require(path, "merge_bm25_index")
     stored_postings = spark.read.parquet(os.path.join(cur, "postings"))
     batch_ids = batch.select("doc_id").distinct()
     seen = (
@@ -178,12 +167,11 @@ def merge_bm25_index(batch: DataFrame, path: str, text_col: str = "text") -> dic
             "total_len": s["total_len"],
         }
     postings_d, df_d, stats_d = _corpus_stats(fresh_docs, text_col)
-    vdir = _next_version_dir(path)
+    vdir = store.next_generation(path)
     pdir = os.path.join(vdir, "postings")
-    os.makedirs(pdir, exist_ok=True)
-    for fn in os.listdir(os.path.join(cur, "postings")):
-        if fn.endswith(".parquet"):
-            os.link(os.path.join(cur, "postings", fn), os.path.join(pdir, fn))
+    store.link_forward(
+        os.path.join(cur, "postings"), pdir, lambda fn: fn.endswith(".parquet")
+    )
     postings_d.write.mode("append").parquet(pdir)
     stored_df = spark.read.parquet(os.path.join(cur, "df"))
     merged_df = (
@@ -205,7 +193,7 @@ def merge_bm25_index(batch: DataFrame, path: str, text_col: str = "text") -> dic
         [(s["n_docs"] + d["n_docs"], s["total_len"] + d["total_len"])],
         "n_docs long, total_len long",
     ).coalesce(1).write.mode("overwrite").parquet(os.path.join(vdir, "stats"))
-    _publish_version(path, vdir)
+    store.publish(path, vdir)
     return {
         "version": os.path.basename(vdir),
         "fresh_docs": n_fresh,
@@ -235,12 +223,7 @@ def streaming_bm25_index(
 def read_bm25_index(spark, path: str):
     """(postings, df, stats, version) at the published pointer. Raises
     FileNotFoundError when nothing has been published."""
-    cur = _current_version_dir(path)
-    if cur is None:
-        raise FileNotFoundError(
-            f"read_bm25_index: no published index at {path!r} — "
-            f"build_bm25_index first"
-        )
+    cur = store.require(path, "read_bm25_index")
     return (
         spark.read.parquet(os.path.join(cur, "postings")),
         spark.read.parquet(os.path.join(cur, "df")),

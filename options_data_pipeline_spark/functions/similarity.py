@@ -19,9 +19,12 @@ Scale design (100 TB / billions of vectors):
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources import store
 from .loop_sql import (
     dot_sql,
     sign_bit_sql,
@@ -713,66 +716,21 @@ def build_pq_index(
     which VERDICT r3 flagged) is gone from the read path.
 
     Write-once semantics: an existing index at ``path`` is read back
-    as-is (stage-and-rename publish, so a half-written build is never
-    visible); ``overwrite=True`` rebuilds."""
-    import os
-    import shutil
-    import uuid
+    as-is; the build publishes a generation through the shared commit
+    (``sources/store.py``), so a half-written build is never visible and
+    of two concurrent first builders the first to commit wins (the
+    encode is deterministic, so both return the same rows).
+    ``overwrite=True`` publishes a fresh generation."""
 
-    spark = vectors.sparkSession
-    marker = os.path.join(path, "_SUCCESS")
-    if overwrite and os.path.isdir(path):
-        shutil.rmtree(path)
-    if not os.path.exists(marker):
-        cents = cents if cents is not None else fixed_centroids()
+    def write(vdir: str) -> None:
+        cells = cents if cents is not None else fixed_centroids()
         enc = pq_encode(
-            with_cell(vectors, cents, vec_col=vec_col),
+            with_cell(vectors, cells, vec_col=vec_col),
             books, id_col, vec_col, extra_cols=("cell",),
         )
-        staged = f"{path}.build-{uuid.uuid4().hex[:8]}"
-        enc.write.mode("overwrite").partitionBy("cell").parquet(staged)
-        parent = os.path.dirname(os.path.abspath(path))
-        os.makedirs(parent, exist_ok=True)
-        try:
-            os.rename(staged, path)
-        except OSError:
-            # a concurrent builder published first — its index is
-            # byte-equivalent (deterministic encode); keep it
-            shutil.rmtree(staged, ignore_errors=True)
-    return spark.read.parquet(path)
+        enc.write.mode("overwrite").partitionBy("cell").parquet(vdir)
 
-
-def _kmeans_current(path: str) -> str | None:
-    """Resolve the live generation of a learned-IVF index: the dir that
-    holds ``corpus/`` + ``centroids/``.
-
-    Two layouts coexist. A fresh :func:`build_kmeans_index` publishes the
-    LEGACY single-root layout (``path/corpus``, ``path/centroids`` — one
-    atomic rename of the whole root). :func:`repair_kmeans_index`
-    publishes GENERATIONS (``path/v_<n>-<hex>/{corpus,centroids}`` +
-    atomic ``_CURRENT`` pointer — the cdc_stream scheme), because a
-    repair must replace an index that already exists, which a root
-    rename cannot do atomically. The pointer, when present, wins; root
-    dirs it shadows are lazily GC'd (their healthy-cell files live on as
-    hard links inside the generation, so this never loses data).
-
-    SINGLE-WRITER, same contract as the LSH index: concurrent
-    build/append/repair on one path must be serialized by the caller."""
-    import os
-    import shutil
-
-    from ..streaming.cdc_stream import _current_version_dir
-
-    cur = _current_version_dir(path)
-    if cur is not None:
-        for stale in ("corpus", "centroids"):
-            p = os.path.join(path, stale)
-            if os.path.isdir(p):  # superseded legacy root (crashed cleanup)
-                shutil.rmtree(p, ignore_errors=True)
-        return cur
-    if os.path.isdir(os.path.join(path, "corpus")):
-        return path  # legacy single-root layout
-    return None
+    return vectors.sparkSession.read.parquet(store.build_once(path, write, overwrite))
 
 
 def build_kmeans_index(
@@ -787,8 +745,8 @@ def build_kmeans_index(
 ) -> tuple[DataFrame, list[list[float]]]:
     """Write-once LEARNED-IVF index: run Lloyd's once, persist the corpus
     itself CLUSTERED BY CELL — (vec_id, embedding, cell) partitioned by
-    cell — plus the centroid table (cell, centroid) as a sibling
-    `_centroids` parquet. A deployment trains the quantizer once at
+    cell — plus the centroid table (cell, centroid) beside it in the
+    same generation. A deployment trains the quantizer once at
     index-build time — re-running Lloyd's per query (what the
     non-indexed registry queries do, by declared design, to stay
     self-contained) costs iters+1 corpus passes per search; and because
@@ -796,58 +754,39 @@ def build_kmeans_index(
     its cells' partitions with no assignment re-join. Returns
     (clustered corpus, centroids-as-list).
 
-    Same write-once publish discipline as :func:`build_pq_index`, with
-    ONE atomic rename for BOTH assets: the index root contains
-    ``corpus/`` and ``centroids/`` subdirs, staged together and published
-    by a single os.rename — so no crash or concurrent-builder interleave
-    can ever pair one run's centroids with another run's cell layout
-    (the two-sibling-renames form had exactly that window: a stale
-    ``_centroids`` dir survived an overwrite crash and the publish kept
-    it while the fresh assignments rename succeeded). Concurrent
-    builders converge on identical bytes (the 9-dp grid makes the
-    trajectory deterministic), so a lost rename race just discards an
-    identical staging dir."""
-    import os
-    import shutil
-    import uuid
+    Same write-once generation commit as :func:`build_pq_index`: each
+    generation holds ``corpus/`` and ``centroids/`` together and becomes
+    visible at one pointer commit, so no crash or concurrent-builder
+    interleave can pair one run's centroids with another run's cell
+    layout. Concurrent builders converge on identical bytes (the 9-dp
+    grid makes the trajectory deterministic), so the loser of the
+    first-build race just discards an identical generation.
 
+    SINGLE-WRITER for append/repair on one path, like every store."""
     spark = vectors.sparkSession
-    if overwrite and os.path.isdir(path):
-        shutil.rmtree(path)
-    cur = _kmeans_current(path)
-    if cur is None:
-        if os.path.isdir(path):
-            # root exists without corpus/: a pre-single-rename layout (or
-            # foreign dir) — never silently read mismatched halves
-            raise RuntimeError(
-                f"index root {path!r} has no corpus/ subdir (stale layout?);"
-                " pass overwrite=True to rebuild"
-            )
+
+    def write(vdir: str) -> None:
         cents = kmeans_centroids(vectors, k, iters, id_col, vec_col, round_dp)
-        assigned = with_cell(vectors, cents, vec_col=vec_col).select(
+        with_cell(vectors, cents, vec_col=vec_col).select(
             F.col(id_col), F.col(vec_col), F.col("cell")
+        ).write.mode("overwrite").partitionBy("cell").parquet(
+            os.path.join(vdir, "corpus")
         )
-        tag = uuid.uuid4().hex[:8]
-        staged = f"{path}.build-{tag}"
-        assigned.write.mode("overwrite").partitionBy("cell").parquet(
-            os.path.join(staged, "corpus")
-        )
-        cent_rows = [(ci, c) for ci, c in enumerate(cents)]
-        cent_df = spark.createDataFrame(cent_rows, "cell int, centroid array<double>")
-        cent_df.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(staged, "centroids")
-        )
-        parent = os.path.dirname(os.path.abspath(path))
-        os.makedirs(parent, exist_ok=True)
-        try:
-            os.rename(staged, path)  # ONE atomic publish of both assets
-        except OSError:
-            shutil.rmtree(staged, ignore_errors=True)  # lost the race
-        cur = _kmeans_current(path)
-    assignments = spark.read.parquet(os.path.join(cur, "corpus"))
-    cent_rows = spark.read.parquet(os.path.join(cur, "centroids")).collect()
-    cents = [r.centroid for r in sorted(cent_rows, key=lambda r: r.cell)]
-    return assignments, cents
+        _write_centroids(spark, cents, vdir)
+
+    cur = store.build_once(path, write, overwrite)
+    return spark.read.parquet(os.path.join(cur, "corpus")), _read_centroids(spark, cur)
+
+
+def _write_centroids(spark, cents: list[list[float]], vdir: str) -> None:
+    spark.createDataFrame(
+        list(enumerate(cents)), "cell int, centroid array<double>"
+    ).coalesce(1).write.mode("overwrite").parquet(os.path.join(vdir, "centroids"))
+
+
+def _read_centroids(spark, gen: str) -> list[list[float]]:
+    rows = spark.read.parquet(os.path.join(gen, "centroids")).collect()
+    return [r.centroid for r in sorted(rows, key=lambda r: r.cell)]
 
 
 def append_kmeans_index(
@@ -876,18 +815,10 @@ def append_kmeans_index(
     of the k slots), so drive appends exactly-once per batch (the WAL
     sink's ledger pattern) — unlike the LSH index, whose candidate
     ``distinct`` makes replay harmless."""
-    import os
-
-    cur = _kmeans_current(path)
-    if cur is None:
-        raise FileNotFoundError(
-            f"append_kmeans_index: no index at {path!r} — build_kmeans_index first"
-        )
+    cur = store.require(path, "append_kmeans_index")
     corpus_dir = os.path.join(cur, "corpus")
-    cent_dir = os.path.join(cur, "centroids")
     spark = batch.sparkSession
-    cent_rows = spark.read.parquet(cent_dir).collect()
-    cents = [r.centroid for r in sorted(cent_rows, key=lambda r: r.cell)]
+    cents = _read_centroids(spark, cur)
     assigned = with_cell(batch, cents, vec_col=vec_col).select(
         F.col(id_col), F.col(vec_col), F.col("cell")
     ).persist()
@@ -915,11 +846,7 @@ def audit_kmeans_index(spark, path: str, hot_factor: int = 2) -> DataFrame:
     registry query's ``drifted`` verdict is not computable here — pass
     externally-derived drifted cells to ``repair_kmeans_index(cells=…)``
     instead."""
-    import os
-
-    cur = _kmeans_current(path)
-    if cur is None:
-        raise FileNotFoundError(f"audit_kmeans_index: no index at {path!r}")
+    cur = store.require(path, "audit_kmeans_index")
     corpus = spark.read.parquet(os.path.join(cur, "corpus"))
     k = spark.read.parquet(os.path.join(cur, "centroids")).count()
     counts = corpus.groupBy("cell").agg(F.count(F.lit(1)).alias("n_vecs"))
@@ -1027,8 +954,8 @@ def repair_kmeans_index(
     ``needs_recluster`` rows when omitted), reassign under the merged
     centroid table, rewrite ONLY the cells whose membership changed,
     hard-link every untouched cell's files into the new generation, and
-    publish via the versioned-dir + atomic ``_CURRENT`` pointer scheme
-    (cdc_stream's ``_publish_version``) — the same crash discipline as
+    publish through the shared generation commit (``sources/store.py``)
+    — the same crash discipline as
     `compact_lsh_index`: a crash at ANY point before the pointer swap
     leaves the live index fully readable; superseded generations are
     GC'd only after the swap.
@@ -1056,21 +983,14 @@ def repair_kmeans_index(
     members: at 100 TB a drift repair re-writes a handful of hot
     partitions, never the corpus.
 
-    SINGLE-WRITER (see :func:`_kmeans_current`). Returns a report:
+    SINGLE-WRITER (see :func:`build_kmeans_index`). Returns a report:
     ``{"flagged_cells", "rows_moved", "cells_rewritten",
     "cells_linked", "generation"}``; when nothing is flagged the index
     is untouched and ``generation`` is None."""
-    import os
-
-    from ..streaming.cdc_stream import _next_version_dir, _publish_version
-
-    cur = _kmeans_current(path)
-    if cur is None:
-        raise FileNotFoundError(f"repair_kmeans_index: no index at {path!r}")
+    cur = store.require(path, "repair_kmeans_index")
     corpus_dir = os.path.join(cur, "corpus")
     corpus = spark.read.parquet(corpus_dir)
-    cent_rows = spark.read.parquet(os.path.join(cur, "centroids")).collect()
-    cents = [r.centroid for r in sorted(cent_rows, key=lambda r: r.cell)]
+    cents = _read_centroids(spark, cur)
     k = len(cents)
     if cells is None:
         verdicts = audit_kmeans_index(spark, path).collect()
@@ -1178,7 +1098,7 @@ def repair_kmeans_index(
         affected.add(int(r["cell_new"]))
         rows_moved += r["n"]
 
-    vdir = _next_version_dir(path)
+    vdir = store.next_generation(path)
     aff_list = sorted(affected)
     (
         rechecked.filter(F.col("cell_new").isin(aff_list))
@@ -1187,32 +1107,19 @@ def repair_kmeans_index(
         .partitionBy("cell")
         .parquet(os.path.join(vdir, "corpus"))
     )
-    linked = []
-    for d in os.listdir(corpus_dir):
-        if not d.startswith("cell="):
-            continue
-        cid = int(d.split("=", 1)[1])
-        if cid in affected:
-            continue
-        src = os.path.join(corpus_dir, d)
-        dst = os.path.join(vdir, "corpus", d)
-        os.makedirs(dst, exist_ok=True)
-        for name in os.listdir(src):
-            os.link(os.path.join(src, name), os.path.join(dst, name))
-        linked.append(cid)
-    cent_df = spark.createDataFrame(
-        [(ci, c) for ci, c in enumerate(cprime)], "cell int, centroid array<double>"
+    linked = store.link_forward(
+        corpus_dir,
+        os.path.join(vdir, "corpus"),
+        lambda d: store.partition_value(d, "cell") not in (None, *affected),
     )
-    cent_df.coalesce(1).write.mode("overwrite").parquet(os.path.join(vdir, "centroids"))
-    _publish_version(path, vdir)
-    if cur == path:  # superseded legacy root: post-commit cleanup
-        _kmeans_current(path)
+    _write_centroids(spark, cprime, vdir)
+    store.publish(path, vdir)
     return {
         "flagged_cells": flagged,
         "cells_reseeded": reseed_cells,
         "rows_moved": rows_moved,
         "cells_rewritten": aff_list,
-        "cells_linked": sorted(linked),
+        "cells_linked": sorted(store.partition_value(d, "cell") for d in linked),
         "generation": os.path.basename(vdir),
     }
 
@@ -1238,12 +1145,8 @@ def repair_kmeans_index_until_clean(
     False after ``max_rounds`` means the residual skew is data (k too
     small for the mass layout), which is the ``overwrite=True`` full
     rebuild's job, not more local repair."""
-    import os
-
     if max_rounds is None:
-        cur = _kmeans_current(path)
-        if cur is None:
-            raise FileNotFoundError(f"repair_kmeans_index_until_clean: no index at {path!r}")
+        cur = store.require(path, "repair_kmeans_index_until_clean")
         max_rounds = spark.read.parquet(os.path.join(cur, "centroids")).count()
     rounds = []
     for _ in range(max_rounds):
@@ -1281,12 +1184,7 @@ def append_pq_index(
     over (corpus ∪ batch) — `pq_adc_topk_from_codes` searches the
     union with no rebuild — and exactly-once appends are the caller's
     discipline (top-k is duplicate-sensitive)."""
-    import os
-
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        raise FileNotFoundError(
-            f"append_pq_index: no index at {path!r} — build_pq_index first"
-        )
+    cur = store.require(path, "append_pq_index")
     cents = cents if cents is not None else fixed_centroids()
     enc = pq_encode(
         with_cell(batch, cents, vec_col=vec_col),
@@ -1294,7 +1192,7 @@ def append_pq_index(
     ).persist()
     try:
         n = enc.count()  # materialize the encode once; the write reads the cache
-        enc.write.mode("append").partitionBy("cell").parquet(path)
+        enc.write.mode("append").partitionBy("cell").parquet(cur)
     finally:
         enc.unpersist()
     return n

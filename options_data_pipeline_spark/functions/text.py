@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources import store
+
 # Stopword marker lists for the n-gram/stopword language-ID heuristic.
 # Deliberately tiny + deterministic so the oracle SQL can mirror them.
 LANG_MARKERS: dict[str, list[str]] = {
@@ -908,11 +910,11 @@ def build_gram_index(
     stored-index deployment path `build_lsh_index` gives the near-dup
     grain, provided here for the exact-substring grain: one row per
     DISTINCT (gram_key, doc_id) pair, persisted as parquet under the
-    versioned-dir + atomic ``_CURRENT`` pointer scheme every index in
-    this repo shares. At 100 TB you tokenize the corpus exactly once at
-    build time; every subsequent batch computes ITS OWN cut list
-    against the stored pairs (:func:`incremental_cut_list`) without
-    re-tokenizing a byte of corpus text.
+    versioned-dir + atomic pointer commit every index in this repo
+    shares (``sources/store.py``). At 100 TB you tokenize the corpus
+    exactly once at build time; every subsequent batch computes ITS OWN
+    cut list against the stored pairs (:func:`incremental_cut_list`)
+    without re-tokenizing a byte of corpus text.
 
     Storage honesty: distinct doc-grams ≈ one row of two longs per
     corpus token (minus within-doc repeats) — the index IS the corpus
@@ -921,45 +923,23 @@ def build_gram_index(
     gram_key matches the batch (a keyed join), never corpus text.
 
     SINGLE-WRITER, same contract as every pointer-published store."""
-    import os
 
-    from ..streaming.cdc_stream import (
-        _current_version_dir,
-        _next_version_dir,
-        _publish_version,
-    )
-
-    spark = docs.sparkSession
-    if overwrite and os.path.isdir(path):
-        import shutil
-
-        shutil.rmtree(path)
-    cur = _current_version_dir(path)
-    if cur is None:
-        pairs = (
+    def write(vdir: str) -> None:
+        (
             sliding_pos_grams(docs, int(min_tokens), text_col)
             .select("gram_key", "doc_id")
             .distinct()
+            .write.mode("overwrite")
+            .parquet(vdir)
         )
-        os.makedirs(path, exist_ok=True)
-        vdir = _next_version_dir(path)
-        pairs.write.mode("overwrite").parquet(vdir)
-        _publish_version(path, vdir)
-        cur = _current_version_dir(path)
-    return spark.read.parquet(cur)
+
+    return docs.sparkSession.read.parquet(store.build_once(path, write, overwrite))
 
 
 def read_gram_index(spark, path: str) -> DataFrame:
     """The published (gram_key, doc_id) pairs. Raises FileNotFoundError
     when nothing has been published at ``path``."""
-    from ..streaming.cdc_stream import _current_version_dir
-
-    cur = _current_version_dir(path)
-    if cur is None:
-        raise FileNotFoundError(
-            f"read_gram_index: no published index at {path!r} — build_gram_index first"
-        )
-    return spark.read.parquet(cur)
+    return spark.read.parquet(store.require(path, "read_gram_index"))
 
 
 def merge_gram_index(
@@ -979,13 +959,7 @@ def merge_gram_index(
     batch reports new_pairs == 0 — the replay-writes-0 fixpoint of the
     idempotent-merge store family (this store's algebra is SET-UNION,
     like the chunk store). SINGLE-WRITER with build/compaction."""
-    from ..streaming.cdc_stream import _current_version_dir
-
-    cur = _current_version_dir(path)
-    if cur is None:
-        raise FileNotFoundError(
-            f"merge_gram_index: no index at {path!r} — build_gram_index first"
-        )
+    cur = store.require(path, "merge_gram_index")
     spark = batch.sparkSession
     pairs = (
         sliding_pos_grams(batch, int(min_tokens), text_col)
@@ -1062,7 +1036,7 @@ def compact_gram_index(
        files, hash-partitioned and sorted by gram_key (deterministic
        bytes, and probes join on gram_key so the sort co-locates keys).
 
-    Publish = versioned dir + atomic ``_CURRENT`` swap: a crash
+    Publish = versioned dir + atomic pointer swap: a crash
     anywhere before the swap leaves the live index readable.
     Replay-idempotent (the surviving set is a pure function of stored
     rows + tombstones). SINGLE-WRITER with build/merge.
@@ -1072,15 +1046,7 @@ def compact_gram_index(
     import math
     import os
 
-    from ..streaming.cdc_stream import (
-        _current_version_dir,
-        _next_version_dir,
-        _publish_version,
-    )
-
-    cur = _current_version_dir(path)
-    if cur is None:
-        raise FileNotFoundError(f"compact_gram_index: no index at {path!r}")
+    cur = store.require(path, "compact_gram_index")
     files_before = sum(1 for f in os.listdir(cur) if f.endswith(".parquet"))
     idx = spark.read.parquet(cur)
     rows_before = idx.count()
@@ -1093,14 +1059,14 @@ def compact_gram_index(
         )
     rows_after = live.count()
     n_files = max(1, math.ceil(rows_after / rows_per_file))
-    vdir = _next_version_dir(path)
+    vdir = store.next_generation(path)
     (
         live.repartition(n_files, "gram_key")
         .sortWithinPartitions("gram_key", "doc_id")
         .write.mode("overwrite")
         .parquet(vdir)
     )
-    _publish_version(path, vdir)
+    store.publish(path, vdir)
     files_after = sum(1 for f in os.listdir(vdir) if f.endswith(".parquet"))
     return {
         "rows_before": rows_before,
@@ -1153,7 +1119,7 @@ def build_pos_gram_index(
     """Write-once POSITIONED gram index — the decontamination-serving
     twin of :func:`build_gram_index`: one row per (gram_key, doc_id)
     pair CARRYING the pair's token-position list, persisted under the
-    shared versioned-dir + atomic ``_CURRENT`` pointer scheme. The
+    shared versioned-dir + atomic pointer commit. The
     plain gram index answers "is this gram duplicated?" (enough for
     batch-side cuts, where the batch re-tokenizes itself); span-level
     DECONTAMINATION needs cuts in the INDEXED corpus's own docs, so the
@@ -1168,34 +1134,19 @@ def build_pos_gram_index(
     Default ``min_tokens=4`` — the decontamination gram size
     (`decontamination_hits`' GPT-3 §C convention), not substring
     dedup's 8. SINGLE-WRITER, same contract as every pointer store."""
-    import os
 
-    from ..streaming.cdc_stream import (
-        _current_version_dir,
-        _next_version_dir,
-        _publish_version,
-    )
-
-    spark = docs.sparkSession
-    if overwrite and os.path.isdir(path):
-        import shutil
-
-        shutil.rmtree(path)
-    cur = _current_version_dir(path)
-    if cur is None:
-        gd = (
+    def write(vdir: str) -> None:
+        (
             sliding_pos_grams(docs, int(min_tokens), text_col)
             .groupBy("gram_key", "doc_id")
             .agg(F.sort_array(F.collect_list("pos")).alias("ps"))
+            .repartition(32, "gram_key")
+            .sortWithinPartitions("gram_key", "doc_id")
+            .write.mode("overwrite")
+            .parquet(vdir)
         )
-        os.makedirs(path, exist_ok=True)
-        vdir = _next_version_dir(path)
-        gd.repartition(32, "gram_key").sortWithinPartitions(
-            "gram_key", "doc_id"
-        ).write.mode("overwrite").parquet(vdir)
-        _publish_version(path, vdir)
-        cur = _current_version_dir(path)
-    return spark.read.parquet(cur)
+
+    return docs.sparkSession.read.parquet(store.build_once(path, write, overwrite))
 
 
 def merge_pos_gram_index(
@@ -1216,14 +1167,7 @@ def merge_pos_gram_index(
     function of the doc, so doc-grain dedup IS set-union here. Returns
     {"batch_docs", "fresh_docs", "new_rows"}; a replay reports
     fresh_docs == 0. SINGLE-WRITER with build."""
-    from ..streaming.cdc_stream import _current_version_dir
-
-    cur = _current_version_dir(path)
-    if cur is None:
-        raise FileNotFoundError(
-            f"merge_pos_gram_index: no index at {path!r} — "
-            f"build_pos_gram_index first"
-        )
+    cur = store.require(path, "merge_pos_gram_index")
     spark = batch.sparkSession
     stored = spark.read.parquet(cur)
     batch_ids = batch.select("doc_id").distinct()
@@ -1254,15 +1198,7 @@ def merge_pos_gram_index(
 def read_pos_gram_index(spark, path: str) -> DataFrame:
     """The published (gram_key, doc_id, ps) rows. Raises
     FileNotFoundError when nothing has been published at ``path``."""
-    from ..streaming.cdc_stream import _current_version_dir
-
-    cur = _current_version_dir(path)
-    if cur is None:
-        raise FileNotFoundError(
-            f"read_pos_gram_index: no published index at {path!r} — "
-            f"build_pos_gram_index first"
-        )
-    return spark.read.parquet(cur)
+    return spark.read.parquet(store.require(path, "read_pos_gram_index"))
 
 
 def contamination_cut_list_indexed(

@@ -3248,12 +3248,12 @@ def _vector_index_path(sf_dir: str, kind: str, source: str = "embeddings.parquet
     files' (name, mtime_ns, size) are folded in too, because an in-place
     part-file rewrite can leave the directory entry itself unchanged.
     The fingerprint string embeds a layout version so index-format
-    changes (e.g. the single-root kmeans publish) never read old trees.
+    changes (e.g. v3: every index a `sources/store.py` generation) never
+    read old trees.
 
-    Superseded fingerprints and crashed ``.build-*`` staging dirs under
-    the kind dir are garbage-collected here (only entries untouched for
-    10+ minutes — never a concurrent builder's live staging; same grace
-    convention as the sink GC)."""
+    Superseded fingerprints under the kind dir are garbage-collected
+    here (only entries untouched for 10+ minutes; same grace convention
+    as the sink GC)."""
     import hashlib
     import os
     import shutil
@@ -3261,7 +3261,7 @@ def _vector_index_path(sf_dir: str, kind: str, source: str = "embeddings.parquet
 
     src = os.path.join(sf_dir, source)
     st = os.stat(src)
-    ident = f"v2:{os.path.abspath(src)}:{st.st_mtime_ns}:{st.st_size}"
+    ident = f"v3:{os.path.abspath(src)}:{st.st_mtime_ns}:{st.st_size}"
     if os.path.isdir(src):
         for name in sorted(os.listdir(src)):
             cst = os.stat(os.path.join(src, name))
@@ -3270,8 +3270,8 @@ def _vector_index_path(sf_dir: str, kind: str, source: str = "embeddings.parquet
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     kind_dir = os.path.join(repo_root, "spark-warehouse", kind)
     # GC: anything under kind/ that is not the live fingerprint and has
-    # been idle past the grace window is a superseded index or a crashed
-    # staging dir — both safe to drop (rebuilds are cheap and hermetic)
+    # been idle past the grace window is a superseded index — safe to
+    # drop (rebuilds are cheap and hermetic)
     if os.path.isdir(kind_dir):
         cutoff = time.time() - 600
         for entry in os.listdir(kind_dir):
@@ -7168,7 +7168,7 @@ def q_ivf_recluster_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern: the driver holds ≤k×dim doubles, never corpus rows); the
     returned frame is the movement report: two narrow argmin maps + two
     cell-grain aggs + a k-row scaffold join. The filesystem twin —
-    rewrite only affected cells, hard-link the rest, atomic `_CURRENT`
+    rewrite only affected cells, hard-link the rest, atomic generation
     publish — is `functions/similarity.py::repair_kmeans_index`,
     parity/crash/re-audit-pinned in tests/test_round9_ops.py (its
     largest-cell donor escalation cannot fire under this scenario's

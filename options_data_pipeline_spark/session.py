@@ -63,6 +63,9 @@ def get_spark(
         # cumulative delta is flat for the first ~40 queries and grows
         # after — exactly the cache-full signature. On a cluster the same
         # flag belongs in executor options for long-lived executors.
+        # Driver JVM options apply only when this process launches the
+        # JVM; under spark-submit (or an already-running JVM) they must be
+        # passed on the command line instead.
         .config(
             "spark.driver.extraJavaOptions",
             os.environ.get(

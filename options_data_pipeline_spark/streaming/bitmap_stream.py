@@ -16,11 +16,10 @@ exactly-once segment state for free (a strictly stronger idempotence
 than the CDC upsert's latest-wins merge, which needs the sequence
 columns to arbitrate).
 
-Storage reuses the CDC store's VERSIONED atomic pointer-swap publish
-(``cdc_stream._publish_version``): every merge writes a fresh
-``v_<n>-<token>`` parquet dir beside the live one and atomically
-repoints ``_CURRENT`` — a crash mid-merge leaves the previous segment
-table intact and readable.
+Storage is the shared VERSIONED atomic pointer-swap publish
+(``sources/store.py``): every merge writes a fresh generation dir
+beside the live one and atomically repoints the store's pointer — a
+crash mid-merge leaves the previous segment table intact and readable.
 
 Scale shape: stored state is ≤ |keys| × |days| × ceil(max_user/4096)
 rows of fixed-width binary — segment grain, not event grain. The
@@ -32,12 +31,10 @@ never touching raw events — the same plan shape the batch operator pins.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .cdc_stream import _current_version_dir, _next_version_dir, _publish_version
+from ..sources import store
 
 
 def batch_bitmap_segments(
@@ -77,7 +74,7 @@ def bitmap_merge_batch(
     docstring."""
     spark = batch.sparkSession
     seg = batch_bitmap_segments(batch, key_col, ts_col, user_col)
-    current = _current_version_dir(store_path)
+    current = store.current(store_path)
     if current is not None:
         stored = spark.read.parquet(current)
         seg = (
@@ -85,20 +82,18 @@ def bitmap_merge_batch(
             .groupBy("et", "day", "bucket")
             .agg(F.expr("bitmap_or_agg(bm)").alias("bm"))
         )
-    os.makedirs(store_path, exist_ok=True)
-    version_dir = _next_version_dir(store_path)
+    version_dir = store.next_generation(store_path)
     seg.write.mode("overwrite").parquet(version_dir)
-    _publish_version(store_path, version_dir)
+    store.publish(store_path, version_dir)
     return spark.read.parquet(version_dir).count()
 
 
 def bitmap_segments_read(spark, store_path: str) -> DataFrame:
     """The stored (et, day, bucket, bm) segments at the published
     version."""
-    current = _current_version_dir(store_path)
-    if current is None:
-        raise FileNotFoundError(f"no published segments under {store_path}")
-    return spark.read.parquet(current)
+    return spark.read.parquet(
+        store.require(store_path, "bitmap_segments_read", "segments")
+    )
 
 
 def bitmap_rollup_report(segments: DataFrame) -> DataFrame:

@@ -11,9 +11,9 @@ answer (Hudi MOR, Iceberg+compaction) splits the store:
    (`manifest_append_batch` — id-grain anti-join against committed
    segments, single manifest publish per batch, replay appends 0);
  - **base**: the bucketed table, rebuilt by COMPACTION as a new
-   generation (versioned dir + the shared atomic `_CURRENT` pointer
-   swap), folding every delta row committed up to a pinned manifest
-   version;
+   generation (versioned dir + the shared atomic pointer swap of
+   `sources/store.py`), folding every delta row committed up to a
+   pinned manifest version;
  - **serving**: base ∪ delta-after-compaction. Joins run per-arm: the
    base arm is the exchange-free bucketed SortMergeJoin; the delta arm
    is batch-sized and broadcasts. At 100 TB the big side never
@@ -51,7 +51,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .cdc_stream import _current_version_dir, _next_version_dir, _publish_version
+from ..sources import store
 from .sink import manifest_append_batch, manifest_versions
 
 _COMPACT_MARK = "_COMPACTED_THROUGH"
@@ -91,7 +91,7 @@ def _compacted_through(root: str) -> int:
     the generation's own `_FOLDED_THROUGH` (atomic with the base — see
     module docstring) with the root marker as a fallback cache."""
     vals = [-1]
-    cur = _current_version_dir(root)
+    cur = store.current(root)
     if cur is not None:
         try:
             with open(os.path.join(cur, _FOLDED_MARK)) as f:
@@ -120,7 +120,7 @@ def _resolve_snapshot(root: str) -> tuple[str, int]:
     a fallback for pre-marker legacy generations — it must never be
     max()'d in, since it can run ahead of the resolved generation
     during a concurrent swap."""
-    cur = _current_version_dir(root)
+    cur = store.current(root)
     if cur is None:
         raise FileNotFoundError(f"no base generation published under {root!r}")
     try:
@@ -173,7 +173,7 @@ def _register_base(
     :func:`_resolve_snapshot`) so serve paths register the SAME
     generation their tail arithmetic uses — never re-resolving the
     pointer between the two."""
-    cur = gen_dir if gen_dir is not None else _current_version_dir(root)
+    cur = gen_dir if gen_dir is not None else store.current(root)
     if cur is None:
         raise FileNotFoundError(f"no base generation published under {root!r}")
     meta = _read_store_meta(cur)
@@ -206,9 +206,8 @@ def build_base(
     """Write generation 0 of the bucketed base (no-op if one is already
     published) and return its session table name."""
     spark = df.sparkSession
-    if _current_version_dir(root) is None:
-        os.makedirs(root, exist_ok=True)
-        vdir = _next_version_dir(root)
+    if store.current(root) is None:
+        vdir = store.next_generation(root)
         name = _table_name(root, vdir)
         (
             df.write.bucketBy(buckets, key)
@@ -226,13 +225,13 @@ def build_base(
             f.flush()
             os.fsync(f.fileno())
         _write_store_meta(vdir, buckets, key)
-        _publish_version(root, vdir)
+        store.publish(root, vdir)
     else:
         # upgrade path: stamp the sidecar onto a pre-sidecar generation.
         # build_base's contract has always been "buckets = the count the
         # files were built with", so the caller value is authoritative
         # here exactly once; every later reader trusts the sidecar.
-        cur = _current_version_dir(root)
+        cur = store.current(root)
         if _read_store_meta(cur) is None:
             _write_store_meta(cur, buckets, key)
     return _register_base(spark, root, key, buckets)
@@ -308,7 +307,7 @@ def serve_join(
 def _resolved_buckets(root: str, buckets: int | None) -> int:
     """The store's effective bucket count: the current generation's
     sidecar when present, else the caller's (legacy generations)."""
-    cur = _current_version_dir(root)
+    cur = store.current(root)
     meta = _read_store_meta(cur) if cur is not None else None
     if meta is not None:
         return meta["buckets"]
@@ -331,7 +330,7 @@ def _publish_generation(
     """Write ``merged`` as a new bucketed generation and publish it:
     folded-through + bucket sidecar committed INSIDE the generation
     before the atomic pointer swap, then the root marker cache."""
-    vdir = _next_version_dir(root)
+    vdir = store.next_generation(root)
     name = _table_name(root, vdir)
     if spark.catalog.tableExists(name):  # crashed prior attempt re-registered
         spark.sql(f"DROP TABLE {name}")
@@ -351,7 +350,7 @@ def _publish_generation(
         f.flush()
         os.fsync(f.fileno())
     _write_store_meta(vdir, buckets, key)
-    _publish_version(root, vdir)
+    store.publish(root, vdir)
     _write_compacted_through(root, pin)
     return {"version": pin, "rows": n, "generation": os.path.basename(vdir)}
 

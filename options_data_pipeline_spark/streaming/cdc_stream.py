@@ -25,9 +25,9 @@ fixpoint), so a replayed micro-batch after a crash converges to the
 same snapshot with no applied-batch ledger. Audit counters belong to
 the batch operator, whose input is the immutable change log.
 
-Durability: the store is VERSIONED — each merge writes a fresh
-``v_<n>-<token>`` parquet directory and then atomically swaps the
-``_CURRENT`` pointer file (single os.replace). A crash anywhere before
+Durability: the store is VERSIONED through ``sources/store.py`` — each
+merge writes a fresh generation directory and then atomically swaps the
+store's pointer file (single os.replace). A crash anywhere before
 the swap leaves the pointer on the previous version (a plain
 mode-overwrite would delete-then-write, and a crash in the gap loses
 the whole snapshot — exactly the hole the repo's staged-append and
@@ -46,57 +46,13 @@ write_pipeline.py:328-362).
 
 from __future__ import annotations
 
-import os
-import shutil
-import uuid
 from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.cdc import cdc_latest_snapshot
-
-_POINTER = "_CURRENT"
-
-
-def _current_version_dir(snapshot_path: str) -> str | None:
-    """Resolve the published snapshot directory, or None if never
-    published (missing/unreadable pointer fails closed to "empty")."""
-    try:
-        with open(os.path.join(snapshot_path, _POINTER)) as f:
-            name = f.read().strip()
-    except OSError:
-        return None
-    d = os.path.join(snapshot_path, name)
-    return d if name and os.path.isdir(d) else None
-
-
-def _next_version_dir(store_path: str) -> str:
-    """Name the next generation dir ``v_<seq>-<hex>`` beside the current
-    one — the single definition of the version-dir convention every
-    pointer-published store (CDC, bitmap, HLL, LSH) shares."""
-    cur = _current_version_dir(store_path)
-    seq = 0 if cur is None else int(os.path.basename(cur).split("-")[0][2:]) + 1
-    return os.path.join(store_path, f"v_{seq}-{uuid.uuid4().hex[:8]}")
-
-
-def _publish_version(snapshot_path: str, version_dir: str) -> None:
-    """Atomically repoint ``_CURRENT`` at ``version_dir`` (tmp file +
-    os.replace — the one atomic primitive a filesystem gives us), then
-    GC everything except the new and immediately-previous versions."""
-    prev = _current_version_dir(snapshot_path)
-    tmp = os.path.join(snapshot_path, f".{_POINTER}.{uuid.uuid4().hex[:8]}")
-    with open(tmp, "w") as f:
-        f.write(os.path.basename(version_dir))
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(snapshot_path, _POINTER))
-    keep = {os.path.basename(version_dir)}
-    if prev is not None:
-        keep.add(os.path.basename(prev))
-    for name in os.listdir(snapshot_path):
-        if name.startswith("v_") and name not in keep:
-            shutil.rmtree(os.path.join(snapshot_path, name), ignore_errors=True)
+from ..sources import store
 
 
 def cdc_merge_batch(
@@ -116,7 +72,7 @@ def cdc_merge_batch(
         c for c in batch.columns if c not in set(keys) | set(seqs) | {op_col}
     ]
     changes = batch.select(*keys, *seqs, op_col, *payload)
-    current = _current_version_dir(snapshot_path)
+    current = store.current(snapshot_path)
     if current is not None:
         stored = spark.read.parquet(current)
         # Fail loudly on schema evolution between micro-batches: the merge
@@ -158,21 +114,19 @@ def cdc_merge_batch(
         payload_cols=payload,
         keep_deletes=True,  # tombstone retention — see module docstring
     ).drop("n_changes", "n_deletes")
-    os.makedirs(snapshot_path, exist_ok=True)
-    version_dir = _next_version_dir(snapshot_path)
+    version_dir = store.next_generation(snapshot_path)
     # new version written BESIDE the current one (which the plan still
     # reads) — no self-overwrite hazard, no driver materialization
     snap.write.mode("overwrite").parquet(version_dir)
-    _publish_version(snapshot_path, version_dir)
+    store.publish(snapshot_path, version_dir)
     return spark.read.parquet(version_dir).count()
 
 
 def cdc_snapshot_read(spark, snapshot_path: str) -> DataFrame:
     """All stored rows (live + tombstones) at the published version."""
-    current = _current_version_dir(snapshot_path)
-    if current is None:
-        raise FileNotFoundError(f"no published snapshot under {snapshot_path}")
-    return spark.read.parquet(current)
+    return spark.read.parquet(
+        store.require(snapshot_path, "cdc_snapshot_read", "snapshot")
+    )
 
 
 def cdc_live_view(spark, snapshot_path: str, delete_op: str = "D") -> DataFrame:
@@ -190,27 +144,14 @@ def cdc_previous_snapshot_read(spark, snapshot_path: str) -> DataFrame:
     to operators/cdc.snapshot_diff), or read-repair against the state
     one merge ago. Raises if no previous version exists (fresh store or
     exactly one publish) — never silently serves the current one."""
-    current = _current_version_dir(snapshot_path)
-    if current is None:
-        raise FileNotFoundError(f"no published snapshot under {snapshot_path}")
-    versions = sorted(
-        n
-        for n in os.listdir(snapshot_path)
-        if n.startswith("v_")
-        and os.path.isdir(os.path.join(snapshot_path, n))
-        and n != os.path.basename(current)
-    )
-    if not versions:
+    store.require(snapshot_path, "cdc_previous_snapshot_read", "snapshot")
+    prev = store.previous(snapshot_path)
+    if prev is None:
         raise FileNotFoundError(
             f"no previous version under {snapshot_path} — only the current"
             " publish exists"
         )
-    if len(versions) > 1:
-        raise RuntimeError(
-            f"expected at most one retained previous version, found"
-            f" {versions} — GC invariant violated"
-        )
-    return spark.read.parquet(os.path.join(snapshot_path, versions[0]))
+    return spark.read.parquet(prev)
 
 
 def streaming_cdc_upsert(

@@ -19,8 +19,8 @@ a replayed batch unions fingerprints that are already present —
 byte-identical store, and the merge result reports ``new_chunks = 0``
 (the replay-writes-0 contract).
 
-Storage: the shared versioned-dir + atomic ``_CURRENT`` pointer scheme
-(cdc_stream._publish_version). Scale shape: the store is one row per
+Storage: the shared versioned-dir + atomic pointer scheme
+(``sources/store.py``). Scale shape: the store is one row per
 DISTINCT chunk (fp, chunk_len) — bytes-of-unique-content grain; each
 micro-batch pays its own chunking (codegen'd explode, see
 functions/text.py::content_chunks) + one fp-grain distinct + an
@@ -29,12 +29,10 @@ anti-join against only the stored fingerprints.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .cdc_stream import _current_version_dir, _next_version_dir, _publish_version
+from ..sources import store
 
 
 def batch_chunk_fps(
@@ -70,46 +68,32 @@ def chunk_store_merge(
     reports new_chunks == new_bytes == 0."""
     spark = batch.sparkSession
     fps = batch_chunk_fps(batch, text_col, k, divisor)
-    current = _current_version_dir(store_path)
-    if current is not None:
-        stored = spark.read.parquet(current)
-        fresh = fps.join(stored.select("fp"), "fp", "left_anti").persist()
-        try:
-            new_chunks = fresh.count()
-            new_bytes = (
-                fresh.agg(F.coalesce(F.sum("chunk_len"), F.lit(0)).cast("long"))
-                .collect()[0][0]
-            )
-            merged = stored.unionByName(fresh)
-            os.makedirs(store_path, exist_ok=True)
-            version_dir = _next_version_dir(store_path)
-            merged.write.mode("overwrite").parquet(version_dir)
-        finally:
-            fresh.unpersist()
-    else:
-        merged = fps.persist()
-        try:
-            new_chunks = merged.count()
-            new_bytes = (
-                merged.agg(F.coalesce(F.sum("chunk_len"), F.lit(0)).cast("long"))
-                .collect()[0][0]
-            )
-            os.makedirs(store_path, exist_ok=True)
-            version_dir = _next_version_dir(store_path)
-            merged.write.mode("overwrite").parquet(version_dir)
-        finally:
-            merged.unpersist()
-    _publish_version(store_path, version_dir)
+    current = store.current(store_path)
+    stored = spark.read.parquet(current) if current is not None else None
+    fresh = (
+        fps if stored is None else fps.join(stored.select("fp"), "fp", "left_anti")
+    ).persist()
+    try:
+        new_chunks = fresh.count()
+        new_bytes = (
+            fresh.agg(F.coalesce(F.sum("chunk_len"), F.lit(0)).cast("long"))
+            .collect()[0][0]
+        )
+        merged = fresh if stored is None else stored.unionByName(fresh)
+        version_dir = store.next_generation(store_path)
+        merged.write.mode("overwrite").parquet(version_dir)
+    finally:
+        fresh.unpersist()
+    store.publish(store_path, version_dir)
     n = spark.read.parquet(version_dir).count()
     return {"chunks": n, "new_chunks": new_chunks, "new_bytes": int(new_bytes)}
 
 
 def chunk_store_read(spark, store_path: str) -> DataFrame:
     """The stored (fp, chunk_len) fingerprints at the published version."""
-    current = _current_version_dir(store_path)
-    if current is None:
-        raise FileNotFoundError(f"no published chunk store under {store_path}")
-    return spark.read.parquet(current)
+    return spark.read.parquet(
+        store.require(store_path, "chunk_store_read", "chunk store")
+    )
 
 
 def chunk_store_report(store: DataFrame) -> DataFrame:

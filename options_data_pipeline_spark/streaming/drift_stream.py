@@ -9,8 +9,8 @@ Exactly-once composes the seasonal-stream way: counts are not
 idempotent, so each micro-batch reduces to its OWN cell partials tagged
 with the foreachBatch ``batch_id`` and appends them through the WAL
 sink's anti-join append — a crash replay finds its rows present and
-writes nothing. The reference publishes through the CDC store's
-versioned atomic pointer swap (a crash mid-publish leaves the previous
+writes nothing. The reference publishes through the shared versioned
+atomic pointer swap (``sources/store.py``) (a crash mid-publish leaves the previous
 reference readable), and every micro-batch bins against the PUBLISHED
 reference range, so a reference rebuild never tears a batch.
 
@@ -22,13 +22,12 @@ the parity test in test_streaming.py.
 from __future__ import annotations
 
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.drift import chi2_between, hist_cells, value_range
-from .cdc_stream import _current_version_dir, _publish_version
+from ..sources import store
 from .sink import idempotent_append_batch
 
 
@@ -37,8 +36,7 @@ def publish_reference(events: DataFrame, ref_path: str) -> None:
     counts from one (batch) table of events, behind the atomic
     versioned pointer. Rebuilding later is the same call — readers
     always see one complete version."""
-    os.makedirs(ref_path, exist_ok=True)
-    vdir = os.path.join(ref_path, f"v_{uuid.uuid4().hex[:12]}")
+    vdir = store.next_generation(ref_path)
     value_range(events).coalesce(1).write.parquet(os.path.join(vdir, "range"))
     # bin against the range READ BACK from what was just written: one
     # aggregate scan instead of two, and the stored cells are guaranteed
@@ -47,7 +45,7 @@ def publish_reference(events: DataFrame, ref_path: str) -> None:
     hist_cells(events, rng).coalesce(1).write.parquet(
         os.path.join(vdir, "cells")
     )
-    _publish_version(ref_path, vdir)
+    store.publish(ref_path, vdir)
 
 
 def _read_reference(
@@ -57,12 +55,7 @@ def _read_reference(
     string keys everything downstream: live partials are tagged with
     the version they were binned under, so a reference rebuild can
     never silently mix counts from incompatible binnings."""
-    vdir = _current_version_dir(ref_path)
-    if vdir is None:
-        raise FileNotFoundError(
-            f"drift monitor: no published reference at {ref_path!r} — "
-            "run publish_reference over the baseline table first"
-        )
+    vdir = store.require(ref_path, "drift monitor", "reference")
     return (
         spark.read.parquet(os.path.join(vdir, "range")),
         spark.read.parquet(os.path.join(vdir, "cells")),

@@ -16,11 +16,10 @@ byte-identical state, and at-least-once ``foreachBatch`` delivery
 composes to exactly-once register state with no ledger and no sequence
 columns (``bitmap_stream``'s OR argument, verbatim, for MAX).
 
-Storage reuses the CDC store's VERSIONED atomic pointer-swap publish
-(``cdc_stream._publish_version``): every merge writes a fresh
-``v_<n>-<token>`` parquet dir beside the live one and atomically
-repoints ``_CURRENT`` — a crash mid-merge leaves the previous register
-table intact and readable.
+Storage is the shared VERSIONED atomic pointer-swap publish
+(``sources/store.py``): every merge writes a fresh generation dir
+beside the live one and atomically repoints the store's pointer — a
+crash mid-merge leaves the previous register table intact and readable.
 
 Scale shape: stored state is ≤ |symbols| × |days| × 64 register rows
 (two longs + a date each). The micro-batch pays one shuffle at
@@ -37,12 +36,10 @@ discipline applied to sketch state instead of indicator state.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .cdc_stream import _current_version_dir, _next_version_dir, _publish_version
+from ..sources import store
 
 
 def batch_hll_registers(
@@ -101,7 +98,7 @@ def hll_merge_batch(
     replay-writes-0 contract)."""
     spark = batch.sparkSession
     regs = batch_hll_registers(batch, key_col, ts_col, user_col)
-    current = _current_version_dir(store_path)
+    current = store.current(store_path)
     if current is not None:
         stored = spark.read.parquet(current)
         merged = (
@@ -122,10 +119,9 @@ def hll_merge_batch(
     else:
         merged = regs
         changed = None  # first publish: everything is new
-    os.makedirs(store_path, exist_ok=True)
-    version_dir = _next_version_dir(store_path)
+    version_dir = store.next_generation(store_path)
     merged.write.mode("overwrite").parquet(version_dir)
-    _publish_version(store_path, version_dir)
+    store.publish(store_path, version_dir)
     n = spark.read.parquet(version_dir).count()
     return {"registers": n, "changed": n if changed is None else changed}
 
@@ -133,10 +129,9 @@ def hll_merge_batch(
 def hll_registers_read(spark, store_path: str) -> DataFrame:
     """The stored (symbol, day, bucket, reg) registers at the published
     version."""
-    current = _current_version_dir(store_path)
-    if current is None:
-        raise FileNotFoundError(f"no published registers under {store_path}")
-    return spark.read.parquet(current)
+    return spark.read.parquet(
+        store.require(store_path, "hll_registers_read", "registers")
+    )
 
 
 def hll_rollup_report(registers: DataFrame) -> DataFrame:

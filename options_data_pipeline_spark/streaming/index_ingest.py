@@ -38,6 +38,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources import store
 from .sink import idempotent_append_batch, sink_has_data
 
 
@@ -67,12 +68,11 @@ def bm25_ingest_batch(
     docs appended. Index-before-docs ordering (module docstring); every
     step is deterministic, so failure-replay converges."""
     from ..functions.retrieval import merge_bm25_index, publish_bm25_index
-    from .cdc_stream import _current_version_dir
 
     fresh = _fresh_against_corpus(batch, corpus_path).localCheckpoint(eager=True)
     if not fresh.take(1):
         return 0
-    if _current_version_dir(index_path) is None:
+    if store.current(index_path) is None:
         publish_bm25_index(fresh, index_path, text_col)
     else:
         merge_bm25_index(fresh, index_path, text_col)
@@ -92,12 +92,11 @@ def pos_gram_ingest_batch(
     the decontamination store stays probe-ready for every doc the
     corpus holds. Same ordering/replay contract as the BM25 loop."""
     from ..functions.text import build_pos_gram_index, merge_pos_gram_index
-    from .cdc_stream import _current_version_dir
 
     fresh = _fresh_against_corpus(batch, corpus_path).localCheckpoint(eager=True)
     if not fresh.take(1):
         return 0
-    if _current_version_dir(index_path) is None:
+    if store.current(index_path) is None:
         build_pos_gram_index(fresh, index_path, min_tokens, text_col)
     else:
         merge_pos_gram_index(fresh, index_path, min_tokens, text_col)

@@ -24,8 +24,8 @@ checkpoint (a NEW checkpoint restarts batch ids — point it at a fresh
 store, the documented contract of every checkpointed sink here).
 
 Weight publication = the quality-weight discipline verbatim
-(versioned dir + atomic ``_CURRENT`` pointer): readers see a full old
-or full new weight set, never a torn mixture, and every published
+(versioned dir + atomic pointer, ``sources/store.py``): readers see a
+full old or full new weight set, never a torn mixture, and every published
 version records the model row-count it was derived from, so a
 republish is observable and auditable.
 
@@ -52,7 +52,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.doremi import doremi_trajectory, model_from_counts
-from .cdc_stream import _current_version_dir, _next_version_dir, _publish_version
+from ..sources import store
 
 _DELTAS = "deltas"
 
@@ -106,7 +106,7 @@ def read_mixture_model(spark, store_path: str) -> DataFrame:
     parquet reader lists only committed files under each batch dir, and
     a dir with no committed files contributes nothing."""
     parts = []
-    base = _current_version_dir(store_path)
+    base = store.current(store_path)
     if base is not None:
         parts.append(spark.read.parquet(base))
     droot = os.path.join(store_path, _DELTAS)
@@ -146,9 +146,9 @@ def compact_mixture_model(spark, store_path: str) -> dict:
         if os.path.exists(os.path.join(droot, d, "_SUCCESS"))
     ]
     model = read_mixture_model(spark, store_path)
-    vdir = _next_version_dir(store_path)
+    vdir = store.next_generation(store_path)
     model.repartition(8, "source", "tok").write.mode("overwrite").parquet(vdir)
-    _publish_version(store_path, vdir)
+    store.publish(store_path, vdir)
     # count the PUBLISHED bytes (the lazy `model` plan still references
     # the delta files the next lines remove)
     rows = spark.read.parquet(vdir).count()
@@ -165,23 +165,18 @@ def publish_mixture_weights(spark, store_path: str, model_path: str) -> dict:
     model = model_from_counts(cnt)
     w, _, _ = doremi_trajectory(model)
     n_rows = cnt.count()
-    os.makedirs(model_path, exist_ok=True)
-    vdir = _next_version_dir(model_path)
+    vdir = store.next_generation(model_path)
     spark.createDataFrame(
         [(s, w[s], n_rows) for s in sorted(w)],
         "source string, weight double, model_rows long",
     ).coalesce(1).write.mode("overwrite").parquet(vdir)
-    _publish_version(model_path, vdir)
+    store.publish(model_path, vdir)
     return {"weights": w, "version": os.path.basename(vdir)}
 
 
 def read_mixture_weights(spark, model_path: str) -> tuple[dict, str]:
     """({source: weight}, version) at the published pointer."""
-    cur = _current_version_dir(model_path)
-    if cur is None:
-        raise FileNotFoundError(
-            f"read_mixture_weights: no published weights at {model_path!r}"
-        )
+    cur = store.require(model_path, "read_mixture_weights", "weights")
     rows = spark.read.parquet(cur).collect()
     return {r.source: r.weight for r in rows}, os.path.basename(cur)
 

@@ -5,12 +5,12 @@ the production train-batch / serve-streaming shape. Scoring is
 ``quality_linear_score``'s codegen'd narrow map with learned instead of
 literal weights; training never runs on the stream.
 
-Weight publication reuses the CDC store's versioned-dir + atomic
-``_CURRENT`` pointer swap (``cdc_stream._publish_version``): a retrain
-writes a fresh ``v_<n>-<token>`` dir holding ONE row (wb, w1, w2, w3,
-iters, lr) and repoints the pointer — scorers reading mid-republish see
-either the old or the new weights in full, never a torn pair, and a
-crash leaves the previous weights readable. Every scored row carries the
+Weight publication is the shared versioned-dir + atomic pointer swap
+(``sources/store.py``): a retrain writes a fresh generation dir holding
+ONE row (wb, w1, w2, w3, iters, lr) and repoints the pointer —
+scorers reading mid-republish see either the old or the new weights in
+full, never a torn pair, and a crash leaves the previous weights
+readable. Every scored row carries the
 ``weight_version`` it was scored under, so a republish is observable in
 the output (the pinning test's contract) and mixed-version stores are
 auditable.
@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.quality_train import ITERS, LR, _z, quality_features, quality_train
-from .cdc_stream import _current_version_dir, _next_version_dir, _publish_version
+from ..sources import store
 
 
 def publish_quality_weights(
@@ -63,24 +63,19 @@ def publish_quality_weights(
     spark = docs.sparkSession
     feats = quality_features(docs, text_col).localCheckpoint(eager=True)
     w = quality_train(feats, iters=iters, lr=lr)
-    os.makedirs(model_path, exist_ok=True)
-    vdir = _next_version_dir(model_path)
+    vdir = store.next_generation(model_path)
     spark.createDataFrame(
         [(w[0], w[1], w[2], w[3], iters, float(lr))],
         "wb double, w1 double, w2 double, w3 double, iters int, lr double",
     ).coalesce(1).write.mode("overwrite").parquet(vdir)
-    _publish_version(model_path, vdir)
+    store.publish(model_path, vdir)
     return {"weights": w, "version": os.path.basename(vdir)}
 
 
 def read_quality_weights(spark, model_path: str) -> tuple[list[float], str]:
     """(weights, version) at the published pointer. Raises
     FileNotFoundError when nothing has been published."""
-    cur = _current_version_dir(model_path)
-    if cur is None:
-        raise FileNotFoundError(
-            f"read_quality_weights: no published weights at {model_path!r}"
-        )
+    cur = store.require(model_path, "read_quality_weights", "weights")
     r = spark.read.parquet(cur).collect()[0]
     return [r.wb, r.w1, r.w2, r.w3], os.path.basename(cur)
 

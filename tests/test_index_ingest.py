@@ -87,22 +87,20 @@ def test_replayed_batch_touches_neither_store(spark, tmp_path, kind):
     """A byte-identical replayed batch appends 0 docs and leaves the
     index generation/content untouched (both merge primitives' doc-grain
     SET-UNION guards)."""
-    from options_data_pipeline_spark.streaming.cdc_stream import (
-        _current_version_dir,
-    )
+    from options_data_pipeline_spark.sources import store
 
     corpus = str(tmp_path / "corpus")
     index = str(tmp_path / "index")
     fn = ii.bm25_ingest_batch if kind == "bm25" else ii.pos_gram_ingest_batch
     batch = _docs(spark, ids={0, 1, 2})
     assert fn(batch, corpus, index) == 3
-    v = _current_version_dir(index)
+    v = store.current(index)
     n_index_rows = spark.read.parquet(
         f"{v}/postings" if kind == "bm25" else v
     ).count()
     assert fn(batch, corpus, index) == 0  # replay
     assert _corpus_ids(spark, corpus) == {0, 1, 2}
-    v2 = _current_version_dir(index)
+    v2 = store.current(index)
     assert (
         spark.read.parquet(f"{v2}/postings" if kind == "bm25" else v2).count()
         == n_index_rows
@@ -135,11 +133,9 @@ def test_crash_between_index_and_docs_converges_on_replay(
     with pytest.raises(RuntimeError, match="injected"):
         fn(batch, corpus, index)
     # the index merge already landed; the corpus did not
-    from options_data_pipeline_spark.streaming.cdc_stream import (
-        _current_version_dir,
-    )
+    from options_data_pipeline_spark.sources import store
 
-    v = _current_version_dir(index)
+    v = store.current(index)
     assert v is not None
     idx_ids = {
         r.doc_id
@@ -156,7 +152,7 @@ def test_crash_between_index_and_docs_converges_on_replay(
     monkeypatch.setattr(ii, "idempotent_append_batch", real_append)
     assert fn(batch, corpus, index) == 3  # replay completes the doc append
     assert _corpus_ids(spark, corpus) == {0, 1, 4}
-    v2 = _current_version_dir(index)
+    v2 = store.current(index)
     rows = spark.read.parquet(f"{v2}/postings" if kind == "bm25" else v2)
     # no duplicate index rows from the replayed merge
     assert rows.count() == rows.dropDuplicates().count()

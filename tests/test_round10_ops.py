@@ -49,15 +49,18 @@ def test_repair_kmeans_index_empty_corpus_descriptive_error(spark, tmp_path):
     from options_data_pipeline_spark.functions.similarity import (
         repair_kmeans_index,
     )
+    from options_data_pipeline_spark.sources import store
 
     path = str(tmp_path / "kidx_empty")
-    # legacy single-root layout, hand-built: schema-bearing EMPTY corpus
+    # hand-built generation: schema-bearing EMPTY corpus
+    gen = store.next_generation(path)
     spark.createDataFrame(
         [], "vec_id bigint, embedding array<double>, cell int"
-    ).write.parquet(os.path.join(path, "corpus"))
+    ).write.parquet(os.path.join(gen, "corpus"))
     spark.createDataFrame(
         [(0, [0.0, 0.0]), (1, [1.0, 1.0])], "cell int, centroid array<double>"
-    ).write.parquet(os.path.join(path, "centroids"))
+    ).write.parquet(os.path.join(gen, "centroids"))
+    store.publish(path, gen)
     with pytest.raises(ValueError, match="zero-row corpus"):
         repair_kmeans_index(spark, path, cells=[0, 1])
 

@@ -15,7 +15,7 @@ from options_data_pipeline_spark.functions.dedupe import (
     merge_cluster_map,
     read_cluster_map,
 )
-from options_data_pipeline_spark.streaming.cdc_stream import _current_version_dir
+from options_data_pipeline_spark.sources import store
 
 
 def _chain_pairs(spark, lo, hi, step=2):
@@ -32,7 +32,7 @@ def test_merge_relabel_scan_is_index_pruned(spark, tmp_path):
     path = str(tmp_path / "cmap_idx")
     # 50 disjoint 2-doc clusters → labels spread over many partitions
     build_cluster_map(_chain_pairs(spark, 0, 100), path)
-    cur = _current_version_dir(path)
+    cur = store.current(path)
     assert os.path.isdir(os.path.join(cur, _LABEL_INDEX))
 
     # batch bridges exactly two stored clusters: {0,1} and {10,11}
@@ -66,7 +66,7 @@ def test_label_index_stays_exact_across_merges(spark, tmp_path):
         merge_cluster_map(
             spark.createDataFrame(rows, "doc_a bigint, doc_b bigint"), path
         )
-    cur = _current_version_dir(path)
+    cur = store.current(path)
     m = spark.read.parquet(cur)
     truth = {
         (r.label, r.part)
@@ -91,43 +91,24 @@ def test_label_index_stays_exact_across_merges(spark, tmp_path):
     assert bad == 0
 
 
-def test_legacy_store_without_index_migrates_on_first_merge(spark, tmp_path):
-    """A pre-round-11 store (no sidecar) full-scans ONCE, gets an exact
-    index written with the merged version, and prunes from then on."""
+def test_map_without_label_index_raises_and_leaves_store(spark, tmp_path):
+    """A map generation without the label→part sidecar is not a layout
+    this version writes: the merge raises a clear error naming the
+    rebuild instead of silently full-scanning, and publishes nothing."""
     import shutil
 
     path = str(tmp_path / "cmap_legacy")
     build_cluster_map(_chain_pairs(spark, 0, 20), path)
-    shutil.rmtree(os.path.join(_current_version_dir(path), _LABEL_INDEX))
+    cur = store.current(path)
+    shutil.rmtree(os.path.join(cur, _LABEL_INDEX))
+    before = sorted(map(tuple, read_cluster_map(spark, path).collect()))
 
-    rep1 = merge_cluster_map(
-        spark.createDataFrame([(1, 4)], "doc_a bigint, doc_b bigint"), path
-    )
-    assert rep1["index"] == "rebuilt"
-    assert rep1["relabel_parts_scanned"] == _CLUSTER_PARTS  # the one full scan
-    cur = _current_version_dir(path)
-    assert os.path.isdir(os.path.join(cur, _LABEL_INDEX))
-    m = spark.read.parquet(cur)
-    truth = {
-        (r.label, r.part)
-        for r in m.select("label", "part").distinct().collect()
-    }
-    idx = {
-        (r.label, r.part)
-        for r in spark.read.parquet(os.path.join(cur, _LABEL_INDEX))
-        .select("label", "part")
-        .collect()
-    }
-    assert idx == truth
-
-    rep2 = merge_cluster_map(
-        spark.createDataFrame([(5, 8)], "doc_a bigint, doc_b bigint"), path
-    )
-    assert rep2["index"] == "pruned"
-    assert rep2["relabel_parts_scanned"] < _CLUSTER_PARTS
-    got = {r.doc_id: r.label for r in read_cluster_map(spark, path).collect()}
-    # (1,4) chained {0,1}∪{4,5} under label 0; (5,8) folds {8,9} in too
-    assert got[0] == got[1] == got[4] == got[5] == got[8] == got[9] == 0
+    with pytest.raises(FileNotFoundError, match="build_cluster_map"):
+        merge_cluster_map(
+            spark.createDataFrame([(1, 4)], "doc_a bigint, doc_b bigint"), path
+        )
+    assert store.current(path) == cur
+    assert sorted(map(tuple, read_cluster_map(spark, path).collect())) == before
 
 
 def test_incremental_map_matches_oneshot_cc(spark, tmp_path):
@@ -327,7 +308,7 @@ def test_base_delta_compact_crash_before_pointer_swap(spark, tmp_path, monkeypat
     def boom(*a, **kw):
         raise RuntimeError("injected: crash before pointer swap")
 
-    monkeypatch.setattr(bd, "_publish_version", boom)
+    monkeypatch.setattr(store, "publish", boom)
     with pytest.raises(RuntimeError, match="injected"):
         bd.compact(spark, root, "k", buckets=2)
     monkeypatch.undo()

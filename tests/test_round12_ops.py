@@ -15,7 +15,7 @@ from options_data_pipeline_spark.functions.dedupe import (
     read_cluster_map,
 )
 from options_data_pipeline_spark.streaming import bucketed_stream as bd
-from options_data_pipeline_spark.streaming.cdc_stream import _current_version_dir
+from options_data_pipeline_spark.sources import store
 
 
 def _li(spark, rows):
@@ -81,12 +81,12 @@ def test_rebucket_publishes_new_generation_with_parity(spark, tmp_path):
     rows = [(f"r{i}", i % 7, float(i)) for i in range(30)]
     bd.build_base(_li(spark, rows), root, "k", buckets=4)
     bd.ingest_batch(_li(spark, [("n1", 3, 100.0)]), root, "row_id")
-    old_gen = _current_version_dir(root)
+    old_gen = store.current(root)
     want = sorted(map(tuple, rows + [("n1", 3, 100.0)]))
 
     rep = bd.rebucket(spark, root, "k", 8)
     assert rep["rows"] == 31
-    new_gen = _current_version_dir(root)
+    new_gen = store.current(root)
     assert new_gen != old_gen and os.path.isdir(old_gen)
 
     got = sorted(map(tuple, bd.serve(spark, root, "k").collect()))
@@ -228,12 +228,12 @@ def test_serve_snapshot_is_atomic_across_compaction_swap(spark, tmp_path):
 
     # reader resolves its snapshot (lazy plan) before the swap
     view = bd.serve(spark, root, "k")
-    gen_before = _current_version_dir(root)
+    gen_before = store.current(root)
 
     # writer folds batch1 into a new generation (pointer swap) and
     # ingests MORE rows the old snapshot must not see
     bd.compact(spark, root, "k")
-    assert _current_version_dir(root) != gen_before
+    assert store.current(root) != gen_before
     batch2 = [(f"b2_{i}", i % 4, float(20 + i)) for i in range(3)]
     assert bd.ingest_batch(_li(spark, batch2), root, "row_id") == 3
 

@@ -118,7 +118,9 @@ def test_append_kmeans_index_equals_oneshot(spark, tmp_path):
     n = append_kmeans_index(batch, path)
     assert n == batch.count() > 0
 
-    stored = spark.read.parquet(f"{path}/corpus")
+    from options_data_pipeline_spark.sources import store
+
+    stored = spark.read.parquet(f"{store.current(path)}/corpus")
     ref = with_cell(emb, cents).select("vec_id", "embedding", "cell")
     assert {(r.vec_id, r.cell) for r in stored.select("vec_id", "cell").collect()} == {
         (r.vec_id, r.cell) for r in ref.select("vec_id", "cell").collect()
@@ -165,7 +167,9 @@ def test_append_pq_index_equals_oneshot(spark, tmp_path):
     n = append_pq_index(batch, path)
     assert n == batch.count() > 0
 
-    stored = spark.read.parquet(path)
+    from options_data_pipeline_spark.sources import store
+
+    stored = spark.read.parquet(store.current(path))
     oneshot = pq_encode(
         with_cell(emb, fixed_centroids()), extra_cols=("cell",)
     )

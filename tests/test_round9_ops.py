@@ -10,6 +10,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from options_data_pipeline_spark.sources import store
+
 
 def _planted_vectors(spark):
     """14-vector plant with one DEAD cell under first-3-by-id init
@@ -46,11 +48,10 @@ def test_repair_kmeans_index_rebalances_and_publishes(spark, tmp_path):
     donor, re-seeds cell 2 at the donor member farthest from centroid 0,
     runs one joint Lloyd step, reassigns globally, rewrites ONLY the
     affected cells, hard-links the untouched cell 1, and publishes via
-    the versioned _CURRENT pointer. Post-repair: audit fully clears, and
+    the versioned generation pointer. Post-repair: audit fully clears, and
     the stored assignment equals a one-shot assignment under the
     PUBLISHED centroids (the build invariant, preserved)."""
     from options_data_pipeline_spark.functions.similarity import (
-        _kmeans_current,
         audit_kmeans_index,
         build_kmeans_index,
         repair_kmeans_index,
@@ -60,6 +61,7 @@ def test_repair_kmeans_index_rebalances_and_publishes(spark, tmp_path):
     vecs = _planted_vectors(spark)
     path = str(tmp_path / "kidx")
     build_kmeans_index(vecs, path, k=3, iters=0)
+    gen0 = store.current(path)
 
     report = repair_kmeans_index(spark, path)
     assert report["flagged_cells"] == [0, 2]  # empty 2 + drafted donor 0
@@ -68,11 +70,10 @@ def test_repair_kmeans_index_rebalances_and_publishes(spark, tmp_path):
     assert report["rows_moved"] == 3  # x in {0.03, 0.04, 0.05} -> cell 2
     assert report["generation"] is not None
 
-    # published through the pointer; legacy root dirs cleaned up
-    assert os.path.exists(os.path.join(path, "_CURRENT"))
-    cur = _kmeans_current(path)
-    assert cur != path and os.path.isdir(os.path.join(cur, "corpus"))
-    assert not os.path.isdir(os.path.join(path, "corpus"))
+    # published through the pointer as a new generation
+    cur = store.current(path)
+    assert cur != gen0 and os.path.basename(cur) == report["generation"]
+    assert os.path.isdir(os.path.join(cur, "corpus"))
 
     # linked partition shares inodes with nothing stale (files exist, readable)
     stored = spark.read.parquet(os.path.join(cur, "corpus"))
@@ -159,8 +160,8 @@ def test_repair_splits_lone_hot_cell_via_recipient(spark, tmp_path):
 
 
 def test_repair_noop_when_healthy(spark, tmp_path):
-    """Nothing flagged -> the index is not touched at all: no pointer,
-    no new generation, legacy layout intact."""
+    """Nothing flagged -> the index is not touched at all: same
+    published generation, no new one."""
     from options_data_pipeline_spark.functions.similarity import (
         build_kmeans_index,
         repair_kmeans_index,
@@ -170,10 +171,11 @@ def test_repair_noop_when_healthy(spark, tmp_path):
     vecs = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
     path = str(tmp_path / "kidx")
     build_kmeans_index(vecs, path, k=2, iters=1)
+    gen = store.current(path)
     report = repair_kmeans_index(spark, path)
     assert report["generation"] is None and report["flagged_cells"] == []
-    assert not os.path.exists(os.path.join(path, "_CURRENT"))
-    assert os.path.isdir(os.path.join(path, "corpus"))
+    assert store.current(path) == gen
+    assert [d for d in os.listdir(path) if d.startswith("v_")] == [os.path.basename(gen)]
 
 
 def test_repair_crash_before_publish_leaves_live_index(spark, tmp_path, monkeypatch):
@@ -182,49 +184,52 @@ def test_repair_crash_before_publish_leaves_live_index(spark, tmp_path, monkeypa
     original assignments; the retry succeeds and the orphaned staging
     generation is GC'd by the successful publish."""
     from options_data_pipeline_spark.functions.similarity import (
-        _kmeans_current,
         build_kmeans_index,
         repair_kmeans_index,
     )
-    from options_data_pipeline_spark.streaming import cdc_stream
 
     vecs = _planted_vectors(spark)
     path = str(tmp_path / "kidx")
     build_kmeans_index(vecs, path, k=3, iters=0)
+    gen0 = store.current(path)
     before = {
         (r.vec_id, r.cell)
-        for r in spark.read.parquet(os.path.join(path, "corpus"))
+        for r in spark.read.parquet(os.path.join(gen0, "corpus"))
         .select("vec_id", "cell")
         .collect()
     }
 
-    real_publish = cdc_stream._publish_version
+    real_publish = store.publish
 
-    def boom(snapshot_path, version_dir):
+    def boom(*a, **kw):
         raise OSError("injected crash before pointer swap")
 
-    monkeypatch.setattr(cdc_stream, "_publish_version", boom)
+    monkeypatch.setattr(store, "publish", boom)
     with pytest.raises(OSError, match="injected"):
         repair_kmeans_index(spark, path)
-    monkeypatch.setattr(cdc_stream, "_publish_version", real_publish)
+    monkeypatch.setattr(store, "publish", real_publish)
 
-    # live index untouched: still the legacy root, same assignments
-    assert _kmeans_current(path) == path
+    # live index untouched: still the built generation, same assignments
+    assert store.current(path) == gen0
     after = {
         (r.vec_id, r.cell)
-        for r in spark.read.parquet(os.path.join(path, "corpus"))
+        for r in spark.read.parquet(os.path.join(gen0, "corpus"))
         .select("vec_id", "cell")
         .collect()
     }
     assert after == before
-    orphans = [d for d in os.listdir(path) if d.startswith("v_")]
+    orphans = [
+        d for d in os.listdir(path)
+        if d.startswith("v_") and d != os.path.basename(gen0)
+    ]
     assert len(orphans) == 1  # the crashed staging generation
 
-    # retry repairs for real; the orphan is GC'd by the publish
+    # retry repairs for real; the orphan is GC'd by the publish, the
+    # built generation stays as the previous one
     report = repair_kmeans_index(spark, path)
     assert report["generation"] is not None
-    gens = [d for d in os.listdir(path) if d.startswith("v_")]
-    assert gens == [report["generation"]]
+    gens = sorted(d for d in os.listdir(path) if d.startswith("v_"))
+    assert gens == sorted([os.path.basename(gen0), report["generation"]])
 
 
 def _cut_list_mirror(texts: dict[int, str], k: int = 8):

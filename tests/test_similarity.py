@@ -288,36 +288,42 @@ def test_pq_adc_self_distance_equals_recon_err(spark):
 
 
 def test_kmeans_index_atomic_layout_and_stale_root(spark, tmp_path):
-    """build_kmeans_index publishes corpus/ + centroids/ under ONE root in
-    one rename; a root missing corpus/ (stale layout) must raise rather
-    than silently read mismatched halves; overwrite=True rebuilds."""
+    """build_kmeans_index publishes corpus/ + centroids/ together in ONE
+    generation; a root holding data but no published generation (stale
+    layout) must raise rather than silently read mismatched halves;
+    overwrite=True rebuilds it as a generation."""
     import os
     from pyspark.sql import Row
     from options_data_pipeline_spark.functions.similarity import build_kmeans_index
+    from options_data_pipeline_spark.sources import store
 
     vecs = spark.createDataFrame(
         [Row(vec_id=i, embedding=[float(i % 4), float((i * 7) % 5)]) for i in range(40)]
     )
     root = str(tmp_path / "idx")
     corpus, cents = build_kmeans_index(vecs, root, k=2, iters=1)
-    assert os.path.isdir(os.path.join(root, "corpus"))
-    assert os.path.isdir(os.path.join(root, "centroids"))
+    gen = store.current(root)
+    assert os.path.isdir(os.path.join(gen, "corpus"))
+    assert os.path.isdir(os.path.join(gen, "centroids"))
     assert corpus.count() == 40 and len(cents) == 2
-    # no leftover staging dirs after a successful publish
-    parent = os.path.dirname(root)
-    assert not [d for d in os.listdir(parent) if ".build-" in d]
+    # nothing but the one generation and its pointer after a publish
+    assert [d for d in os.listdir(root) if not d.startswith("_")] == [
+        os.path.basename(gen)
+    ]
+    assert os.listdir(os.path.dirname(root)) == ["idx"]
     # second call reads back without rebuilding (same result)
     corpus2, cents2 = build_kmeans_index(vecs, root, k=2, iters=1)
     assert cents2 == cents
-    # stale layout: a root without corpus/ raises
+    # stale layout: a root with data but no pointer raises
     stale = str(tmp_path / "stale")
     os.makedirs(os.path.join(stale, "not_corpus"))
     import pytest as _pytest
-    with _pytest.raises(RuntimeError, match="corpus"):
+    with _pytest.raises(RuntimeError, match="overwrite=True"):
         build_kmeans_index(vecs, stale, k=2, iters=1)
-    # overwrite=True clears and rebuilds the stale root
+    # overwrite=True rebuilds the stale root as a published generation
     corpus3, cents3 = build_kmeans_index(vecs, stale, k=2, iters=1, overwrite=True)
-    assert cents3 == cents
+    assert cents3 == cents and corpus3.count() == 40
+    assert os.path.isdir(os.path.join(store.current(stale), "corpus"))
 
 
 def test_vector_index_path_gc_and_fingerprint(tmp_path, monkeypatch):

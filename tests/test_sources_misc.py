@@ -353,6 +353,45 @@ def test_multimodal_auto_mode_undecodable_rows_yield_null(spark):
         extract_features(media, decoder="video").collect()
 
 
+def test_multimodal_auto_mode_corrupt_payloads_yield_null(spark):
+    """Truncated PNG, BMP and WAV payloads (zlib.error, struct.error,
+    ValueError, EOFError inside the stdlib codecs) must not fail the
+    auto-mode job: the good row decodes, each bad row emits a NULL
+    feature with its integrity stats, and a named decoder still fails."""
+    from options_data_pipeline_spark.functions.multimodal import (
+        make_bmp,
+        make_png,
+        make_wav,
+    )
+
+    px = lambda x, y: ((x * 37) % 256, (y * 91) % 256, 13)
+    good = make_bmp(2, 2, lambda x, y: (10, 20, 30))
+    png = make_png(9, 7, px)[:30]
+    bmp_short = make_bmp(9, 7, px)[:10]
+    bmp_cut = make_bmp(9, 7, px)[:123]
+    wav = make_wav(440.0, duration_ms=200)
+    media = spark.createDataFrame(
+        [
+            (1, "image", bytearray(good), ("bmp", 2, 2, None)),
+            (2, "image", bytearray(png), ("png", 9, 7, None)),
+            (3, "image", bytearray(bmp_short), ("bmp", 9, 7, None)),
+            (4, "image", bytearray(bmp_cut), ("bmp", 9, 7, None)),
+            (5, "audio", bytearray(wav[:30]), ("wav", None, None, 200)),
+            (6, "audio", bytearray(wav[: len(wav) - 5]), ("wav", None, None, 200)),
+        ],
+        MEDIA_SCHEMA,
+    )
+    rows = {r.media_id: r for r in extract_features(media, decoder="auto").collect()}
+    assert rows[1].feature is not None and rows[1].feature[0] == 2.0
+    for mid, payload in [(2, png), (3, bmp_short), (4, bmp_cut), (5, wav[:30])]:
+        assert rows[mid].feature is None
+        assert rows[mid].n_bytes == len(payload)
+        assert rows[mid].checksum == sum(payload) % (1 << 31)
+    assert rows[6].feature is None and rows[6].n_bytes == len(wav) - 5
+    with pytest.raises(Exception):  # named decoder keeps the hard failure
+        extract_features(media.filter("kind = 'image'"), decoder="image").collect()
+
+
 def test_frame_sampling(spark):
     media = spark.createDataFrame(
         [(1, "video", bytearray(b""), ("mp4", 0, 0, 3500))], MEDIA_SCHEMA

@@ -1753,7 +1753,7 @@ def test_cdc_snapshot_survives_crash_before_publish(spark, tmpdir, monkeypatch):
     is written but BEFORE the pointer swap must leave readers on the
     previous snapshot intact (a plain mode-overwrite would have deleted
     it first); the replayed merge then publishes normally and converges."""
-    from options_data_pipeline_spark.streaming import cdc_stream
+    from options_data_pipeline_spark.sources import store
     from options_data_pipeline_spark.streaming.cdc_stream import (
         cdc_merge_batch,
         cdc_snapshot_read,
@@ -1765,10 +1765,10 @@ def test_cdc_snapshot_survives_crash_before_publish(spark, tmpdir, monkeypatch):
     b2 = _cdc_changes(spark, [(1, base + timedelta(minutes=1), 102, "U", 9.0)])
     cdc_merge_batch(b1, snap, key_cols=["k"], seq_cols=["ts", "cid"])
 
-    real_publish = cdc_stream._publish_version
+    real_publish = store.publish
     monkeypatch.setattr(
-        cdc_stream,
-        "_publish_version",
+        store,
+        "publish",
         lambda *a, **kw: (_ for _ in ()).throw(RuntimeError("crash")),
     )
     with pytest.raises(RuntimeError, match="crash"):
@@ -1777,7 +1777,7 @@ def test_cdc_snapshot_survives_crash_before_publish(spark, tmpdir, monkeypatch):
     rows = cdc_snapshot_read(spark, snap).collect()
     assert len(rows) == 1 and rows[0].last_v == 1.0
 
-    monkeypatch.setattr(cdc_stream, "_publish_version", real_publish)
+    monkeypatch.setattr(store, "publish", real_publish)
     cdc_merge_batch(b2, snap, key_cols=["k"], seq_cols=["ts", "cid"])
     rows = cdc_snapshot_read(spark, snap).collect()
     assert len(rows) == 1 and rows[0].last_v == 9.0

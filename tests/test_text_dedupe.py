@@ -667,32 +667,29 @@ def test_lsh_index_atomic_publish_no_partial(spark, tmp_path):
     build leaves no readable index (retry succeeds); a crashed COMPACTION
     leaves the previous generation fully readable with identical probe
     results — the exact crash window the old two-step dir rename had."""
-    import os
-
     from options_data_pipeline_spark.functions import dedupe as dd
+    from options_data_pipeline_spark.sources import store
 
     df = docs_df(spark, ["some text here", "other text there",
                          "some text here too"])
     path = str(tmp_path / "idx")
 
-    real_replace = os.replace
+    real_publish = store.publish
     calls = {}
 
-    def boom(src, dst):
-        if os.path.basename(dst) == "_CURRENT":
-            calls["hit"] = calls.get("hit", 0) + 1
-            raise RuntimeError("crash at pointer swap")
-        return real_replace(src, dst)
+    def boom(*a, **kw):
+        calls["hit"] = calls.get("hit", 0) + 1
+        raise RuntimeError("crash at pointer swap")
 
     # crash during the FIRST build's publish → nothing visible
-    os.replace = boom
+    store.publish = boom
     try:
         try:
             dd.build_lsh_index(df, path)
         except RuntimeError:
             pass
     finally:
-        os.replace = real_replace
+        store.publish = real_publish
     assert calls["hit"] == 1
     import pytest as _pytest
     with _pytest.raises(FileNotFoundError):
@@ -706,12 +703,12 @@ def test_lsh_index_atomic_publish_no_partial(spark, tmp_path):
     dd.append_lsh_index(df.filter("doc_id = 0"), path)
     dd.append_lsh_index(df.filter("doc_id = 0"), path)
     assert dd.read_lsh_index(spark, path).count() == 5
-    os.replace = boom
+    store.publish = boom
     try:
         with _pytest.raises(RuntimeError):
             dd.compact_lsh_index(spark, path)
     finally:
-        os.replace = real_replace
+        store.publish = real_publish
     assert dd.read_lsh_index(spark, path).count() == 5  # previous gen intact
     # recovery: re-run compaction — duplicates collapse, publish lands
     stats = dd.compact_lsh_index(spark, path)
@@ -981,48 +978,16 @@ def test_partitioned_bloom_matches_single_and_scales_capacity(spark):
     assert fp_part <= 30 and fp_single >= 250, (fp_part, fp_single)
 
 
-def test_lsh_index_flat_layout_migrates_in_place(spark, tmp_path):
-    """A pre-round-8 FLAT index (parquet + _SUCCESS at the root, no
-    pointer) is adopted into a v_0 generation on first touch — no
-    silent rebuild, no stale root files."""
+def test_lsh_index_flat_layout_raises_naming_overwrite(spark, tmp_path):
+    """A FLAT signature table (parquet + _SUCCESS at the root, no
+    pointer) is not a layout this version reads: readers raise, a plain
+    build raises naming overwrite=True, and overwrite=True publishes a
+    generation beside the foreign files without touching them."""
     import os
 
+    import pytest as _pytest
+
     from options_data_pipeline_spark.functions import dedupe as dd
-
-    df = docs_df(spark, ["alpha text here", "beta text there"])
-    path = str(tmp_path / "idx")
-    # build a signature table the OLD way: parquet directly at path
-    from options_data_pipeline_spark.functions.dedupe import (
-        MINHASH_PARAMS,
-        band_bucket_cols,
-        minhash_signatures_wide,
-    )
-
-    wide = minhash_signatures_wide(df, "text", 5)
-    idx = wide.select(
-        "doc_id", *[f"mh{j}" for j in range(len(MINHASH_PARAMS))],
-        *band_bucket_cols(),
-    )
-    idx.write.mode("overwrite").parquet(path)
-    assert os.path.exists(os.path.join(path, "_SUCCESS"))
-
-    out = dd.read_lsh_index(spark, path)  # triggers migration
-    assert out.count() == 2
-    assert os.path.exists(os.path.join(path, "_CURRENT"))
-    root_parquet = [f for f in os.listdir(path) if f.endswith(".parquet")]
-    assert not root_parquet  # moved into the generation dir
-    # a build over the migrated path is a no-op read-back (write-once)
-    again = dd.build_lsh_index(docs_df(spark, ["other corpus"]), path)
-    assert again.count() == 2
-    # appends + compaction work on the migrated index
-    dd.append_lsh_index(df.filter("doc_id = 0"), path)
-    stats = dd.compact_lsh_index(spark, path)
-    assert stats["rows_after"] == 2
-
-
-def _flat_lsh_layout(spark, tmp_path, name="idx"):
-    """Build a pre-round-8 FLAT signature table (parquet + _SUCCESS at
-    the root, no pointer) and return (path, expected_row_count)."""
     from options_data_pipeline_spark.functions.dedupe import (
         MINHASH_PARAMS,
         band_bucket_cols,
@@ -1030,70 +995,24 @@ def _flat_lsh_layout(spark, tmp_path, name="idx"):
     )
 
     df = docs_df(spark, ["alpha text here", "beta text there", "gamma body"])
-    path = str(tmp_path / name)
+    path = str(tmp_path / "idx")
     wide = minhash_signatures_wide(df, "text", 5)
-    idx = wide.select(
+    wide.select(
         "doc_id", *[f"mh{j}" for j in range(len(MINHASH_PARAMS))],
         *band_bucket_cols(),
-    )
-    idx.repartition(3).write.mode("overwrite").parquet(path)
-    return path, 3
+    ).write.mode("overwrite").parquet(path)
+    flat = sorted(os.listdir(path))
 
+    with _pytest.raises(FileNotFoundError, match="no published index"):
+        dd.read_lsh_index(spark, path)
+    with _pytest.raises(RuntimeError, match="overwrite=True"):
+        dd.build_lsh_index(df, path)
+    assert sorted(os.listdir(path)) == flat  # nothing written
 
-def test_lsh_migration_crash_before_publish_loses_nothing(spark, tmp_path):
-    """Crash mid-migration (staging dir holds only SOME files, pointer
-    never written): the flat layout is still fully intact because files
-    are hard-linked, not moved — the retry discards the partial staging
-    dir and migrates ALL rows. This is the round-8 os.rename-per-file
-    loss window, closed."""
-    import os
-
-    from options_data_pipeline_spark.functions import dedupe as dd
-
-    path, n = _flat_lsh_layout(spark, tmp_path)
-    parquets = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
-    assert len(parquets) >= 2
-    # simulate a crash after linking ONE file into staging, before publish
-    stale = os.path.join(path, "v_0-migrate")
-    os.makedirs(stale)
-    os.link(os.path.join(path, parquets[0]), os.path.join(stale, parquets[0]))
-    assert not os.path.exists(os.path.join(path, "_CURRENT"))
-
-    out = dd.read_lsh_index(spark, path)  # retry: discard staging, redo
-    assert out.count() == n  # every row survived the crash window
-    cur = os.path.join(
-        path, open(os.path.join(path, "_CURRENT")).read().strip()
-    )
-    gen_parquets = sorted(f for f in os.listdir(cur) if f.endswith(".parquet"))
-    assert gen_parquets == parquets  # complete generation, not the partial one
-    assert not [f for f in os.listdir(path) if f.endswith(".parquet")]
-
-
-def test_lsh_migration_crash_after_publish_cleans_lazily(spark, tmp_path):
-    """Crash after the pointer swap but before root-file cleanup: the
-    published generation is complete (readers fine); the next touch
-    removes the committed (same-inode) root leftovers and leaves any
-    FOREIGN root file untouched."""
-    import os
-
-    from options_data_pipeline_spark.functions import dedupe as dd
-
-    path, n = _flat_lsh_layout(spark, tmp_path)
-    cur = dd._lsh_current(path)  # full migration incl. cleanup
-    assert cur is not None
-    gen_parquets = [f for f in os.listdir(cur) if f.endswith(".parquet")]
-    # simulate the crash window: re-create a committed root leftover...
-    leftover = gen_parquets[0]
-    os.link(os.path.join(cur, leftover), os.path.join(path, leftover))
-    # ...and a foreign root file that is NOT part of the generation
-    foreign = os.path.join(path, "part-foreign-00000.parquet")
-    with open(foreign, "wb") as f:
-        f.write(b"not ours")
-
-    assert dd._lsh_current(path) == cur  # idempotent re-touch
-    assert not os.path.exists(os.path.join(path, leftover))  # cleaned
-    assert os.path.exists(foreign)  # never deletes what it didn't commit
-    assert dd.read_lsh_index(spark, path).count() == n
+    out = dd.build_lsh_index(df.filter("doc_id < 2"), path, overwrite=True)
+    assert out.count() == 2
+    assert dd.read_lsh_index(spark, path).count() == 2
+    assert set(flat) <= set(os.listdir(path))  # foreign files untouched
 
 
 def test_repetition_char_stats_hand_computed_single_tokenize(spark):

@@ -27,18 +27,13 @@ def main() -> None:
     min_ms = float(sys.argv[1]) if len(sys.argv) > 1 else 100.0
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("construct-survey")
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
     qs = registry.queries()
     qs["buffer_stats"](spark, sf_dir).write.format("noop").mode("overwrite").save()
     out = []
     for name in HEADLINE:
-        j0 = len(tracker.getJobIdsForGroup() or [])
         t0 = time.perf_counter()
         qs[name](spark, sf_dir)
         dt = (time.perf_counter() - t0) * 1000
-        # eager builders run jobs during construction; annotate via the
-        # all-jobs counter (group-less) — crude but enough to flag them
         out.append((round(dt, 1), name))
         _clear_state(spark)
     out.sort(reverse=True)

@@ -65,7 +65,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from options_data_pipeline_spark.functions.similarity import (  # noqa: E402
-    _kmeans_current,
     append_kmeans_index,
     audit_kmeans_index,
     build_kmeans_index,
@@ -81,6 +80,7 @@ from options_data_pipeline_spark.functions.text import (  # noqa: E402
     span_cut_list,
 )
 from options_data_pipeline_spark.session import get_spark  # noqa: E402
+from options_data_pipeline_spark.sources import store  # noqa: E402
 
 
 def _docs(spark, ids, texts):
@@ -179,7 +179,7 @@ def soak_ivf(spark, cycles: int, workdir: str) -> dict:
                 # modes, so k itself is too small. The remedy is a full
                 # retrain at a GROWN k (doubled, capped), from the
                 # stored corpus; the audit after it must clear.
-                cur = _kmeans_current(path)
+                cur = store.current(path)
                 corpus = spark.read.parquet(os.path.join(cur, "corpus")).select(
                     "vec_id", "embedding"
                 ).localCheckpoint(eager=True)
@@ -199,7 +199,7 @@ def soak_ivf(spark, cycles: int, workdir: str) -> dict:
             stats["noops"] += 1
         # build invariant after every cycle: stored assignment equals the
         # one-shot assignment under the PUBLISHED centroid table
-        cur = _kmeans_current(path)
+        cur = store.current(path)
         stored = spark.read.parquet(os.path.join(cur, "corpus"))
         cents = [
             r.centroid
@@ -264,7 +264,7 @@ def hotcell_main() -> int:
         assert rounds <= k, f"rounds {rounds} exceeded the <=k drafting bound"
 
         # build invariant at scale, checked distributed (no driver sets)
-        cur = _kmeans_current(path)
+        cur = store.current(path)
         stored = spark.read.parquet(os.path.join(cur, "corpus"))
         cents = [
             r.centroid
@@ -460,9 +460,6 @@ def soak_corpus_index_pair(spark, cycles: int, workdir: str, kind: str) -> dict:
     PARITY: the served index equals a from-scratch build over every doc
     the corpus holds. ``kind`` ∈ {"bm25_pair", "pos_gram_pair"}."""
     from options_data_pipeline_spark.streaming import index_ingest as ii
-    from options_data_pipeline_spark.streaming.cdc_stream import (
-        _current_version_dir,
-    )
 
     corpus = os.path.join(workdir, f"{kind}_corpus")
     index = os.path.join(workdir, f"{kind}_index")
@@ -479,9 +476,9 @@ def soak_corpus_index_pair(spark, cycles: int, workdir: str, kind: str) -> dict:
         batch = _docs(spark, ids, texts)
         assert fn(batch, corpus, index) == 2, f"{kind} cycle {c}: ingest"
         stats["ingests"] += 1
-        v = _current_version_dir(index)
+        v = store.current(index)
         assert fn(batch, corpus, index) == 0, f"{kind} cycle {c}: replay"
-        assert _current_version_dir(index) == v, f"{kind} cycle {c}: replay republished"
+        assert store.current(index) == v, f"{kind} cycle {c}: replay republished"
         stats["replays_zero"] += 1
         for i, t in zip(ids, texts):
             corpus_rows[i] = t

@@ -135,6 +135,25 @@ def _nodes(plan: str, node: str) -> int:
     return len(re.findall(rf"^\(\d+\) {node}\b", plan, re.MULTILINE))
 
 
+def package_digest(repo_root: str) -> str:
+    """sha256 over the sorted relative paths and bytes of every package
+    ``.py`` file. A commit cannot stamp its own git hash, but it can carry
+    this; tools/round_close.py recomputes it to prove the audit ran
+    against the committed code."""
+    import glob
+    import hashlib
+
+    h = hashlib.sha256()
+    pattern = os.path.join(repo_root, "options_data_pipeline_spark", "**", "*.py")
+    for p in sorted(glob.glob(pattern, recursive=True)):
+        with open(p, "rb") as f:
+            data = f.read()
+        rel = os.path.relpath(p, repo_root).replace(os.sep, "/")
+        h.update(f"{rel}\0{len(data)}\0".encode())
+        h.update(data)
+    return h.hexdigest()
+
+
 def audit_one(name: str, plan: str) -> dict:
     return {
         "cartesian": plan.count("CartesianProduct"),
@@ -187,8 +206,10 @@ def main() -> int:
     # state it ran against, so a query landing AFTER the last audit run is
     # detectable (the round-10 slip: dedup_cluster_stats shipped in the
     # final commit, after the last audit, leaving the committed "0 hard
-    # failures" claim stale). A clean close-out requires PLAN_AUDIT.json
-    # committed with git_dirty=false and query count == registry size.
+    # failures" claim stale). git_head is the commit the audit ran ON,
+    # never the one that commits the artifact; package_sha256 is what a
+    # clean close-out checks (tools/round_close.py recomputes it), plus
+    # query count == registry size.
     import subprocess
 
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -205,7 +226,10 @@ def main() -> int:
         )
     except Exception:  # noqa: BLE001
         head, dirty = "unknown", True
-    artifact = dict(summary, git_head=head, git_dirty=dirty)
+    artifact = dict(
+        summary, git_head=head, git_dirty=dirty,
+        package_sha256=package_digest(repo_root),
+    )
     with open(os.path.join(repo_root, "PLAN_AUDIT.json"), "w") as fh:
         json.dump(artifact, fh, indent=2, sort_keys=True)
     spark.stop()

@@ -9,7 +9,9 @@ Usage: python tools/round_close.py [--collect-tests]
   --collect-tests  also run `pytest --collect-only -q` for the test
                    count (slower; omitted = "n/a (pass --collect-tests)")
 
-Prints a markdown table followed by one JSON line.
+Prints a markdown table followed by one JSON line. Exits 1 when
+PLAN_AUDIT.json's package_sha256 differs from the package on disk (the
+audit is stale: re-run tools/plan_audit.py last).
 """
 
 from __future__ import annotations
@@ -75,7 +77,10 @@ def main() -> int:
             f" pinned_over_budget={p.get('pinned_over_budget')}"
         )
 
+    from tools.plan_audit import package_digest
+
     audit = _load("PLAN_AUDIT.json") or {}
+    audit_fresh = audit.get("package_sha256") == package_digest(REPO)
     git_head = subprocess.run(
         ["git", "-C", REPO, "rev-parse", "--short", "HEAD"],
         capture_output=True, text=True,
@@ -84,7 +89,8 @@ def main() -> int:
         f"{audit.get('queries', '?')} plans, "
         f"{len(audit.get('hard_failures') or [])} hard failures "
         f"(audited at {audit.get('git_head', '?')[:8]}, dirty={audit.get('git_dirty')}; "
-        f"HEAD now {git_head})"
+        f"HEAD now {git_head}; package sha256 "
+        f"{'matches' if audit_fresh else 'DIFFERS ← re-run tools/plan_audit.py'})"
     )
 
     tests_line = "n/a (pass --collect-tests)"
@@ -119,9 +125,10 @@ def main() -> int:
         "correctness_sf01": _correctness("CORRECTNESS_sf01_full.json"),
         "r1_subset_s": r1_subset,
         "plan_hard_failures": len(audit.get("hard_failures") or []),
+        "plan_audit_fresh": audit_fresh,
         "git_head": git_head,
     }))
-    return 0
+    return 0 if audit_fresh else 1
 
 
 if __name__ == "__main__":
