@@ -50,8 +50,9 @@ def gap_fill(
     if cache:
         # The cache serves the scaffold pass + the join pass within THIS
         # plan. Long-lived callers must either pass cache=False (the
-        # streaming densifier does) or collect the handle via ``handles``
-        # and unpersist after the consuming action — a cache left behind
+        # streaming densifier and the registry's lazy ``gap_fill`` query
+        # do) or collect the handle via ``handles`` and unpersist after
+        # the consuming action (``run_batch`` does) — a cache left behind
         # per invocation accumulates storage for the session's life.
         candles = candles.cache()
         if handles is not None:

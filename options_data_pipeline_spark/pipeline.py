@@ -5,8 +5,11 @@ tick ingest → per-window freeze/finalize → gap-fill → ATR → id/segment
 enrichment → dedup write → state snapshot — collapses into two Spark
 programs:
 
- - :func:`run_batch` — one declarative DataFrame chain over a day (or any
-   range) of stored ticks, ending in an idempotent append.
+ - :func:`run_batch` — one DataFrame chain over a day (or any range) of
+   stored ticks, materialized once and read by three consumers: the
+   idempotent append's bound probe and anti-join delta, and the
+   ``atr_state`` snapshot (the reference likewise writes ``market_data``
+   and ``atr_state`` from one in-memory result).
    This is the "DataFrame transforms + scheduled jobs" shape from
    BASELINE.json: a scheduler triggers it per session; the calendar gate
    is a job predicate, not dataflow.
@@ -74,7 +77,13 @@ def run_batch(
     instruments: DataFrame | None = None,
 ) -> int:
     """The per-session batch job. Returns rows written (idempotent:
-    re-running the same session writes 0)."""
+    re-running the same session writes 0).
+
+    The enriched chain is materialized once (cached) and read by three
+    consumers: the sink's bound probe, its anti-join delta and the
+    ``atr_summary`` snapshot — so the gap-fill scaffold, TR window and
+    ATR grouped-map run once per session, not once per action. Every
+    cache is released on return, also when a write raises."""
     if calendar is not None and "session_open" in calendar.columns:
         # full per-date gate: holidays drop, special sessions (Muhurat)
         # override the default hours AND trade on otherwise-closed days
@@ -86,14 +95,18 @@ def run_batch(
             ticks = calendar_gate(ticks, calendar)
         ticks = in_session(ticks, open_hm, close_hm)
     handles: list[DataFrame] = []
-    enriched = enrich_candles(
-        ticks, interval, interval_seconds, symbols, instruments, cache_handles=handles
-    )
-    written = idempotent_append_batch(enriched, sink_path)
-    if state_path is not None:
-        overwrite_snapshot(atr_summary(enriched), state_path)
-    for h in handles:
-        h.unpersist()
+    try:
+        enriched = enrich_candles(
+            ticks, interval, interval_seconds, symbols, instruments,
+            cache_handles=handles,
+        ).cache()
+        handles.append(enriched)
+        written = idempotent_append_batch(enriched, sink_path)
+        if state_path is not None:
+            overwrite_snapshot(atr_summary(enriched), state_path)
+    finally:
+        for h in handles:
+            h.unpersist()
     return written
 
 

@@ -13,9 +13,9 @@ The reference's retry ladder (5× exp backoff) and fallback WAL are
 subsumed by Spark task retries + the streaming WAL; the ``atr_state``
 full-overwrite snapshot (S4) maps to ``mode("overwrite")``.
 
-Scale: the sink read for dedup is partition-pruned by the batch's window
-range — never a full-sink scan (the reference's Q2 reads the whole sheet
-per window, SURVEY.md §7 risk 5).
+Scale: the sink read for dedup is pruned by the batch's window range —
+never a full-sink scan (the reference's Q2 reads the whole sheet per
+window, SURVEY.md §7 risk 5); an empty batch does not read the sink.
 """
 
 from __future__ import annotations
@@ -53,51 +53,66 @@ def idempotent_append_batch(
     when ``prune_col`` is given; when ``partition_by`` includes a ``date``
     column the prune bounds also become partition filters so the dedup
     read touches only the batch's date partitions (never a full-sink
-    scan)."""
+    scan). An empty batch returns 0 before the sink is read.
+
+    ``batch``'s plan runs once for the bound probe and once for the
+    delta unless the caller persists it (``run_batch`` does); a batch
+    that is already cached is read from that cache and left cached."""
     spark = batch.sparkSession
     delta = batch
     if sink_has_data(sink_path):
-        sink = spark.read.parquet(sink_path)
+        bounds = None
         if prune_col is not None:
             bounds = batch.agg(
-                F.min(prune_col).alias("lo"), F.max(prune_col).alias("hi")
+                F.count(F.lit(1)).alias("n"),
+                F.min(prune_col).alias("lo"),
+                F.max(prune_col).alias("hi"),
             ).collect()[0]
-            if bounds.lo is not None:
+            if bounds.n == 0:
+                return 0
+        sink = spark.read.parquet(sink_path)
+        if bounds is not None and bounds.lo is not None:
+            sink = sink.filter(
+                (F.col(prune_col) >= bounds.lo) & (F.col(prune_col) <= bounds.hi)
+            )
+            if "date" in partition_by:
                 sink = sink.filter(
-                    (F.col(prune_col) >= bounds.lo) & (F.col(prune_col) <= bounds.hi)
-                )
-                if "date" in partition_by:
-                    sink = sink.filter(
-                        F.col("date").between(
-                            F.lit(bounds.lo).cast("date"),
-                            F.lit(bounds.hi).cast("date"),
-                        )
+                    F.col("date").between(
+                        F.lit(bounds.lo).cast("date"),
+                        F.lit(bounds.hi).cast("date"),
                     )
+                )
         delta = batch.join(sink.select(id_col), id_col, "left_anti")
-    delta = delta.cache()
-    n = delta.count()
-    if n:
-        # Atomic-ish append: write the delta to a SIBLING staging dir,
-        # then rename completed part-files into the sink one by one.
-        # A crash mid-write leaves only the staging dir (invisible to sink
-        # reads — no half-written parquet ever corrupts the sink); a crash
-        # mid-promotion leaves some files moved (their ids dedup on
-        # replay) and some staged (invisible, so the replay's anti-join
-        # re-emits exactly those rows). Rename is atomic per file on a
-        # real filesystem; object stores should swap this for a
-        # manifest-commit (or a Delta/Iceberg MERGE) — same contract.
-        import uuid
+    own_cache = not delta.is_cached
+    if own_cache:
+        delta = delta.cache()
+    try:
+        n = delta.count()
+        if n:
+            # Atomic-ish append: write the delta to a SIBLING staging
+            # dir, then rename completed part-files into the sink one by
+            # one. A crash mid-write leaves only the staging dir
+            # (invisible to sink reads — no half-written parquet ever
+            # corrupts the sink); a crash mid-promotion leaves some files
+            # moved (their ids dedup on replay) and some staged
+            # (invisible, so the replay's anti-join re-emits exactly
+            # those rows). Rename is atomic per file on a real
+            # filesystem; object stores should swap this for a
+            # manifest-commit (or a Delta/Iceberg MERGE) — same contract.
+            import uuid
 
-        staging = f"{sink_path.rstrip('/')}.staging-{uuid.uuid4().hex[:12]}"
-        try:
-            writer = delta.write.mode("overwrite")
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.parquet(staging)
-            _promote_staged(staging, sink_path)
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
-    delta.unpersist()
+            staging = f"{sink_path.rstrip('/')}.staging-{uuid.uuid4().hex[:12]}"
+            try:
+                writer = delta.write.mode("overwrite")
+                if partition_by:
+                    writer = writer.partitionBy(*partition_by)
+                writer.parquet(staging)
+                _promote_staged(staging, sink_path)
+            finally:
+                shutil.rmtree(staging, ignore_errors=True)
+    finally:
+        if own_cache:
+            delta.unpersist()
     return n
 
 

@@ -65,3 +65,20 @@ def test_expected_universe_scaffold(spark):
     out = gap_fill(df, 300, symbols=symbols).collect()
     # B has no prior close ever → all its slots unfillable → only A rows
     assert {r.symbol for r in out} == {"A"}
+
+
+def test_registry_gap_fill_leaves_no_cache(spark, monkeypatch):
+    """The registry's lazy ``gap_fill`` query has no caller to unpersist
+    a cache, so running it must leave none behind."""
+    from options_data_pipeline_spark import registry
+
+    ticks = spark.createDataFrame(
+        [("A", 10.0, W0, 1), ("A", 11.0, datetime(2024, 1, 1, 11, 15), 2)],
+        "symbol string, price double, ts timestamp, event_id long",
+    )
+    monkeypatch.setattr(registry, "load_ticks", lambda spark, sf_dir: ticks)
+    spark.catalog.clearCache()
+    out = registry.queries()["gap_fill"](spark, "unused")
+    out.write.format("noop").mode("overwrite").save()
+    assert [r.tick_count for r in out.orderBy("window_start").collect()] == [1, 0, 1]
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -54,6 +54,64 @@ def test_batch_pipeline_idempotent_rerun(spark, tmpdir):
     assert spark.read.parquet(sink).count() == 8
 
 
+def cache_is_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def plan_nodes(plan):
+    """Node names of a physical plan, descending through adaptive plans
+    but not into a cached relation's own plan."""
+    name = plan.nodeName()
+    if name == "AdaptiveSparkPlan":
+        return plan_nodes(plan.executedPlan())
+    kids = plan.children()
+    return [name] + [n for i in range(kids.size()) for n in plan_nodes(kids.apply(i))]
+
+
+def test_batch_pipeline_enriches_once(spark, tmpdir, monkeypatch):
+    """The bound probe, the anti-join delta and the ATR snapshot all read
+    one cached copy of the enriched chain; nothing stays cached after."""
+    from options_data_pipeline_spark import pipeline
+
+    real_append, real_snapshot = pipeline.idempotent_append_batch, pipeline.overwrite_snapshot
+    seen = []
+
+    def append(batch, sink_path):
+        seen.append(("append", batch.is_cached))
+        return real_append(batch, sink_path)
+
+    def snapshot(df, path):
+        seen.append(("snapshot", plan_nodes(df._jdf.queryExecution().executedPlan())))
+        real_snapshot(df, path)
+
+    monkeypatch.setattr(pipeline, "idempotent_append_batch", append)
+    monkeypatch.setattr(pipeline, "overwrite_snapshot", snapshot)
+    spark.catalog.clearCache()
+    sink, state = tmpdir + "/market", tmpdir + "/state"
+    # an empty sink (delta = the batch itself), then a non-empty one
+    assert run_batch(session_ticks(spark), sink, state_path=state) == 8
+    assert cache_is_empty(spark)
+    assert run_batch(session_ticks(spark, datetime(2024, 1, 8)), sink, state_path=state) == 8
+    assert cache_is_empty(spark)
+    assert [k for k, _ in seen] == ["append", "snapshot"] * 2
+    for kind, got in seen:
+        if kind == "append":
+            assert got
+        else:
+            assert "InMemoryTableScan" in got
+            assert "FlatMapGroupsInPandas" not in got
+
+
+def test_batch_pipeline_failed_write_releases_caches(spark, tmpdir):
+    """A snapshot write that raises leaves no cache behind."""
+    blocker = tmpdir + "/blocker"
+    open(blocker, "w").close()
+    spark.catalog.clearCache()
+    with pytest.raises(Exception):
+        run_batch(session_ticks(spark), tmpdir + "/market", state_path=blocker + "/state")
+    assert cache_is_empty(spark)
+
+
 def test_batch_pipeline_special_session_calendar(spark, tmpdir):
     """run_batch with a load_calendar-shaped frame (session columns) keeps
     a Muhurat-style evening session on a holiday and drops the holiday's

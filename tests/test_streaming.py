@@ -445,6 +445,49 @@ def test_idempotent_sink_replay_writes_nothing(spark, tmpdir):
     assert spark.read.parquet(sink).count() == 3
 
 
+def test_idempotent_sink_empty_batch_skips_sink_read(spark, tmpdir, monkeypatch):
+    """An empty batch returns 0 without reading the sink; a non-empty
+    batch whose prune values are all NULL still anti-joins the whole
+    sink."""
+    from pyspark.sql import DataFrameReader
+
+    sink = tmpdir + "/sink"
+    base = datetime(2024, 1, 1, 9, 15)
+    batch = with_row_id(
+        spark.createDataFrame([("A", base, 1.0, 2.0, 0.5, 1.5, 3)], CANDLE_SCHEMA)
+    )
+    assert idempotent_append_batch(batch, sink) == 1
+    real_parquet, reads = DataFrameReader.parquet, []
+
+    def counting_parquet(self, *paths, **kw):
+        reads.append(paths)
+        return real_parquet(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counting_parquet)
+    assert idempotent_append_batch(batch.filter(F.lit(False)), sink) == 0
+    assert reads == []
+    null_bounds = batch.withColumn("window_start", F.lit(None).cast("timestamp"))
+    assert idempotent_append_batch(null_bounds, sink) == 0  # id already there
+    assert len(reads) == 1
+
+
+def test_sink_failed_append_releases_delta_cache(spark, tmpdir, monkeypatch):
+    """A write that raises leaves the delta unpersisted."""
+    from options_data_pipeline_spark.streaming import sink as sink_mod
+
+    def boom(staging, sink_path):
+        raise RuntimeError("crash before promotion")
+
+    monkeypatch.setattr(sink_mod, "_promote_staged", boom)
+    batch = spark.createDataFrame([("a", 1.0)], "id string, v double").withColumn(
+        "window_start", F.lit("2024-01-01 09:15:00").cast("timestamp")
+    )
+    spark.catalog.clearCache()
+    with pytest.raises(RuntimeError):
+        idempotent_append_batch(batch, tmpdir + "/sink")
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_atr_update_handles_multi_chunk_out_of_order_groups():
     """applyInPandasWithState hands a group to _atr_update as SEVERAL
     Arrow chunks when the trigger's rows exceed maxRecordsPerBatch, in
