@@ -8,8 +8,9 @@ analysis, multimodal plumbing).
 
 Design stance (SURVEY.md §7):
  - batch-first DataFrame engine, streaming twin where semantics demand it
- - every operator a native Column expression except the single stateful
-   pandas-UDF island (Wilder ATR)
+ - every batch operator a native Column/SQL expression — recursions
+   (Wilder ATR, EMA-family indicators) are per-symbol SQL folds
+   (operators/fold.py); the streaming ATR keeps applyInPandasWithState
  - dims broadcast, facts partitioned by date, dedup via anti-join / MERGE
 """
 

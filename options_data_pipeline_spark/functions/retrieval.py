@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..sources import store
+from ..sources.local import local_frame
 
 K1 = 1.2
 B = 0.75
@@ -189,7 +190,8 @@ def merge_bm25_index(batch: DataFrame, path: str, text_col: str = "text") -> dic
         "overwrite"
     ).parquet(os.path.join(vdir, "df"))
     d = stats_d.collect()[0]
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(s["n_docs"] + d["n_docs"], s["total_len"] + d["total_len"])],
         "n_docs long, total_len long",
     ).coalesce(1).write.mode("overwrite").parquet(os.path.join(vdir, "stats"))
@@ -241,7 +243,7 @@ def bm25_score_indexed(spark, path: str, terms: list[str]) -> DataFrame:
     grid before the per-doc sum), so scores are bit-identical to the
     in-query form for the same corpus (parity-tested)."""
     postings, df, stats, _ = read_bm25_index(spark, path)
-    qterms = spark.createDataFrame([(t,) for t in terms], "tok string")
+    qterms = local_frame(spark, [(t,) for t in terms], "tok string")
     touched = postings.join(F.broadcast(qterms), "tok")
     dfq = df.join(F.broadcast(qterms), "tok")
     st = stats.select(

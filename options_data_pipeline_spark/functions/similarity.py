@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..sources import store
+from ..sources.local import local_frame
 from .loop_sql import (
     dot_sql,
     sign_bit_sql,
@@ -779,8 +780,8 @@ def build_kmeans_index(
 
 
 def _write_centroids(spark, cents: list[list[float]], vdir: str) -> None:
-    spark.createDataFrame(
-        list(enumerate(cents)), "cell int, centroid array<double>"
+    local_frame(
+        spark, list(enumerate(cents)), "cell int, centroid array<double>"
     ).coalesce(1).write.mode("overwrite").parquet(os.path.join(vdir, "centroids"))
 
 
@@ -1468,7 +1469,7 @@ def kcenter_coreset(
                 (int(far.vid), list(far.v), float(far.nrm), float(far.d))
             )
     rows = [(i, cid, d) for i, (cid, _v, _n, d) in enumerate(chosen)]
-    return spark.createDataFrame(rows, "rank long, vec_id long, sel_dist double")
+    return local_frame(spark, rows, "rank long, vec_id long, sel_dist double")
 
 
 def mmr_topk(
@@ -1563,7 +1564,8 @@ def mmr_topk(
         (i + 1, cid, r, ms, mm)
         for i, (cid, _v, _n, r, ms, mm) in enumerate(chosen)
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "sel_rank long, vec_id long, relevance double, max_sim double, "
         "mmr_score double",

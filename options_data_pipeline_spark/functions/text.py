@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..sources import store
+from ..sources.local import local_frame
 
 # Stopword marker lists for the n-gram/stopword language-ID heuristic.
 # Deliberately tiny + deterministic so the oracle SQL can mirror them.
@@ -1405,7 +1406,8 @@ def bpe_token_counts(
     Output: (doc_id, n_words, n_bpe_tokens)."""
     spark = docs.sparkSession
     _merges, states = bpe_learn_merges(docs, n_merges, text_col)
-    mapping = spark.createDataFrame(
+    mapping = local_frame(
+        spark,
         [(w, len(s.strip("~").split("~~"))) for w, s in states.items()],
         "w string, n_bpe int",
     )

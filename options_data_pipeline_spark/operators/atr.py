@@ -10,12 +10,11 @@ Reference semantics (``modules/atr/atr_engine.py:134-192``, spec
  - negative ATR clamped to 0
 
 The recursion is NOT expressible as a built-in Spark window aggregate
-(recursive EWMA with a mean-seeded init), so this is the engine's single
-pandas-UDF island: ``groupBy(symbol).applyInPandas`` (SURVEY.md §4).
-Per-key series are tiny relative to key cardinality (75 candles/day/ticker
-in the reference), so at 100 TB the grouped-map parallelizes across
-symbols×days and each Arrow batch stays small; the shuffle on symbol is
-shared with the TR window partitioning.
+(recursive EWMA with a mean-seeded init), so it runs as a per-symbol
+fold in Spark SQL (operators/fold.py): one shuffle on symbol — shared
+with the TR window partitioning — and no Python worker. Per-key series
+are tiny relative to key cardinality (75 candles/day/ticker in the
+reference), so at 100 TB the fold parallelizes across symbols×days.
 
 Deviation from the reference (documented, deliberate): the reference
 rounds ATR to 4 dp at every recursive step with Python banker's rounding
@@ -25,33 +24,12 @@ only at the display edge — SURVEY.md §5 / FIXTURES.md §C rationale.
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from .fold import fold_per_key, wilder
 
 ATR_PERIOD = 14  # reference config/settings.py:44
-
-
-def _wilder(trs, period: int):
-    """Sequential Wilder recursion over one symbol's ordered TR series."""
-    out = []
-    prev_atr = None
-    acc = 0.0
-    for i, tr in enumerate(trs):
-        tr = float(tr)
-        if prev_atr is None:
-            acc += tr
-            if i + 1 == period:
-                prev_atr = acc / period
-                out.append(max(prev_atr, 0.0))
-            else:
-                out.append(None)
-        else:
-            prev_atr = (prev_atr * (period - 1) + tr) / period
-            out.append(max(prev_atr, 0.0))
-    return out
 
 
 def with_wilder_atr(
@@ -60,20 +38,23 @@ def with_wilder_atr(
     symbol_col: str = "symbol",
     order_col: str = "window_start",
 ) -> DataFrame:
-    """candles(symbol, window_start, ..., tr) → + atr column (nullable)."""
-    in_schema = candles_with_tr.schema
-    cols = [f.name for f in in_schema.fields]
-    out_schema = T.StructType(list(in_schema.fields) + [T.StructField("atr", T.DoubleType())])
+    """candles(symbol, window_start, ..., tr) → + atr column (nullable).
 
-    def compute(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col).reset_index(drop=True)
-        pdf["atr"] = _wilder(pdf["tr"].tolist(), period)
-        return pdf
-
-    return (
-        candles_with_tr.select(cols)
-        .groupBy(symbol_col)
-        .applyInPandas(compute, schema=out_schema)
+    Per symbol in window order: NULL for the first ``period - 1`` rows,
+    the mean of the first ``period`` TRs, then ``(prev·(period−1) + tr) /
+    period``, clamped at 0 as Python's ``max(atr, 0.0)``."""
+    return fold_per_key(
+        candles_with_tr,
+        state=[("i", "INT", "0"), ("acc", "DOUBLE", "0D"), ("prev", "DOUBLE", "NULL")],
+        steps=[{
+            "i": "s.i + 1",
+            "acc": "s.acc + x.tr",
+            "prev": wilder(period, "s.i + 1", "s.acc", "s.prev", "x.tr"),
+        }],
+        emit={"atr": "IF(0D > s.prev, 0D, s.prev)"},
+        keep=candles_with_tr.columns,
+        key=symbol_col,
+        order=order_col,
     )
 
 

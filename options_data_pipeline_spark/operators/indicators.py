@@ -1,16 +1,21 @@
-"""Rolling technical indicators over candles (reference domain: the
-options/TA pipeline's enrichment layer — ATR lives in operators/atr.py;
-these are the window-frame siblings).
+"""Technical indicators over candles (reference domain: the options/TA
+pipeline's enrichment layer — ATR lives in operators/atr.py).
 
-All plain window functions over (symbol ORDER BY window_start) ROWS
-frames — per-symbol partitioned, no Python, exact DuckDB twins. At 100 TB
-the shuffle is the same symbol partitioning every other enrichment step
-already uses (one partitioning reused across TR/ATR/indicators)."""
+Donchian, SMA, Bollinger, stochastic and OBV are plain window functions
+over (symbol ORDER BY window_start) ROWS frames. EMA, RSI, MACD, Keltner,
+Heikin-Ashi, ADX and Holt are sequential recursions with no window form;
+they run as per-symbol Spark SQL folds (operators/fold.py), each step the
+op-for-op sequence of its DuckDB recursive-CTE twin, so outputs compare
+bit-exact unrounded. No Python worker either way. At 100 TB the shuffle
+is the same symbol partitioning every other enrichment step already uses
+(one partitioning reused across TR/ATR/indicators)."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .fold import ROWS, fold_per_key, py_max, sma_seeded, wilder
 
 
 def donchian_channels(candles: DataFrame, n: int = 20) -> DataFrame:
@@ -139,99 +144,57 @@ def obv(candles: DataFrame) -> DataFrame:
     )
 
 
-def _ema_series(values, n: int):
-    """Sequential EMA recursion over one symbol's ordered closes: SMA(n)
-    seed, then e_t = e + (x − e)·α with α = 2/(n+1). Pure Python floats,
-    op-for-op mirrored by the recursive-CTE oracle (each step is sub→
-    mul→add — IEEE-deterministic, no rounding grid needed; only the seed
-    average's accumulation order has to match, which sequential left-fold
-    on both sides guarantees)."""
-    alpha = 2.0 / (n + 1)
-    out, acc, prev = [], 0.0, None
-    for i, x in enumerate(values):
-        x = float(x)
-        if prev is None:
-            acc += x
-            if i + 1 == n:
-                prev = acc / n
-                out.append(prev)
-            else:
-                out.append(None)
-        else:
-            prev = prev + (x - prev) * alpha
-            out.append(prev)
-    return out
+def _ema_step(n: int, acc: str, prev: str, x: str) -> str:
+    """EMA update over the row count ``s.i + 1``: SMA(n) seed, then
+    e + (x − e)·α with α = 2/(n+1) — sub→mul→add, as the oracle's CTE."""
+    return sma_seeded(n, "s.i + 1", acc, x, f"{prev} + ({x} - {prev}) * (2D / {n + 1})")
 
 
-def _rsi_series(values, n: int):
-    """Sequential Wilder RSI over one symbol's ordered closes: deltas
-    split into gains/losses, avg gain/loss seeded as the plain mean of
-    the first n deltas, then Wilder-smoothed ((a·(n−1)+g)/n); RSI =
-    100 − 100/(1+rs), with the all-gain edge (avg loss = 0) pinned to
-    100. Same op sequence as the oracle's recursive CTE."""
-    out, prev = [None], None  # first row has no delta
-    gains, losses, ag, al = 0.0, 0.0, None, None
-    for i in range(1, len(values)):
-        d = float(values[i]) - float(values[i - 1])
-        g = d if d > 0 else 0.0
-        l = -d if d < 0 else 0.0
-        if ag is None:
-            gains += g
-            losses += l
-            if i == n:
-                ag, al = gains / n, losses / n
-                out.append(100.0 if al == 0.0 else 100.0 - 100.0 / (1.0 + ag / al))
-            else:
-                out.append(None)
-        else:
-            ag = (ag * (n - 1) + g) / n
-            al = (al * (n - 1) + l) / n
-            out.append(100.0 if al == 0.0 else 100.0 - 100.0 / (1.0 + ag / al))
-    return out
-
-
-def _recursive_per_symbol(candles: DataFrame, out_col: str, series_fn, n: int):
-    """Shared applyInPandas island for the sequentially-recursive
-    indicators (same shape as operators/atr.py::with_wilder_atr — the one
-    justified pandas island class: Wilder/EMA recursions have no
-    closed-form window expression). Groups by symbol, sorts within the
-    group, runs the pure-Python fold. At scale: one shuffle at symbol
-    grain, group size = candles per symbol (bounded by the calendar)."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    def compute(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("window_start").reset_index(drop=True)
-        pdf[out_col] = pd.Series(
-            series_fn(pdf["close"].tolist(), n), dtype="float64"
-        )
-        return pdf
-
-    out_schema = T.StructType(
-        [
-            T.StructField("symbol", T.StringType()),
-            T.StructField("window_start", T.TimestampType()),
-            T.StructField("close", T.DoubleType()),
-            T.StructField(out_col, T.DoubleType()),
-        ]
-    )
-    return (
-        candles.select("symbol", "window_start", "close")
-        .groupBy("symbol")
-        .applyInPandas(compute, schema=out_schema)
-    )
+_CLOSE_COLS = ["symbol", "window_start", "close"]
 
 
 def ema(candles: DataFrame, n: int = 12) -> DataFrame:
     """Exponential moving average of the close per symbol (α = 2/(n+1),
     SMA seed, NULL warmup)."""
-    return _recursive_per_symbol(candles, f"ema_{n}", _ema_series, n)
+    return fold_per_key(
+        candles.select(*_CLOSE_COLS),
+        state=[("i", "INT", "0"), ("acc", "DOUBLE", "0D"), ("e", "DOUBLE", "NULL")],
+        steps=[{
+            "i": "s.i + 1",
+            "acc": "s.acc + x.close",
+            "e": _ema_step(n, "s.acc", "s.e", "x.close"),
+        }],
+        emit={f"ema_{n}": "s.e"},
+        keep=_CLOSE_COLS,
+    )
 
 
 def rsi(candles: DataFrame, n: int = 14) -> DataFrame:
-    """Wilder RSI of the close per symbol (NULL warmup; all-gain edge
-    pinned to 100)."""
-    return _recursive_per_symbol(candles, f"rsi_{n}", _rsi_series, n)
+    """Wilder RSI of the close per symbol: deltas split into gains and
+    losses, both averages seeded as the plain mean of the first n deltas
+    and then Wilder-smoothed; RSI = 100 − 100/(1+ag/al), with the
+    all-gain edge (avg loss = 0) pinned to 100. NULL warmup (the first
+    row has no delta)."""
+    d = "(x.close - s.pc)"
+    gain, loss = f"IF({d} > 0, {d}, 0D)", f"IF({d} < 0, -{d}, 0D)"
+    return fold_per_key(
+        candles.select(*_CLOSE_COLS),
+        state=[
+            ("i", "INT", "0"), ("pc", "DOUBLE", "NULL"), ("g", "DOUBLE", "0D"),
+            ("l", "DOUBLE", "0D"), ("ag", "DOUBLE", "NULL"), ("al", "DOUBLE", "NULL"),
+        ],
+        steps=[{
+            "i": "s.i + 1",
+            "pc": "x.close",
+            # deltas seen = s.i (the first row has none)
+            "g": f"IF(s.i = 0, 0D, s.g + {gain})",
+            "l": f"IF(s.i = 0, 0D, s.l + {loss})",
+            "ag": wilder(n, "s.i", "s.g", "s.ag", gain),
+            "al": wilder(n, "s.i", "s.l", "s.al", loss),
+        }],
+        emit={f"rsi_{n}": "IF(s.al = 0D, 100D, 100D - 100D / (1D + s.ag / s.al))"},
+        keep=_CLOSE_COLS,
+    )
 
 
 def indicator_panel(candles: DataFrame, n: int = 20) -> DataFrame:
@@ -266,84 +229,52 @@ def indicator_panel(candles: DataFrame, n: int = 20) -> DataFrame:
     )
 
 
-def _macd_series(values, fast: int = 12, slow: int = 26, sig: int = 9):
-    """Sequential MACD over one symbol's ordered closes: fast/slow EMAs
-    (each SMA-seeded as in :func:`_ema_series`), MACD = fast − slow once
-    both exist, signal = EMA(sig) of the MACD stream (SMA-seeded on its
-    first ``sig`` values), histogram = MACD − signal. Every step is the
-    same sub→mul→add sequence the oracle's recursive CTEs run —
-    IEEE-deterministic, compared unrounded."""
-    af, as_, ag = 2.0 / (fast + 1), 2.0 / (slow + 1), 2.0 / (sig + 1)
-    macd_out, sig_out = [], []
-    accf = accs = accm = 0.0
-    ef = es = sg = None
-    n_macd = 0
-    for i, x in enumerate(values):
-        x = float(x)
-        if ef is None:
-            accf += x
-            if i + 1 == fast:
-                ef = accf / fast
-        else:
-            ef = ef + (x - ef) * af
-        if es is None:
-            accs += x
-            if i + 1 == slow:
-                es = accs / slow
-        else:
-            es = es + (x - es) * as_
-        if ef is not None and es is not None:
-            m = ef - es
-            macd_out.append(m)
-            n_macd += 1
-            if sg is None:
-                accm += m
-                if n_macd == sig:
-                    sg = accm / sig
-                sig_out.append(sg)
-            else:
-                sg = sg + (m - sg) * ag
-                sig_out.append(sg)
-        else:
-            macd_out.append(None)
-            sig_out.append(None)
-    return macd_out, sig_out
-
-
 def macd(
     candles: DataFrame, fast: int = 12, slow: int = 26, sig: int = 9
 ) -> DataFrame:
     """MACD(fast, slow, signal) per symbol — the composed recursive
-    indicator (two price EMAs + an EMA over their difference). One
-    pandas island computes the whole panel in a single per-symbol fold —
-    joining separate ema() frames would run three symbol-grain shuffles
-    and re-sort per branch for series that share one ordering. Same
-    island contract as :func:`_recursive_per_symbol`."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    def compute(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("window_start").reset_index(drop=True)
-        m, s = _macd_series(pdf["close"].tolist(), fast, slow, sig)
-        pdf["macd"] = pd.Series(m, dtype="float64")
-        pdf["macd_signal"] = pd.Series(s, dtype="float64")
-        pdf["macd_hist"] = pdf["macd"] - pdf["macd_signal"]
-        return pdf
-
-    out_schema = T.StructType(
-        [
-            T.StructField("symbol", T.StringType()),
-            T.StructField("window_start", T.TimestampType()),
-            T.StructField("close", T.DoubleType()),
-            T.StructField("macd", T.DoubleType()),
-            T.StructField("macd_signal", T.DoubleType()),
-            T.StructField("macd_hist", T.DoubleType()),
-        ]
+    indicator: fast/slow EMAs of the close (each SMA-seeded as in
+    :func:`ema`), MACD = fast − slow once both exist, signal = EMA(sig)
+    of the MACD stream (SMA-seeded on its first ``sig`` values),
+    histogram = MACD − signal. One fold carries the whole panel — joining
+    separate ema() frames would run three symbol-grain shuffles and
+    re-sort per branch for series that share one ordering."""
+    # MACD values so far, this row's included (s.i already counts it)
+    k = f"s.i - {max(fast, slow) - 1}"
+    m = "(s.ef - s.es)"
+    return fold_per_key(
+        candles.select(*_CLOSE_COLS),
+        state=[
+            ("i", "INT", "0"), ("fa", "DOUBLE", "0D"), ("ef", "DOUBLE", "NULL"),
+            ("sa", "DOUBLE", "0D"), ("es", "DOUBLE", "NULL"), ("ma", "DOUBLE", "0D"),
+            ("m", "DOUBLE", "NULL"), ("sg", "DOUBLE", "NULL"),
+        ],
+        steps=[
+            {
+                "i": "s.i + 1",
+                "fa": "s.fa + x.close",
+                "ef": _ema_step(fast, "s.fa", "s.ef", "x.close"),
+                "sa": "s.sa + x.close",
+                "es": _ema_step(slow, "s.sa", "s.es", "x.close"),
+            },
+            {
+                "m": m,
+                "ma": f"IF({k} < 1, 0D, s.ma + {m})",
+                "sg": sma_seeded(sig, k, "s.ma", m, f"s.sg + ({m} - s.sg) * (2D / {sig + 1})"),
+            },
+        ],
+        emit={"macd": "s.m", "macd_signal": "s.sg", "macd_hist": "s.m - s.sg"},
+        keep=_CLOSE_COLS,
     )
+
+
+def _true_range(prev_close: str) -> str:
+    """TR with Python's ``max`` tie order: high − low on a symbol's first
+    row, else max(h − l, |h − pc|, |l − pc|)."""
     return (
-        candles.select("symbol", "window_start", "close")
-        .groupBy("symbol")
-        .applyInPandas(compute, schema=out_schema)
+        f"IF(s.i = 0, x.high - x.low, "
+        + py_max("x.high - x.low", f"abs(x.high - {prev_close})", f"abs(x.low - {prev_close})")
+        + ")"
     )
 
 
@@ -352,75 +283,38 @@ def keltner_channels(
 ) -> DataFrame:
     """Keltner channels: EMA(n_ema) of the TYPICAL price ((h+l+c)/3) ±
     mult × Wilder ATR(n_atr) — the volatility envelope that uses true
-    range where Bollinger uses σ. Two sequential recursions (EMA +
-    Wilder ATR) over the SAME symbol-ordered pass, composed in ONE
-    pandas fold (the macd shared-fold pattern: one shuffle, one island,
-    both state variables carried together).
+    range where Bollinger uses σ. Both recursions advance in ONE fold
+    (the macd shared-fold pattern: one shuffle, both state variables
+    carried together).
 
     Float discipline: typical = ((h + l) + c)/3 fixed order; each
     recursion step is the op-for-op EMA/ATR sequence the recursive-CTE
     oracle mirrors; bands are mid ± mult·atr single ops — the whole
     trajectory compares bit-exact UNROUNDED (ema_12 / atr_wilder
     precedent). Bands are NULL until BOTH recursions are seeded."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    def compute(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("window_start").reset_index(drop=True)
-        h, l, c = pdf["high"].tolist(), pdf["low"].tolist(), pdf["close"].tolist()
-        alpha = 2.0 / (n_ema + 1)
-        ema_out, atr_out = [], []
-        e_acc, e_prev = 0.0, None
-        a_acc, a_prev = 0.0, None
-        prev_close = None
-        for i in range(len(c)):
-            typ = ((h[i] + l[i]) + c[i]) / 3.0
-            if e_prev is None:
-                e_acc += typ
-                e_prev_val = None
-                if i + 1 == n_ema:
-                    e_prev = e_acc / n_ema
-                    e_prev_val = e_prev
-            else:
-                e_prev = e_prev + (typ - e_prev) * alpha
-                e_prev_val = e_prev
-            ema_out.append(e_prev_val)
-            tr = (
-                h[i] - l[i]
-                if prev_close is None
-                else max(h[i] - l[i], abs(h[i] - prev_close), abs(l[i] - prev_close))
-            )
-            prev_close = c[i]
-            if a_prev is None:
-                a_acc += tr
-                a_prev_val = None
-                if i + 1 == n_atr:
-                    a_prev = a_acc / n_atr
-                    a_prev_val = a_prev
-            else:
-                a_prev = (a_prev * (n_atr - 1) + tr) / n_atr
-                a_prev_val = a_prev
-            atr_out.append(a_prev_val)
-        pdf["kc_mid"] = pd.Series(ema_out, dtype="float64")
-        atr_s = pd.Series(atr_out, dtype="float64")
-        pdf["kc_upper"] = pdf["kc_mid"] + mult * atr_s
-        pdf["kc_lower"] = pdf["kc_mid"] - mult * atr_s
-        return pdf[["symbol", "window_start", "close", "kc_mid", "kc_upper", "kc_lower"]]
-
-    out_schema = T.StructType(
-        [
-            T.StructField("symbol", T.StringType()),
-            T.StructField("window_start", T.TimestampType()),
-            T.StructField("close", T.DoubleType()),
-            T.StructField("kc_mid", T.DoubleType()),
-            T.StructField("kc_upper", T.DoubleType()),
-            T.StructField("kc_lower", T.DoubleType()),
-        ]
-    )
-    return (
-        candles.select("symbol", "window_start", "high", "low", "close")
-        .groupBy("symbol")
-        .applyInPandas(compute, schema=out_schema)
+    typ = "(((x.high + x.low) + x.close) / 3D)"
+    tr = _true_range("s.pc")
+    m = f"{float(mult)!r}D"
+    return fold_per_key(
+        candles.select("symbol", "window_start", "high", "low", "close"),
+        state=[
+            ("i", "INT", "0"), ("pc", "DOUBLE", "NULL"), ("ea", "DOUBLE", "0D"),
+            ("e", "DOUBLE", "NULL"), ("aa", "DOUBLE", "0D"), ("a", "DOUBLE", "NULL"),
+        ],
+        steps=[{
+            "i": "s.i + 1",
+            "pc": "x.close",
+            "ea": f"s.ea + {typ}",
+            "e": _ema_step(n_ema, "s.ea", "s.e", typ),
+            "aa": f"s.aa + {tr}",
+            "a": wilder(n_atr, "s.i + 1", "s.aa", "s.a", tr),
+        }],
+        emit={
+            "kc_mid": "s.e",
+            "kc_upper": f"s.e + {m} * s.a",
+            "kc_lower": f"s.e - {m} * s.a",
+        },
+        keep=_CLOSE_COLS,
     )
 
 
@@ -429,47 +323,23 @@ def heikin_ashi(candles: DataFrame) -> DataFrame:
     recursion (prev_ha_open + prev_ha_close)/2 seeded at (o₁+c₁)/2,
     ha_high/ha_low = extremes over {h, ha_open, ha_close} / {l, …} —
     the smoothing transform charting pipelines apply before trend rules.
-    One-variable recursion in the shared pandas-island shape; every step
-    is add/divide in fixed order, bit-exact vs the recursive-CTE twin."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    def compute(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("window_start").reset_index(drop=True)
-        o, h = pdf["open"].tolist(), pdf["high"].tolist()
-        l, c = pdf["low"].tolist(), pdf["close"].tolist()
-        ha_open, ha_close = [], []
-        for i in range(len(c)):
-            hc = (((o[i] + h[i]) + l[i]) + c[i]) / 4.0
-            ho = (
-                (o[i] + c[i]) / 2.0
-                if i == 0
-                else (ha_open[i - 1] + ha_close[i - 1]) / 2.0
-            )
-            ha_open.append(ho)
-            ha_close.append(hc)
-        pdf["ha_open"] = pd.Series(ha_open, dtype="float64")
-        pdf["ha_close"] = pd.Series(ha_close, dtype="float64")
-        pdf["ha_high"] = pdf[["high", "ha_open", "ha_close"]].max(axis=1)
-        pdf["ha_low"] = pdf[["low", "ha_open", "ha_close"]].min(axis=1)
-        return pdf[
-            ["symbol", "window_start", "ha_open", "ha_high", "ha_low", "ha_close"]
-        ]
-
-    out_schema = T.StructType(
-        [
-            T.StructField("symbol", T.StringType()),
-            T.StructField("window_start", T.TimestampType()),
-            T.StructField("ha_open", T.DoubleType()),
-            T.StructField("ha_high", T.DoubleType()),
-            T.StructField("ha_low", T.DoubleType()),
-            T.StructField("ha_close", T.DoubleType()),
-        ]
-    )
-    return (
-        candles.select("symbol", "window_start", "open", "high", "low", "close")
-        .groupBy("symbol")
-        .applyInPandas(compute, schema=out_schema)
+    One-variable recursion; every step is add/divide in fixed order,
+    bit-exact vs the recursive-CTE twin."""
+    return fold_per_key(
+        candles.select("symbol", "window_start", "open", "high", "low", "close"),
+        state=[("i", "INT", "0"), ("ho", "DOUBLE", "NULL"), ("hc", "DOUBLE", "NULL")],
+        steps=[{
+            "i": "s.i + 1",
+            "ho": "IF(s.i = 0, (x.open + x.close) / 2D, (s.ho + s.hc) / 2D)",
+            "hc": "(((x.open + x.high) + x.low) + x.close) / 4D",
+        }],
+        emit={
+            "ha_open": "s.ho",
+            "ha_high": "greatest(x.high, s.ho, s.hc)",
+            "ha_low": "least(x.low, s.ho, s.hc)",
+            "ha_close": "s.hc",
+        },
+        keep=["symbol", "window_start"],
     )
 
 
@@ -480,136 +350,74 @@ def adx(candles: DataFrame, n: int = 14) -> DataFrame:
     variables), ±DI = 100·DM/ATR, DX = 100·|DI⁺−DI⁻|/(DI⁺+DI⁻), and ADX
     as a SECOND Wilder smoothing over DX (seeded at rn = 2n−1).
 
-    Same justified pandas-island class as ATR/EMA (sequential recursions
-    with no closed window form), one symbol-grain shuffle. Every step is
-    the op-for-op sequence of the oracle's two chained recursive CTEs —
-    bit-exact unrounded. Zero guards: ATR=0 ⇒ DI=0; DI⁺+DI⁻=0 ⇒ DX=0
-    (flat-market candles stay defined instead of NaN)."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    def compute(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("window_start").reset_index(drop=True)
-        h, l, c = pdf["high"].tolist(), pdf["low"].tolist(), pdf["close"].tolist()
-        m = len(c)
-        dmp, dmm, tr = [0.0], [0.0], [h[0] - l[0]] if m else []
-        for i in range(1, m):
-            up, dn = h[i] - h[i - 1], l[i - 1] - l[i]
-            dmp.append(up if (up > dn and up > 0) else 0.0)
-            dmm.append(dn if (dn > up and dn > 0) else 0.0)
-            tr.append(max(h[i] - l[i], abs(h[i] - c[i - 1]), abs(l[i] - c[i - 1])))
-        di_p, di_m, dx, adx_out = [], [], [], []
-        sp = sm = sa = None
-        acc_p = acc_m = acc_a = 0.0
-        adx_prev, acc_dx, n_dx = None, 0.0, 0
-        for i in range(m):
-            if sp is None:
-                acc_p += dmp[i]
-                acc_m += dmm[i]
-                acc_a += tr[i]
-                if i + 1 == n:
-                    sp, sm, sa = acc_p / n, acc_m / n, acc_a / n
-            else:
-                sp = (sp * (n - 1) + dmp[i]) / n
-                sm = (sm * (n - 1) + dmm[i]) / n
-                sa = (sa * (n - 1) + tr[i]) / n
-            if sp is None:
-                di_p.append(None)
-                di_m.append(None)
-                dx.append(None)
-                adx_out.append(None)
-                continue
-            p = 100.0 * sp / sa if sa > 0 else 0.0
-            q = 100.0 * sm / sa if sa > 0 else 0.0
-            d = 100.0 * abs(p - q) / (p + q) if (p + q) > 0 else 0.0
-            di_p.append(p)
-            di_m.append(q)
-            dx.append(d)
-            if adx_prev is None:
-                acc_dx += d
-                n_dx += 1
-                if n_dx == n:  # rn = 2n−1
-                    adx_prev = acc_dx / n
-                    adx_out.append(adx_prev)
-                else:
-                    adx_out.append(None)
-            else:
-                adx_prev = (adx_prev * (n - 1) + d) / n
-                adx_out.append(adx_prev)
-        for name, series in (
-            ("di_plus", di_p), ("di_minus", di_m), ("dx", dx), ("adx", adx_out)
-        ):
-            pdf[name] = pd.Series(series, dtype="float64")
-        return pdf[["symbol", "window_start", "di_plus", "di_minus", "dx", "adx"]]
-
-    out_schema = T.StructType(
-        [
-            T.StructField("symbol", T.StringType()),
-            T.StructField("window_start", T.TimestampType()),
-            T.StructField("di_plus", T.DoubleType()),
-            T.StructField("di_minus", T.DoubleType()),
-            T.StructField("dx", T.DoubleType()),
-            T.StructField("adx", T.DoubleType()),
-        ]
+    One symbol-grain fold. Every step is the op-for-op sequence of the
+    oracle's two chained recursive CTEs — bit-exact unrounded. Zero
+    guards: ATR=0 ⇒ DI=0; DI⁺+DI⁻=0 ⇒ DX=0 (flat-market candles stay
+    defined instead of NaN)."""
+    up, dn = "(x.high - s.ph)", "(s.pl - x.low)"
+    dmp = f"IF(s.i = 0, 0D, IF({up} > {dn} AND {up} > 0, {up}, 0D))"
+    dmm = f"IF(s.i = 0, 0D, IF({dn} > {up} AND {dn} > 0, {dn}, 0D))"
+    tr = _true_range("s.pc")
+    warm = f"s.i < {n}"  # after the first stage s.i counts this row
+    return fold_per_key(
+        candles.select("symbol", "window_start", "high", "low", "close"),
+        state=[
+            ("i", "INT", "0"), ("ph", "DOUBLE", "NULL"), ("pl", "DOUBLE", "NULL"),
+            ("pc", "DOUBLE", "NULL"), ("ap", "DOUBLE", "0D"), ("am", "DOUBLE", "0D"),
+            ("aa", "DOUBLE", "0D"), ("sp", "DOUBLE", "NULL"), ("sm", "DOUBLE", "NULL"),
+            ("sa", "DOUBLE", "NULL"), ("p", "DOUBLE", "NULL"), ("q", "DOUBLE", "NULL"),
+            ("d", "DOUBLE", "NULL"), ("ad", "DOUBLE", "0D"), ("adx", "DOUBLE", "NULL"),
+        ],
+        steps=[
+            {
+                "i": "s.i + 1",
+                "ph": "x.high",
+                "pl": "x.low",
+                "pc": "x.close",
+                "ap": f"s.ap + {dmp}",
+                "am": f"s.am + {dmm}",
+                "aa": f"s.aa + {tr}",
+                "sp": wilder(n, "s.i + 1", "s.ap", "s.sp", dmp),
+                "sm": wilder(n, "s.i + 1", "s.am", "s.sm", dmm),
+                "sa": wilder(n, "s.i + 1", "s.aa", "s.sa", tr),
+            },
+            {
+                "p": f"IF({warm}, NULL, IF(s.sa > 0, 100D * s.sp / s.sa, 0D))",
+                "q": f"IF({warm}, NULL, IF(s.sa > 0, 100D * s.sm / s.sa, 0D))",
+            },
+            {"d": f"IF({warm}, NULL, IF(s.p + s.q > 0, 100D * abs(s.p - s.q) / (s.p + s.q), 0D))"},
+            {
+                # DX values so far = s.i − (n − 1)
+                "ad": f"IF({warm}, 0D, s.ad + s.d)",
+                "adx": wilder(n, f"s.i - {n - 1}", "s.ad", "s.adx", "s.d"),
+            },
+        ],
+        emit={"di_plus": "s.p", "di_minus": "s.q", "dx": "s.d", "adx": "s.adx"},
+        keep=["symbol", "window_start"],
     )
-    return (
-        candles.select("symbol", "window_start", "high", "low", "close")
-        .groupBy("symbol")
-        .applyInPandas(compute, schema=out_schema)
-    )
-
-
-def _holt_series(values):
-    """Sequential Holt double-exponential smoothing over one symbol's
-    ordered closes (α=0.5, β=0.3): level l_t = α·x + (1−α)·(l+b), trend
-    b_t = β·(l_t−l) + (1−β)·b, seeded l₁=x₁, b₁=x₂−x₁. Every step is
-    the identical mul/add/sub sequence the recursive-CTE oracle runs —
-    IEEE-deterministic, compared unrounded. Returns (levels, trends)."""
-    if not values:
-        return [], []
-    xs = [float(x) for x in values]
-    if len(xs) == 1:
-        return [xs[0]], [None]
-    l, b = xs[0], xs[1] - xs[0]
-    levels, trends = [l], [b]
-    for x in xs[1:]:
-        l_new = 0.5 * x + 0.5 * (l + b)
-        b = 0.3 * (l_new - l) + 0.7 * b
-        l = l_new
-        levels.append(l)
-        trends.append(b)
-    return levels, trends
 
 
 def holt_linear(candles: DataFrame) -> DataFrame:
     """Holt linear-trend smoothing + 3-step-ahead forecast per symbol —
     the forecasting layer above the EMA family (level AND trend state,
-    ŷ_{t+h} = l_t + h·b_t). Same justified pandas-island shape as
-    ema/rsi/ATR: one symbol-grain shuffle, per-group sequential fold,
-    no closed-form window expression exists for the coupled recursion."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    def compute(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("window_start").reset_index(drop=True)
-        levels, trends = _holt_series(pdf["close"].tolist())
-        pdf["level"] = pd.Series(levels, dtype="float64")
-        pdf["trend"] = pd.Series(trends, dtype="float64")
-        pdf["forecast_3"] = pdf["level"] + 3.0 * pdf["trend"]
-        return pdf
-
-    out_schema = T.StructType(
-        [
-            T.StructField("symbol", T.StringType()),
-            T.StructField("window_start", T.TimestampType()),
-            T.StructField("close", T.DoubleType()),
-            T.StructField("level", T.DoubleType()),
-            T.StructField("trend", T.DoubleType()),
-            T.StructField("forecast_3", T.DoubleType()),
-        ]
-    )
-    return (
-        candles.select("symbol", "window_start", "close")
-        .groupBy("symbol")
-        .applyInPandas(compute, schema=out_schema)
+    ŷ_{t+h} = l_t + h·b_t). Level l_t = α·x + (1−α)·(l+b), trend b_t =
+    β·(l_t−l) + (1−β)·b with α=0.5, β=0.3, seeded l₁=x₁, b₁=x₂−x₁ (NULL
+    trend for a one-row symbol). Every step is the mul/add/sub sequence
+    the recursive-CTE oracle runs — compared unrounded."""
+    level = "0.5D * x.close + 0.5D * (s.l + s.b)"
+    return fold_per_key(
+        candles.select(*_CLOSE_COLS),
+        state=[
+            ("i", "INT", "0"),
+            ("l", "DOUBLE", "NULL"),
+            # b₁ = x₂ − x₁ reads ahead: the initial state sees the rows
+            ("b", "DOUBLE", f"IF(size({ROWS}) > 1, {ROWS}[1].close - {ROWS}[0].close, NULL)"),
+        ],
+        steps=[{
+            "i": "s.i + 1",
+            "l": f"IF(s.i = 0, x.close, {level})",
+            "b": f"IF(s.i = 0, s.b, 0.3D * (({level}) - s.l) + 0.7D * s.b)",
+        }],
+        emit={"level": "s.l", "trend": "s.b", "forecast_3": "s.l + 3D * s.b"},
+        keep=_CLOSE_COLS,
     )

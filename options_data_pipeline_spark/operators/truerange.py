@@ -7,7 +7,7 @@ first candle per ticker falls back to ``high-low``
 
 Spark-first: ``lag(close)`` analytic window + ``greatest`` — pure Column
 expressions, whole-stage codegen, one shuffle on symbol (reused by the
-downstream ATR grouped-map, so the partitioning amortizes).
+downstream ATR fold, so the partitioning amortizes).
 """
 
 from __future__ import annotations

@@ -18,7 +18,7 @@ programs:
 
 Scale: everything between the tick scan and the sink groups/windows by
 symbol — one shuffle into (symbol, window) grain, then symbol-partitioned
-window functions and the ATR grouped-map reuse that partitioning. The
+window functions and the ATR fold reuse that partitioning. The
 batch sink is not partitioned: the append's dedup read prunes by a
 ``window_start`` range filter over the batch's own bounds, which parquet
 row-group statistics turn into skipped reads.
@@ -82,7 +82,7 @@ def run_batch(
     The enriched chain is materialized once (cached) and read by three
     consumers: the sink's bound probe, its anti-join delta and the
     ``atr_summary`` snapshot — so the gap-fill scaffold, TR window and
-    ATR grouped-map run once per session, not once per action. Every
+    ATR fold run once per session, not once per action. Every
     cache is released on return, also when a write raises."""
     if calendar is not None and "session_open" in calendar.columns:
         # full per-date gate: holidays drop, special sessions (Muhurat)

@@ -22,6 +22,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .sources.local import local_frame
 from .sources.tables import load_table, load_ticks, spread
 from .operators.ohlc import ohlc_candles
 from .operators.truerange import with_true_range
@@ -483,7 +484,8 @@ FROM gated GROUP BY symbol""",
 def q_calendar_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J7: trading-calendar gate — weekends + holiday dim anti-join
     (reference trading_calendar.py:60-95)."""
-    spark_cal = spark.createDataFrame(
+    spark_cal = local_frame(
+        spark,
         [("2024-01-15", True, "Holiday A"), ("2024-01-26", True, "Republic Day")],
         "date_str string, is_holiday boolean, holiday_name string",
     ).select(F.to_date("date_str").alias("date"), "is_holiday", "holiday_name")
@@ -524,7 +526,8 @@ def q_session_hours_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     market hours that `market_hours_ohlc` assumes."""
     from .operators.joins import session_hours_gate
 
-    cal = spark.createDataFrame(
+    cal = local_frame(
+        spark,
         [
             # Muhurat-style: holiday AND an 18:15–19:45 special session
             ("2024-01-15", True, "Holiday A", None, None),
@@ -4590,7 +4593,8 @@ def q_doremi_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # doremi.checkpoint_model for the guide §2.4/§2.2 rationale.
     model = checkpoint_model(domain_token_model(docs))
     w, excess, entropy = doremi_trajectory(model)
-    scaffold = spark.createDataFrame(
+    scaffold = local_frame(
+        spark,
         [(s, float(entropy[s]), float(excess[s]), w[s]) for s in sorted(w)],
         "source string, entropy double, excess double, weight double",
     )
@@ -4683,7 +4687,8 @@ def q_doremi_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratio = {s: w[s] / (counts[s] / float(nt)) for s in w}
     mx = max(ratio.values())
     rate = {s: float(_q9(ratio[s] / mx)) for s in w}
-    scaffold = spark.createDataFrame(
+    scaffold = local_frame(
+        spark,
         [(s, counts[s], w[s], rate[s]) for s in sorted(w)],
         "source string, n_docs long, weight double, rate double",
     )
@@ -4884,8 +4889,8 @@ FROM numbered n LEFT JOIN rec ON rec.symbol = n.symbol AND rec.rn = n.rn""",
 )
 def q_ema_12(spark: SparkSession, sf_dir: str) -> DataFrame:
     """12-candle EMA per symbol — the sequentially-recursive indicator
-    class (e_t = e + (x−e)·α, SMA seed), same justified pandas-island
-    shape as Wilder ATR, hash-checked UNROUNDED against a recursive-CTE
+    class (e_t = e + (x−e)·α, SMA seed), the same per-symbol Spark SQL
+    fold as Wilder ATR (operators/fold.py), hash-checked UNROUNDED against a recursive-CTE
     oracle: every recursion step is the identical sub→mul→add sequence
     in both engines, so the whole trajectory is bit-stable."""
     from .operators.indicators import ema
@@ -5989,8 +5994,8 @@ LEFT JOIN recsig ON recsig.symbol = n.symbol AND recsig.rn = n.rn""",
 def q_macd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MACD(12, 26, 9) per symbol — the COMPOSED recursion (two price
     EMAs + an EMA over their difference), closing out the recursive
-    indicator family next to `ema_12`/`rsi_14`. One pandas island runs
-    the whole panel in a single per-symbol fold; the oracle chains three
+    indicator family next to `ema_12`/`rsi_14`. One per-symbol fold
+    runs the whole panel; the oracle chains three
     recursive CTEs (fast, slow, signal) whose steps mirror the fold
     op-for-op, so the full trajectory hash-checks unrounded."""
     from .operators.indicators import macd
@@ -6653,8 +6658,8 @@ LEFT JOIN rec_a ON rec_a.symbol = n.symbol AND rec_a.rn = n.rn""",
 def q_keltner_channels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keltner channels (EMA20 of typical price ± 2×ATR10) — the
     true-range volatility envelope, composing the EMA and Wilder-ATR
-    recursions in ONE pandas fold (macd shared-fold pattern: one symbol
-    shuffle, both state variables in one island). Bit-exact unrounded vs
+    recursions in ONE per-symbol fold (macd shared-fold pattern: one
+    symbol shuffle, both state variables in one fold state). Bit-exact unrounded vs
     the double recursive-CTE oracle; bands NULL until both seeds."""
     from .operators.indicators import keltner_channels
 
@@ -7249,7 +7254,8 @@ def q_ivf_recluster_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_after"),
         F.sum(moved).cast("long").alias("moved_in"),
     )
-    scaffold = spark.createDataFrame(
+    scaffold = local_frame(
+        spark,
         [(c, c in flagged, c in reseeded_cells) for c in range(k)],
         "cell int, flagged boolean, reseeded boolean",
     )
@@ -8339,7 +8345,7 @@ def q_parse_row_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     top of the candle agg."""
     candles = ohlc_candles(load_ticks(spark, sf_dir), "300 seconds")
     ids = with_row_id(candles).select("id")
-    bad = spark.createDataFrame([(x,) for x in _BAD_IDS], "id string")
+    bad = local_frame(spark, [(x,) for x in _BAD_IDS], "id string")
     out = parse_row_id(ids.unionByName(bad))
     return out.select(
         "id",
@@ -11105,8 +11111,8 @@ def q_bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("dl").cast("double") / F.count(F.lit(1)).cast("double")
         ).alias("avgdl"),
     )
-    qterms = spark.createDataFrame(
-        [("spark",), ("join",), ("window",), ("stream",)], "tok string"
+    qterms = local_frame(
+        spark, [("spark",), ("join",), ("window",), ("stream",)], "tok string"
     )
     tfq = tf.join(F.broadcast(qterms), "tok")
     dfq = tfq.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
@@ -11242,8 +11248,8 @@ def q_hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
             "avgdl"
         ),
     )
-    qterms = spark.createDataFrame(
-        [("spark",), ("join",), ("window",), ("stream",)], "tok string"
+    qterms = local_frame(
+        spark, [("spark",), ("join",), ("window",), ("stream",)], "tok string"
     )
     tfq = tf.join(F.broadcast(qterms), "tok")
     dfq = tfq.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
@@ -11460,8 +11466,8 @@ def q_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Holt linear-trend smoothing (α=0.5, β=0.3; l₁=x₁, b₁=x₂−x₁)
     with the 3-candle-ahead forecast ŷ = l + 3b — the forecasting layer
     above the EMA family: level AND trend carried as coupled recursions
-    (no closed-form window expression), the same justified pandas-island
-    class as Wilder ATR, hash-checked UNROUNDED against the recursive-
+    (no closed-form window expression), the same per-symbol Spark SQL
+    fold as Wilder ATR, hash-checked UNROUNDED against the recursive-
     CTE twin (every step the identical mul/add/sub sequence). Extends
     forecast_revenue's closed-form regression with the state-space
     approach an ops dashboard actually runs on live series."""
@@ -12129,8 +12135,8 @@ def q_embedding_top_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # build the loading frame from the LAST round's collected rows (not
     # the dense python list) so an empty corpus still yields the empty
     # frame the join-based form — and the oracle — produce
-    vdf = spark.createDataFrame(
-        [(r["dim"], r["v"]) for r in rows], "dim int, loading double"
+    vdf = local_frame(
+        spark, [(r["dim"], r["v"]) for r in rows], "dim int, loading double"
     )
     return vdf.crossJoin(F.broadcast(trace)).select(
         "dim",
@@ -14957,8 +14963,8 @@ def _threshold_sweep_agg(spark: SparkSession, est: DataFrame) -> DataFrame:
     right-outer shape silently broadcast the O(pairs) estimate set to
     every executor; inner lets Catalyst honor the hint and replicate
     the 4-row scaffold instead."""
-    th = spark.createDataFrame(
-        [(0.25,), (0.5,), (0.75,), (1.0,)], "threshold double"
+    th = local_frame(
+        spark, [(0.25,), (0.5,), (0.75,), (1.0,)], "threshold double"
     )
     agg = (
         est.join(F.broadcast(th), F.col("jaccard_est") >= F.col("threshold"))

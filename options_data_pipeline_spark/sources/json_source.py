@@ -14,6 +14,8 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .local import local_frame
+
 DEFAULT_OPEN = "09:15"
 DEFAULT_CLOSE = "15:30"
 
@@ -40,9 +42,11 @@ def load_calendar(spark: SparkSession, path: str) -> DataFrame:
         rows.append(
             (date, False, sess.get("name", ""), sess.get("open"), sess.get("close"))
         )
-    df = spark.createDataFrame(
-        rows, "date string, is_holiday boolean, holiday_name string,"
-        " session_open string, session_close string"
+    df = local_frame(
+        spark,
+        rows,
+        "date string, is_holiday boolean, holiday_name string,"
+        " session_open string, session_close string",
     )
     from pyspark.sql import functions as F
 

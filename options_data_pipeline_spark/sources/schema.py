@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from .local import local_frame
+
 MARKET_DATA_SCHEMA = T.StructType(
     [
         T.StructField("id", T.StringType(), False),
@@ -69,7 +71,7 @@ def initialize_if_empty(spark: SparkSession, path: str, table: str) -> bool:
 
     if sink_has_data(path):  # recursive: sees partitioned layouts too
         return False
-    empty = spark.createDataFrame([], SINK_SCHEMAS[table])
+    empty = local_frame(spark, [], SINK_SCHEMAS[table])
     empty.write.mode("overwrite").parquet(path)
     return True
 

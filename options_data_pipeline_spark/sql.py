@@ -48,7 +48,7 @@ def create_views(spark: SparkSession, sf_dir: str) -> list[str]:
     docs.select(
         "doc_id", "source", *[c.alias(n) for n, c in sig_cols.items()]
     ).createOrReplaceTempView("doc_signals")
-    # composed recursive indicator panel (pandas island — see indicators.py)
+    # composed recursive indicator panel (per-symbol fold — see indicators.py)
     from .operators.indicators import macd
 
     macd(candles_1h).createOrReplaceTempView("macd_1h")

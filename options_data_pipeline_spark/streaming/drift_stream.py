@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ..operators.drift import chi2_between, hist_cells, value_range
 from ..sources import store
+from ..sources.local import local_frame
 from .sink import idempotent_append_batch
 
 
@@ -103,7 +104,7 @@ def live_cells_read(
     from .sink import sink_has_data
 
     if not sink_has_data(store_path):
-        return spark.createDataFrame([], _LIVE_SCHEMA).select(
+        return local_frame(spark, [], _LIVE_SCHEMA).select(
             "event_type", "bin", "n"
         )
     return (

@@ -36,6 +36,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
 
+from ..sources.local import local_frame
+
 METRICS_SCHEMA = (
     "ts timestamp, stage string, batch_id long, rows long, wall_ms long,"
     " state_rows long, watermark_lag_ms long, dropped_rows long,"
@@ -94,7 +96,7 @@ class MetricsListener(StreamingQueryListener):
             if not rows:
                 return 0
             (
-                self.spark.createDataFrame(rows, METRICS_SCHEMA)
+                local_frame(self.spark, rows, METRICS_SCHEMA)
                 .coalesce(1)
                 .write.mode("append")
                 .parquet(self.path)

@@ -53,6 +53,7 @@ from pyspark.sql import functions as F
 
 from ..functions.doremi import doremi_trajectory, model_from_counts
 from ..sources import store
+from ..sources.local import local_frame
 
 _DELTAS = "deltas"
 
@@ -166,7 +167,8 @@ def publish_mixture_weights(spark, store_path: str, model_path: str) -> dict:
     w, _, _ = doremi_trajectory(model)
     n_rows = cnt.count()
     vdir = store.next_generation(model_path)
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(s, w[s], n_rows) for s in sorted(w)],
         "source string, weight double, model_rows long",
     ).coalesce(1).write.mode("overwrite").parquet(vdir)

@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 
 from ..functions.quality_train import ITERS, LR, _z, quality_features, quality_train
 from ..sources import store
+from ..sources.local import local_frame
 
 
 def publish_quality_weights(
@@ -64,7 +65,8 @@ def publish_quality_weights(
     feats = quality_features(docs, text_col).localCheckpoint(eager=True)
     w = quality_train(feats, iters=iters, lr=lr)
     vdir = store.next_generation(model_path)
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(w[0], w[1], w[2], w[3], iters, float(lr))],
         "wb double, w1 double, w2 double, w3 double, iters int, lr double",
     ).coalesce(1).write.mode("overwrite").parquet(vdir)

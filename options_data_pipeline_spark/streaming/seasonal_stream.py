@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.seasonal import hour_cells, loo_scores
+from ..sources.local import local_frame
 from .sink import idempotent_append_batch
 
 
@@ -61,7 +62,8 @@ def seasonal_cells_read(spark, store_path: str) -> DataFrame:
     from .sink import sink_has_data
 
     if not sink_has_data(store_path):
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "event_type string, day_start timestamp,"
             " hour_of_day int, n_events long",

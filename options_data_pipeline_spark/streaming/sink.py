@@ -13,9 +13,12 @@ The reference's retry ladder (5× exp backoff) and fallback WAL are
 subsumed by Spark task retries + the streaming WAL; the ``atr_state``
 full-overwrite snapshot (S4) maps to ``mode("overwrite")``.
 
-Scale: the sink read for dedup is pruned by the batch's window range —
-never a full-sink scan (the reference's Q2 reads the whole sheet per
-window, SURVEY.md §7 risk 5); an empty batch does not read the sink.
+Scale: with a ``prune_col`` the sink read for dedup is pruned to the
+batch's range of that column, plus the sink's NULL rows when the batch
+has a NULL there — never a full-sink scan (the reference's Q2 reads the
+whole sheet per window, SURVEY.md §7 risk 5); an empty batch does not
+read the sink. Without a ``prune_col`` the anti-join reads the whole
+sink.
 """
 
 from __future__ import annotations
@@ -49,11 +52,14 @@ def idempotent_append_batch(
     partition_by: tuple[str, ...] = (),
 ) -> int:
     """Anti-join ``batch`` against the sink on ``id`` and append the delta.
-    Returns rows written. Prunes the sink read to the batch's key range
-    when ``prune_col`` is given; when ``partition_by`` includes a ``date``
-    column the prune bounds also become partition filters so the dedup
-    read touches only the batch's date partitions (never a full-sink
-    scan). An empty batch returns 0 before the sink is read.
+    Returns rows written. When ``prune_col`` is given the sink read is
+    pruned to the batch's range of it, and also keeps the sink's
+    ``prune_col IS NULL`` rows when the batch has a NULL there (a range
+    filter alone would drop them, and such a row would be appended again
+    on every replay); when ``partition_by`` includes a ``date`` column
+    and the batch has no NULL prune value, the bounds also become
+    partition filters so the dedup read touches only the batch's date
+    partitions. An empty batch returns 0 before the sink is read.
 
     ``batch``'s plan runs once for the bound probe and once for the
     delta unless the caller persists it (``run_batch`` does); a batch
@@ -63,19 +69,13 @@ def idempotent_append_batch(
     if sink_has_data(sink_path):
         bounds = None
         if prune_col is not None:
-            bounds = batch.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.min(prune_col).alias("lo"),
-                F.max(prune_col).alias("hi"),
-            ).collect()[0]
+            bounds = _prune_bounds(batch, prune_col)
             if bounds.n == 0:
                 return 0
         sink = spark.read.parquet(sink_path)
-        if bounds is not None and bounds.lo is not None:
-            sink = sink.filter(
-                (F.col(prune_col) >= bounds.lo) & (F.col(prune_col) <= bounds.hi)
-            )
-            if "date" in partition_by:
+        if bounds is not None:
+            sink = sink.filter(_prune_filter(prune_col, bounds))
+            if "date" in partition_by and bounds.nn == bounds.n:
                 sink = sink.filter(
                     F.col("date").between(
                         F.lit(bounds.lo).cast("date"),
@@ -114,6 +114,29 @@ def idempotent_append_batch(
         if own_cache:
             delta.unpersist()
     return n
+
+
+def _prune_bounds(batch: DataFrame, prune_col: str):
+    """One job: the batch's row count ``n``, non-NULL ``prune_col``
+    count ``nn`` and its range ``lo``/``hi``."""
+    return batch.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.count(prune_col).alias("nn"),
+        F.min(prune_col).alias("lo"),
+        F.max(prune_col).alias("hi"),
+    ).collect()[0]
+
+
+def _prune_filter(prune_col: str, bounds):
+    """The sink rows a batch with these bounds can collide with: its
+    range, and the NULL rows when the batch has a NULL (``nn < n``)."""
+    col = F.col(prune_col)
+    cond = None
+    if bounds.lo is not None:
+        cond = (col >= bounds.lo) & (col <= bounds.hi)
+    if bounds.nn < bounds.n:
+        cond = col.isNull() if cond is None else cond | col.isNull()
+    return cond
 
 
 def _promote_staged(staging: str, sink_path: str) -> None:
@@ -326,24 +349,32 @@ def manifest_append_batch(
     single manifest publish. Partition-style layout is deliberately not
     used — segments keep all columns in-data and skipping happens at the
     manifest (segment min/max) and parquet row-group-stat levels, the same
-    posture Delta data skipping takes on object stores."""
+    posture Delta data skipping takes on object stores. The dedup read
+    keeps NULL prune values as :func:`idempotent_append_batch` does; an
+    empty batch returns 0 before any segment is read."""
     spark = batch.sparkSession
-    blo = bhi = lo = hi = None
+    b = lo = hi = None
+    skip_lo = skip_hi = None
     if prune_col is not None:
-        b = batch.agg(F.min(prune_col).alias("lo"), F.max(prune_col).alias("hi")).collect()[0]
-        blo, bhi = b.lo, b.hi
+        b = _prune_bounds(batch, prune_col)
+        if b.n == 0:
+            return 0
         # manifest bounds go through THIS encoder on both the write and
         # the skip side, so the overlap test is self-consistent and
         # type-aware (native numbers for numerics, ISO strings otherwise)
-        lo, hi = _bound_json(blo), _bound_json(bhi)
-    segments = _committed_segments(sink_path, lo, hi, prune_col=prune_col)
+        lo, hi = _bound_json(b.lo), _bound_json(b.hi)
+        if b.nn == b.n:
+            # a segment's [lo, hi] says nothing about its NULL rows, so a
+            # batch with a NULL prune value skips no segment by range
+            skip_lo, skip_hi = lo, hi
+    segments = _committed_segments(sink_path, skip_lo, skip_hi, prune_col=prune_col)
     delta = batch
     if segments:
         sink = spark.read.parquet(*segments)
-        if prune_col is not None and blo is not None:
+        if b is not None:
             # typed in-data filter (never string-compared) pushes to the
             # parquet scan and prunes row groups by their stats
-            sink = sink.filter((F.col(prune_col) >= blo) & (F.col(prune_col) <= bhi))
+            sink = sink.filter(_prune_filter(prune_col, b))
         delta = batch.join(sink.select(id_col), id_col, "left_anti")
     delta = delta.cache()
     n = delta.count()

@@ -67,6 +67,7 @@ _SLOW_TESTS = {
     "test_packing_never_overfills_except_singletons",
     "test_canonical_url_idempotent_property",
     "test_connected_components_star_randomized_equivalence",
+    "test_folds_match_references_property",
 }
 
 

@@ -8,7 +8,8 @@ from datetime import datetime, timedelta
 
 import pytest
 
-from options_data_pipeline_spark.operators.atr import with_wilder_atr, atr_summary, _wilder
+from options_data_pipeline_spark.operators.atr import with_wilder_atr, atr_summary
+from recursion_refs import _wilder
 from options_data_pipeline_spark.operators.truerange import with_true_range
 
 

@@ -215,14 +215,14 @@ def test_bollinger_warmup_and_band_order(spark):
 
 
 def test_ema_hand_computed(spark):
-    from options_data_pipeline_spark.operators.indicators import _ema_series
+    from recursion_refs import _ema_series
 
     # n=3, alpha=0.5: seed SMA(1,2,3)=2; then 2+(4-2)*.5=3; 3+(5-3)*.5=4
     assert _ema_series([1, 2, 3, 4, 5], 3) == [None, None, 2.0, 3.0, 4.0]
 
 
 def test_rsi_hand_computed_and_edges(spark):
-    from options_data_pipeline_spark.operators.indicators import _rsi_series
+    from recursion_refs import _rsi_series
 
     # n=2 over 1,2,3,2: deltas +1,+1,-1; seed at i=2: ag=1, al=0 -> 100
     out = _rsi_series([1.0, 2.0, 3.0, 2.0], 2)

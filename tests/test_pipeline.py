@@ -102,6 +102,51 @@ def test_batch_pipeline_enriches_once(spark, tmpdir, monkeypatch):
             assert "FlatMapGroupsInPandas" not in got
 
 
+def all_plan_nodes(plan):
+    """Node names of a physical plan and of every cached relation in it."""
+    name = plan.nodeName()
+    if name == "AdaptiveSparkPlan":
+        return all_plan_nodes(plan.executedPlan())
+    if name == "InMemoryTableScan":
+        return [name] + all_plan_nodes(plan.relation().cachedPlan())
+    if name.endswith("QueryStage"):  # adaptive stages hold their plan
+        return [name] + all_plan_nodes(plan.plan())
+    kids = plan.children()
+    return [name] + [n for i in range(kids.size()) for n in all_plan_nodes(kids.apply(i))]
+
+
+_PYTHON_NODES = ("FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython", "ExistingRDD")
+
+
+def test_batch_pipeline_runs_no_python_worker(spark, tmpdir, monkeypatch):
+    """The enriched chain (ATR fold included) and the calendar plan no
+    pandas island, Python UDF or pickled Python RDD."""
+    import json
+
+    from options_data_pipeline_spark import pipeline
+    from options_data_pipeline_spark.sources.json_source import load_calendar
+    from options_data_pipeline_spark.sources.local import local_frame
+
+    cal_path = tmpdir + "/cal.json"
+    with open(cal_path, "w") as f:
+        json.dump({"holidays": ["2024-01-26"], "special_sessions": {}}, f)
+    cal = load_calendar(spark, cal_path)
+    real_append, plans = pipeline.idempotent_append_batch, []
+
+    def append(batch, sink_path):
+        batch.count()  # materialize the cache the plan reads
+        plans.append(all_plan_nodes(batch._jdf.queryExecution().executedPlan()))
+        return real_append(batch, sink_path)
+
+    monkeypatch.setattr(pipeline, "idempotent_append_batch", append)
+    ticks = local_frame(spark, session_ticks(spark).collect(), TICK_SCHEMA)
+    assert run_batch(ticks, tmpdir + "/market", state_path=tmpdir + "/state", calendar=cal) == 8
+    [enriched] = plans
+    assert "InMemoryTableScan" in enriched and "LocalTableScan" in enriched
+    for nodes in (enriched, all_plan_nodes(cal._jdf.queryExecution().executedPlan())):
+        assert not [n for n in nodes if any(p in n for p in _PYTHON_NODES)], nodes
+
+
 def test_batch_pipeline_failed_write_releases_caches(spark, tmpdir):
     """A snapshot write that raises leaves no cache behind."""
     blocker = tmpdir + "/blocker"

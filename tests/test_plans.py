@@ -566,14 +566,15 @@ def test_new_indicators_single_symbol_window_pass(spark, qs):
 
 
 def test_recursive_indicator_islands_single_symbol_shuffle(spark, qs):
-    """keltner_channels / heikin_ashi are the justified pandas-island
-    class (sequential recursions): exactly one FlatMapGroupsInPandas
-    over the symbol grain, no joins, no extra exchanges beyond the
-    candle build + the group shuffle."""
+    """keltner_channels / heikin_ashi / adx_14 are sequential
+    recursions: one per-symbol fold (operators/fold.py — a collect_list
+    aggregate and a Generate, no pandas island), no joins, no extra
+    exchanges beyond the candle build + the group shuffle."""
     for name in ("keltner_channels", "heikin_ashi", "adx_14"):
         df = qs[name](spark, SF)
         plan = physical_plan(df)
-        assert "FlatMapGroupsInPandas" in plan, name
+        assert "FlatMapGroupsInPandas" not in plan, name
+        assert "ObjectHashAggregate" in plan and "Generate" in plan, name
         assert "Join" not in plan, name
         # candle agg + symbol-group shuffle (+ load_table's file spread)
         assert count_exchanges(df) <= 3, name

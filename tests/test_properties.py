@@ -9,8 +9,8 @@ from datetime import datetime, timedelta
 import pytest
 from hypothesis import given, settings, strategies as st
 
-from options_data_pipeline_spark.operators.atr import _wilder
 from options_data_pipeline_spark.operators.ohlc import ohlc_candles
+from recursion_refs import _ema_series, _rsi_series, _wilder
 
 prices = st.lists(
     st.floats(min_value=0.01, max_value=1e6, allow_nan=False, allow_infinity=False),
@@ -209,8 +209,6 @@ def test_stratified_sample_stable_under_growth(spark_prop):
 def test_ema_properties(xs, n):
     """EMA invariants: warmup NULLs before the seed, then every value lies
     within the running [min, max] envelope of the inputs seen so far."""
-    from options_data_pipeline_spark.operators.indicators import _ema_series
-
     out = _ema_series(xs, n)
     assert len(out) == len(xs)
     for i, v in enumerate(out):
@@ -228,8 +226,6 @@ def test_ema_properties(xs, n):
 def test_rsi_bounded_and_monotone_edges(xs, n):
     """RSI stays in [0, 100]; a strictly rising tail pushes toward 100 and
     a strictly falling series pins at 0 after warmup."""
-    from options_data_pipeline_spark.operators.indicators import _rsi_series
-
     out = _rsi_series(xs, n)
     for v in out:
         if v is not None:

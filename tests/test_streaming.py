@@ -447,8 +447,9 @@ def test_idempotent_sink_replay_writes_nothing(spark, tmpdir):
 
 def test_idempotent_sink_empty_batch_skips_sink_read(spark, tmpdir, monkeypatch):
     """An empty batch returns 0 without reading the sink; a non-empty
-    batch whose prune values are all NULL still anti-joins the whole
-    sink."""
+    batch whose prune values are all NULL reads the sink once (pruned to
+    its NULL rows, see test_sink_all_null_batch_reads_only_null_rows)
+    and finds its own row on replay."""
     from pyspark.sql import DataFrameReader
 
     sink = tmpdir + "/sink"
@@ -467,8 +468,67 @@ def test_idempotent_sink_empty_batch_skips_sink_read(spark, tmpdir, monkeypatch)
     assert idempotent_append_batch(batch.filter(F.lit(False)), sink) == 0
     assert reads == []
     null_bounds = batch.withColumn("window_start", F.lit(None).cast("timestamp"))
+    null_bounds = null_bounds.withColumn("id", F.lit("A_null"))
+    assert idempotent_append_batch(null_bounds, sink) == 1
     assert idempotent_append_batch(null_bounds, sink) == 0  # id already there
-    assert len(reads) == 1
+    assert len(reads) == 2
+
+
+def _anti_join_reads(spark, monkeypatch) -> list[int]:
+    """Row counts of the sink reads each anti-join dedups against."""
+    DataFrame = type(spark.range(1))  # the session's concrete class
+    real_join, seen = DataFrame.join, []
+
+    def join(self, other, on=None, how=None):
+        if how == "left_anti":
+            seen.append(other.count())
+        return real_join(self, other, on, how)
+
+    monkeypatch.setattr(DataFrame, "join", join)
+    return seen
+
+
+def _sink_pair(name):
+    from options_data_pipeline_spark.streaming.sink import (
+        manifest_append_batch, manifest_sink_read,
+    )
+
+    if name == "rename":
+        return idempotent_append_batch, lambda spark, p: spark.read.parquet(p)
+    return manifest_append_batch, manifest_sink_read
+
+
+_NULL_KEY_SCHEMA = "id string, window_start timestamp"
+
+
+@pytest.mark.parametrize("sink_kind", ["rename", "manifest"])
+def test_sink_replay_keeps_null_prune_rows(spark, tmpdir, sink_kind):
+    """A batch mixing a real and a NULL prune value replays to nothing:
+    the dedup read keeps the sink's NULL rows next to the range."""
+    append, read = _sink_pair(sink_kind)
+    sink = str(tmpdir) + "/sink"
+    batch = spark.createDataFrame(
+        [("a", datetime(2026, 1, 1, 9, 15)), ("b", None)], _NULL_KEY_SCHEMA
+    )
+    assert [append(batch, sink) for _ in range(3)] == [2, 0, 0]
+    assert sorted(r.id for r in read(spark, sink).collect()) == ["a", "b"]
+
+
+@pytest.mark.parametrize("sink_kind", ["rename", "manifest"])
+def test_sink_all_null_batch_reads_only_null_rows(spark, tmpdir, monkeypatch, sink_kind):
+    """A batch whose prune values are all NULL dedups against the sink's
+    NULL rows only, not the whole sink, and still replays to nothing."""
+    append, read = _sink_pair(sink_kind)
+    sink = str(tmpdir) + "/sink"
+    ts = datetime(2026, 1, 1, 9, 15)
+    seed = [("a", ts), ("a2", ts + timedelta(minutes=5)), ("b", None)]
+    assert append(spark.createDataFrame(seed, _NULL_KEY_SCHEMA), sink) == 3
+    seen = _anti_join_reads(spark, monkeypatch)
+    nulls = spark.createDataFrame([("b", None), ("c", None)], _NULL_KEY_SCHEMA)
+    assert append(nulls, sink) == 1
+    assert append(nulls, sink) == 0
+    assert seen == [1, 2]  # the sink's NULL rows: b, then b and c
+    assert sorted(r.id for r in read(spark, sink).collect()) == ["a", "a2", "b", "c"]
 
 
 def test_sink_failed_append_releases_delta_cache(spark, tmpdir, monkeypatch):
