@@ -10,7 +10,9 @@ Design stance (SURVEY.md §7):
  - batch-first DataFrame engine, streaming twin where semantics demand it
  - every batch operator a native Column/SQL expression — recursions
    (Wilder ATR, EMA-family indicators) are per-symbol SQL folds
-   (operators/fold.py); the streaming ATR keeps applyInPandasWithState
+   (operators/fold.py), and the live stages run the same folds per
+   micro-batch, seeded from a published state generation
+   (streaming/fold_state.py)
  - dims broadcast, facts partitioned by date, dedup via anti-join / MERGE
 """
 

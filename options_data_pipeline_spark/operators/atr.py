@@ -15,6 +15,8 @@ fold in Spark SQL (operators/fold.py): one shuffle on symbol — shared
 with the TR window partitioning — and no Python worker. Per-key series
 are tiny relative to key cardinality (75 candles/day/ticker in the
 reference), so at 100 TB the fold parallelizes across symbols×days.
+The live stage (streaming/fold_state.py) runs the same state and step,
+seeded per symbol from the state the previous micro-batch published.
 
 Deviation from the reference (documented, deliberate): the reference
 rounds ATR to 4 dp at every recursive step with Python banker's rounding
@@ -31,6 +33,24 @@ from .fold import fold_per_key, wilder
 
 ATR_PERIOD = 14  # reference config/settings.py:44
 
+#: the clamp of the Wilder value ``s.prev``, as Python's ``max(atr, 0.0)``
+ATR_CLAMP = "IF(0D > s.prev, 0D, s.prev)"
+
+
+def wilder_state(i: str = "0", acc: str = "0D", prev: str = "NULL") -> list[tuple[str, str, str]]:
+    """The Wilder fold state with its initial values: ``i`` rows seen,
+    ``acc`` the sum of their TRs, ``prev`` the last Wilder value."""
+    return [("i", "INT", i), ("acc", "DOUBLE", acc), ("prev", "DOUBLE", prev)]
+
+
+def wilder_step(period: int, tr: str) -> dict[str, str]:
+    """One row's Wilder update of :func:`wilder_state` for the TR ``tr``."""
+    return {
+        "i": "s.i + 1",
+        "acc": f"s.acc + {tr}",
+        "prev": wilder(period, "s.i + 1", "s.acc", "s.prev", tr),
+    }
+
 
 def with_wilder_atr(
     candles_with_tr: DataFrame,
@@ -45,13 +65,9 @@ def with_wilder_atr(
     period``, clamped at 0 as Python's ``max(atr, 0.0)``."""
     return fold_per_key(
         candles_with_tr,
-        state=[("i", "INT", "0"), ("acc", "DOUBLE", "0D"), ("prev", "DOUBLE", "NULL")],
-        steps=[{
-            "i": "s.i + 1",
-            "acc": "s.acc + x.tr",
-            "prev": wilder(period, "s.i + 1", "s.acc", "s.prev", "x.tr"),
-        }],
-        emit={"atr": "IF(0D > s.prev, 0D, s.prev)"},
+        state=wilder_state(),
+        steps=[wilder_step(period, "x.tr")],
+        emit={"atr": ATR_CLAMP},
         keep=candles_with_tr.columns,
         key=symbol_col,
         order=order_col,

@@ -14,7 +14,9 @@ programs:
    BASELINE.json: a scheduler triggers it per session; the calendar gate
    is a job predicate, not dataflow.
  - :func:`run_streaming` — the live twin: watermarked OHLC append stream →
-   stateful ATR → foreachBatch idempotent sink with checkpointing.
+   a foreachBatch ATR stage that runs the batch fold seeded from the
+   state the previous micro-batch published (streaming/fold_state.py) →
+   idempotent sink, with checkpointing.
 
 Scale: everything between the tick scan and the sink groups/windows by
 symbol — one shuffle into (symbol, window) grain, then symbol-partitioned
@@ -37,7 +39,7 @@ from .operators.ids import with_row_id
 from .operators.filters import in_session
 from .operators.joins import attach_segment, calendar_gate, session_hours_gate
 from .streaming.ohlc_stream import streaming_ohlc
-from .streaming.atr_state import streaming_atr
+from .streaming.fold_state import atr_stage
 from .streaming.sink import idempotent_append_batch, overwrite_snapshot
 
 
@@ -144,7 +146,11 @@ def run_streaming(
         candles for silent (symbol, window) slots, chained across
         micro-batch boundaries (reference W4 at its native streaming
         position, gapfill_stream.py).
-    Stage 2: candle stream → stateful Wilder ATR → id → idempotent sink.
+    Stage 2: candle stream → foreachBatch Wilder ATR → id → idempotent
+        sink. Each micro-batch folds from the per-symbol state the
+        previous one published under the stage's checkpoint and then
+        publishes its own (streaming/fold_state.py); the stage keeps no
+        Spark state store, so its ``pipeline_metrics.state_rows`` read 0.
     Stage 3 (optional, ``sessions_path``): tick stream → watermarked
         session_window silence detector → session sink (the W7
         heartbeat as a parallel stateful branch).
@@ -244,8 +250,6 @@ def run_streaming(
     atr_stream = atr_reader.parquet(atr_src_path)
     if dense_path is not None:
         atr_stream = atr_stream.drop("date")
-    enriched = with_row_id(streaming_atr(atr_stream))
-
     if manifest_maintain_every is not None:
         # versioned manifest sink with in-loop OPTIMIZE/VACUUM: the
         # maintenance pair runs inside foreachBatch every N batches, so
@@ -262,8 +266,8 @@ def run_streaming(
             idempotent_append_batch(batch, sink_path)
 
     queries.append(
-        enriched.writeStream.queryName("enriched")
-        .foreachBatch(write)
+        atr_stream.writeStream.queryName("enriched")
+        .foreachBatch(atr_stage(checkpoint_path + "/enriched", write))
         .outputMode("append")
         .option("checkpointLocation", checkpoint_path + "/enriched")
         .start()

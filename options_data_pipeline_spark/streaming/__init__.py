@@ -1,5 +1,4 @@
 from .ohlc_stream import streaming_ohlc
-from .atr_state import streaming_atr
 from .sink import idempotent_append_batch
 
-__all__ = ["streaming_ohlc", "streaming_atr", "idempotent_append_batch"]
+__all__ = ["streaming_ohlc", "idempotent_append_batch"]

@@ -91,7 +91,9 @@ def drift_merge_batch(
         "bin",
         "n",
     )
-    return idempotent_append_batch(part, store_path, id_col="id", prune_col=None)
+    # every id embeds its batch_id, so the batch's own rows are the only
+    # ones it can collide with, and an empty batch reads no store data
+    return idempotent_append_batch(part, store_path, id_col="id", prune_col="batch_id")
 
 
 def live_cells_read(

@@ -626,12 +626,3 @@ def overwrite_snapshot(df: DataFrame, sink_path: str) -> None:
     """S4: full-overwrite state snapshot (reference sync_atr_state,
     ``write_pipeline.py:328-362``)."""
     df.write.mode("overwrite").parquet(sink_path)
-
-
-def foreach_batch_writer(sink_path: str, id_col: str = "id"):
-    """foreachBatch hook: .writeStream.foreachBatch(foreach_batch_writer(p))."""
-
-    def write(batch: DataFrame, batch_id: int) -> None:
-        idempotent_append_batch(batch, sink_path, id_col)
-
-    return write

@@ -147,6 +147,40 @@ def test_batch_pipeline_runs_no_python_worker(spark, tmpdir, monkeypatch):
         assert not [n for n in nodes if any(p in n for p in _PYTHON_NODES)], nodes
 
 
+def test_streaming_pipeline_runs_no_python_worker(spark, tmpdir, monkeypatch):
+    """The live ATR stage's per-micro-batch plan (the seeded fold over the
+    batch, read from its one cache) holds no Python-worker node."""
+    from options_data_pipeline_spark import pipeline
+
+    real_append, plans = pipeline.idempotent_append_batch, []
+
+    def append(batch, sink_path):
+        batch.count()  # materialize the cache the plan reads
+        plans.append(all_plan_nodes(batch._jdf.queryExecution().executedPlan()))
+        return real_append(batch, sink_path)
+
+    monkeypatch.setattr(pipeline, "idempotent_append_batch", append)
+    # a second run over a later day: its batch is seeded from the state
+    # the first run published
+    for day in (datetime(2024, 1, 5), datetime(2024, 1, 8)):
+        session_ticks(spark, day).filter("price < 900").write.mode("append").parquet(tmpdir + "/src")
+        stream = spark.readStream.schema(TICK_SCHEMA).parquet(tmpdir + "/src")
+        queries = run_streaming(stream, tmpdir + "/candles", tmpdir + "/sink", tmpdir + "/ckpt")
+        try:
+            for q in queries:
+                q.processAllAvailable()
+        finally:
+            for q in queries:
+                q.stop()
+        # foreachBatch hands the stage its micro-batch as a scan of the
+        # query's own incremental plan: check that plan too
+        plans.append(all_plan_nodes(queries[1]._jsq.streamingQuery().lastExecution().executedPlan()))
+    assert "BroadcastHashJoin" in plans[-2]
+    for nodes in plans:
+        python = [n for n in nodes if any(p in n for p in _PYTHON_NODES)]
+        assert python in ([], ["Scan ExistingRDD"]), nodes
+
+
 def test_batch_pipeline_failed_write_releases_caches(spark, tmpdir):
     """A snapshot write that raises leaves no cache behind."""
     blocker = tmpdir + "/blocker"

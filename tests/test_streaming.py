@@ -17,7 +17,7 @@ from options_data_pipeline_spark.operators.truerange import with_true_range
 from options_data_pipeline_spark.operators.atr import with_wilder_atr
 from options_data_pipeline_spark.operators.ids import with_row_id
 from options_data_pipeline_spark.streaming.ohlc_stream import streaming_ohlc
-from options_data_pipeline_spark.streaming.atr_state import streaming_atr
+from options_data_pipeline_spark.streaming.fold_state import atr_stage
 from options_data_pipeline_spark.streaming.sink import idempotent_append_batch
 
 TICK_SCHEMA = "symbol string, price double, ts timestamp, event_id long"
@@ -76,25 +76,50 @@ def test_streaming_ohlc_matches_batch_for_closed_windows(spark, tmpdir):
         )
 
 
+def _atr_stream(spark, src, sink, ckpt, max_files=None):
+    """Drain the live ATR stage over the candle files in ``src`` into the
+    idempotent sink ``sink``; returns the sink rows by window."""
+    reader = spark.readStream.schema(CANDLE_SCHEMA)
+    if max_files is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files)
+    q = (
+        reader.parquet(src)
+        .writeStream.foreachBatch(
+            atr_stage(ckpt, lambda b, _: idempotent_append_batch(b, sink))
+        )
+        .option("checkpointLocation", ckpt)
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return {(r.symbol, r.window_start): r for r in spark.read.parquet(sink).collect()}
+
+
+def _batch_atr(frame):
+    return {
+        (r.symbol, r.window_start): r
+        for r in with_wilder_atr(with_true_range(frame).drop("prev_close")).collect()
+    }
+
+
 def test_streaming_atr_matches_batch(spark, tmpdir):
+    """The live stage over two triggers (the seed is crossed mid-warmup)
+    gives bit-equal tr/atr to the batch operators."""
     base = datetime(2024, 1, 1, 9, 15)
     rows = [
-        ("A", base + timedelta(minutes=5 * i), 10.0 + i, 12.0 + i, 9.0 + i, 11.0 + i, 3)
+        (s, base + timedelta(minutes=5 * i), 10.0 + i, 12.0 + i * k, 9.0 + i, 11.0 + i / k, 3)
+        for s, k in (("A", 1.0), ("B", 1.5))
         for i in range(16)
     ]
-    src = spark.createDataFrame(rows, CANDLE_SCHEMA)
-
-    got = run_stream(spark, src, tmpdir, streaming_atr, CANDLE_SCHEMA).collect()
-    batch = with_wilder_atr(with_true_range(src).drop("prev_close")).collect()
-    gm = {r.window_start: r for r in got}
-    assert len(got) == 16
-    for b in batch:
-        g = gm[b.window_start]
-        assert g.tr == pytest.approx(b.tr)
-        if b.atr is None:
-            assert g.atr is None
-        else:
-            assert g.atr == pytest.approx(b.atr)
+    src = tmpdir + "/src"
+    for part in (rows[:9] + rows[16:20], rows[9:16] + rows[20:]):
+        spark.createDataFrame(part, CANDLE_SCHEMA).coalesce(1).write.mode("append").parquet(src)
+    got = _atr_stream(spark, src, tmpdir + "/sink", tmpdir + "/ckpt", max_files=1)
+    want = _batch_atr(spark.createDataFrame(rows, CANDLE_SCHEMA))
+    assert len(got) == 32
+    assert {k: (g.tr, g.atr) for k, g in got.items()} == {k: (w.tr, w.atr) for k, w in want.items()}
 
 
 def test_streaming_dedup_within_watermark(spark, tmpdir):
@@ -117,271 +142,27 @@ def test_streaming_dedup_within_watermark(spark, tmpdir):
     assert sorted(r.event_id for r in got) == [1, 2, 3]
 
 
-class _FakeValueState:
-    def __init__(self):
-        self._v = None
-
-    def exists(self):
-        return self._v is not None
-
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = v
-
-    def clear(self):
-        self._v = None
-
-
-class _FakeHandle:
-    def __init__(self):
-        self.state = _FakeValueState()
-        self.timers = []
-
-    def getValueState(self, name, schema, ttlDurationMs=None):
-        return self.state
-
-    def listTimers(self):
-        return list(self.timers)
-
-    def deleteTimer(self, t):
-        self.timers.remove(t)
-
-    def registerTimer(self, t):
-        self.timers.append(t)
-
-
-def test_tws_atr_processor_matches_batch(spark):
-    """WilderATRProcessor recursion == batch recursion, across triggers
-    and with shuffled multi-chunk input. The full streaming run needs
-    google.protobuf (state-v2's Python<->JVM protocol), absent in this
-    container — the processor logic is what's ours to test."""
-    import pandas as pd
-
-    from options_data_pipeline_spark.streaming.atr_tws import WilderATRProcessor
-
-    base = datetime(2024, 1, 1, 9, 15)
-    rows = [
-        ("A", base + timedelta(minutes=5 * i), 10.0 + i, 12.0 + i, 9.0 + i, 11.0 + i, 3)
-        for i in range(16)
-    ]
-    src = spark.createDataFrame(rows, CANDLE_SCHEMA)
-    batch = {r.window_start: r for r in with_wilder_atr(with_true_range(src).drop("prev_close")).collect()}
-
-    proc = WilderATRProcessor()
-    proc.init(_FakeHandle())
-    pdf = pd.DataFrame(
-        [dict(symbol=s, window_start=w, open=o, high=h, low=lo, close=c, tick_count=t)
-         for s, w, o, h, lo, c, t in rows]
-    )
-    # trigger 1: first 10 candles split into shuffled chunks; trigger 2: rest
-    t1 = pdf.iloc[:10].sample(frac=1.0, random_state=7)
-    out1 = list(proc.handleInputRows(("A",), iter([t1.iloc[5:], t1.iloc[:5]]), None))
-    out2 = list(proc.handleInputRows(("A",), iter([pdf.iloc[10:]]), None))
-    got = pd.concat(out1 + out2, ignore_index=True)
-    assert len(got) == 16
-    for row in got.itertuples(index=False):
-        b = batch[row.window_start.to_pydatetime()]
-        assert row.tr == pytest.approx(b.tr)
-        if b.atr is None:
-            assert pd.isna(row.atr) or row.atr is None
-        else:
-            assert row.atr == pytest.approx(b.atr)
-
-
-def test_tws_atr_idle_timer_emits_heartbeat():
-    """With idle_timeout_ms set, each input re-arms a single timer and
-    timer expiry emits the in-band heartbeat marker row."""
-    import pandas as pd
-
-    from options_data_pipeline_spark.streaming.atr_tws import WilderATRProcessor
-
-    class _TV:
-        def getCurrentProcessingTimeInMs(self):
-            return 1_000_000
-
-    handle = _FakeHandle()
-    proc = WilderATRProcessor(idle_timeout_ms=30_000)
-    proc.init(handle)
-    pdf = pd.DataFrame(
-        [dict(symbol="A", window_start=datetime(2024, 1, 1, 9, 15),
-              open=1.0, high=2.0, low=0.5, close=1.5, tick_count=3)]
-    )
-    list(proc.handleInputRows(("A",), iter([pdf]), _TV()))
-    list(proc.handleInputRows(("A",), iter([pdf]), _TV()))
-    assert handle.timers == [1_030_000]  # re-armed, not accumulated
-    [hb] = list(proc.handleExpiredTimer(("A",), _TV(), None))
-    assert hb.iloc[0].tick_count == -1 and hb.iloc[0].symbol == "A"
-    assert hb.iloc[0].close == 1.5  # last known close travels in the marker
-
-
-def test_tws_streaming_end_to_end_or_documented_gate(spark, tmpdir):
-    """Full transformWithStateInPandas run where google.protobuf exists
-    (state-v2's Python↔JVM protocol needs it). Where it does NOT (this
-    container, installs off-limits), the test still RUNS and asserts the
-    documented environment gate: the query fails as a StreamingQuery
-    error, not silently — so the suite has no permanent skip and a
-    future protobuf-equipped environment upgrades this to the e2e
-    parity check automatically."""
-    from options_data_pipeline_spark.streaming.atr_tws import (
-        ROCKSDB_PROVIDER,
-        streaming_atr_tws,
-    )
-
-    try:
-        import google.protobuf  # noqa: F401
-
-        has_protobuf = True
-    except ImportError:
-        has_protobuf = False
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
-    try:
-        base = datetime(2024, 1, 1, 9, 15)
-        rows = [
-            ("A", base + timedelta(minutes=5 * i), 10.0 + i, 12.0 + i, 9.0 + i, 11.0 + i, 3)
-            for i in range(16)
-        ]
-        src = spark.createDataFrame(rows, CANDLE_SCHEMA)
-        if not has_protobuf:
-            from pyspark.errors.exceptions.captured import StreamingQueryException
-
-            with pytest.raises(StreamingQueryException):
-                run_stream(spark, src, tmpdir, streaming_atr_tws, CANDLE_SCHEMA)
-            return
-        got = run_stream(spark, src, tmpdir, streaming_atr_tws, CANDLE_SCHEMA).collect()
-        batch = with_wilder_atr(with_true_range(src).drop("prev_close")).collect()
-        gm = {(r.symbol, r.window_start): r for r in got}
-        for b in batch:
-            g = gm[(b.symbol, b.window_start)]
-            assert g.tr == pytest.approx(b.tr)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-
-def test_tws_processor_state_survives_instance_restart(spark):
-    """Trigger-recovery contract WITHOUT the protobuf transport: a FRESH
-    WilderATRProcessor instance re-init'd over the same persisted state
-    (what the state store provides across restarts) must continue the
-    recursion exactly where the first instance stopped — split-run
-    results equal the single-run batch recursion."""
-    import pandas as pd
-
-    from options_data_pipeline_spark.streaming.atr_tws import WilderATRProcessor
-
-    class _Store:
-        """Shared state backing two handle/processor generations."""
-
-        def __init__(self):
-            self.values = {}
-
-        def handle(self):
-            store = self
-
-            class _State:
-                def __init__(self, name):
-                    self.name = name
-
-                def exists(self):
-                    return self.name in store.values
-
-                def get(self):
-                    return store.values[self.name]
-
-                def update(self, v):
-                    store.values[self.name] = v
-
-            class _Handle:
-                def getValueState(self, name, schema):
-                    return _State(name)
-
-            return _Handle()
-
-    base = datetime(2024, 1, 1, 9, 15)
-    rows = [
-        ("A", base + timedelta(minutes=5 * i), 10.0 + i, 12.0 + i, 9.0 + i, 11.0 + i, 3)
-        for i in range(16)
-    ]
-    src = spark.createDataFrame(rows, CANDLE_SCHEMA)
-    batch = {r.window_start: r for r in with_wilder_atr(with_true_range(src).drop("prev_close")).collect()}
-
-    pdf = pd.DataFrame(
-        [dict(symbol=s, window_start=w, open=o, high=h, low=lo, close=c, tick_count=t)
-         for s, w, o, h, lo, c, t in rows]
-    )
-    store = _Store()
-    proc1 = WilderATRProcessor()
-    proc1.init(store.handle())
-    out1 = list(proc1.handleInputRows(("A",), iter([pdf.iloc[:9]]), None))
-    proc1.close()
-    # "restart": a brand-new processor over the SAME persisted state
-    proc2 = WilderATRProcessor()
-    proc2.init(store.handle())
-    out2 = list(proc2.handleInputRows(("A",), iter([pdf.iloc[9:]]), None))
-    got = pd.concat(out1 + out2, ignore_index=True)
-    assert len(got) == 16
-    for row in got.itertuples(index=False):
-        b = batch[row.window_start.to_pydatetime()]
-        assert row.tr == pytest.approx(b.tr)
-        if b.atr is None:
-            assert pd.isna(row.atr) or row.atr is None
-        else:
-            assert row.atr == pytest.approx(b.atr)
-
-
 def test_streaming_atr_state_survives_restart(spark, tmpdir):
-    """Warmup spans a query STOP/RESTART: ATR state (prev_close, tr_sum, n)
-    must recover from the checkpoint (reference CheckpointManager
-    semantics, §2.8) — batch 2 runs in a fresh query instance."""
+    """Warmup spans a query STOP/RESTART: the ATR state (i, acc, prev, pc)
+    the first query published under its checkpoint seeds the fresh
+    query instance (reference CheckpointManager semantics, §2.8)."""
     base = datetime(2024, 1, 1, 9, 15)
-    src, out, ckpt = tmpdir + "/src", tmpdir + "/out", tmpdir + "/ckpt"
+    src, sink, ckpt = tmpdir + "/src", tmpdir + "/sink", tmpdir + "/ckpt"
 
     def mk(i):
         return ("A", base + timedelta(minutes=5 * i), 10.0 + i, 12.0 + i, 9.0 + i, 11.0 + i, 1)
 
-    def start_query():
-        stream = spark.readStream.schema(CANDLE_SCHEMA).parquet(src)
-        return (
-            streaming_atr(stream)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .start()
-        )
-
     spark.createDataFrame([mk(i) for i in range(10)], CANDLE_SCHEMA).write.parquet(src)
-    q = start_query()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
+    _atr_stream(spark, src, sink, ckpt)
     spark.createDataFrame([mk(i) for i in range(10, 16)], CANDLE_SCHEMA).write.mode(
         "append"
     ).parquet(src)
-    q = start_query()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    got = _atr_stream(spark, src, sink, ckpt)
 
-    got = {r.window_start: r for r in spark.read.parquet(out).collect()}
-
-    full = spark.createDataFrame([mk(i) for i in range(16)], CANDLE_SCHEMA)
-    batch = with_wilder_atr(with_true_range(full).drop("prev_close")).collect()
+    want = _batch_atr(spark.createDataFrame([mk(i) for i in range(16)], CANDLE_SCHEMA))
     assert len(got) == 16
-    for b in batch:
-        g = got[b.window_start]
-        if b.atr is None:
-            assert g.atr is None
-        else:
-            assert g.atr == pytest.approx(b.atr)  # seed at 14 spans the boundary
+    # the seed at 14 spans the restart
+    assert {k: (g.tr, g.atr) for k, g in got.items()} == {k: (w.tr, w.atr) for k, w in want.items()}
 
 
 def test_late_tick_dropped_by_watermark(spark, tmpdir):
@@ -546,42 +327,6 @@ def test_sink_failed_append_releases_delta_cache(spark, tmpdir, monkeypatch):
     with pytest.raises(RuntimeError):
         idempotent_append_batch(batch, tmpdir + "/sink")
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
-
-
-def test_atr_update_handles_multi_chunk_out_of_order_groups():
-    """applyInPandasWithState hands a group to _atr_update as SEVERAL
-    Arrow chunks when the trigger's rows exceed maxRecordsPerBatch, in
-    arbitrary shuffle order. The recursion must see candles in window
-    order regardless of chunking."""
-    import pandas as pd
-
-    from options_data_pipeline_spark.streaming.atr_state import _atr_update
-
-    def candle(minute, price):
-        return {
-            "symbol": "X",
-            "window_start": pd.Timestamp(2026, 1, 5, 9, 0)
-            + pd.Timedelta(minutes=minute),
-            "open": price, "high": price + 2.0, "low": price - 1.0,
-            "close": price + 1.0, "tick_count": 3,
-        }
-
-    rows = [candle(m, 100.0 + m) for m in range(0, 100, 5)]
-
-    class FakeState:
-        exists = False
-        def update(self, v):
-            self.value = v
-
-    # chunked adversarially: later windows in the first chunk
-    chunks = [pd.DataFrame(rows[13:]), pd.DataFrame(rows[:13])]
-    got = pd.concat(list(_atr_update(("X",), iter(chunks), FakeState(), period=5)))
-    want = pd.concat(list(_atr_update(("X",), iter([pd.DataFrame(rows)]), FakeState(), period=5)))
-    pd.testing.assert_frame_equal(
-        got.reset_index(drop=True), want.reset_index(drop=True)
-    )
-    assert list(got["window_start"]) == sorted(got["window_start"])
-    assert got["atr"].notna().sum() > 0
 
 
 def test_sink_crash_before_promotion_leaves_sink_clean(spark, tmpdir, monkeypatch):
@@ -1247,14 +992,15 @@ def test_manifest_compact_and_expire_snapshots(spark, tmpdir):
 
 
 def test_streaming_drawdown_matches_batch(spark, tmpdir):
-    """Drained streaming drawdown state equals the batch max_drawdown
-    query bit-for-bit (same op sequence, strict-< first-trough
-    tie-break), including across MULTIPLE triggers carrying the peak
-    between batches."""
+    """The drawdown panel the live stage publishes equals the batch
+    max_drawdown query bit-for-bit (same op sequence, strict-< first-
+    trough tie-break), including across MULTIPLE triggers carrying the
+    peak between batches."""
     import os
     import time as _time
 
-    from options_data_pipeline_spark.streaming.drawdown_state import (
+    from options_data_pipeline_spark.streaming.fold_state import (
+        drawdown_panel,
         streaming_max_drawdown,
     )
 
@@ -1290,25 +1036,14 @@ def test_streaming_drawdown_matches_batch(spark, tmpdir):
         .option("maxFilesPerTrigger", 1)
         .parquet(replay)
     )
-    q = (
-        streaming_max_drawdown(stream)
-        .writeStream.format("memory")
-        .queryName("dd_stream")
-        .outputMode("update")
-        .start()
-    )
+    q = streaming_max_drawdown(stream, tmpdir + "/ddckpt").start()
     try:
         q.processAllAvailable()
     finally:
         q.stop()
-    # last emitted row per symbol = the drained summary
-    got = {
-        r.symbol: r
-        for r in spark.sql(
-            "SELECT * FROM dd_stream"
-        ).collect()
-        if r.n_ticks == len(prices[r.symbol])
-    }
+    # the published panel after the last trigger
+    got = {r.symbol: r for r in drawdown_panel(spark, tmpdir + "/ddckpt").collect()}
+    assert {s: r.n_ticks for s, r in got.items()} == {s: len(p) for s, p in prices.items()}
 
     from pyspark.sql import Window as W
 
@@ -2029,6 +1764,30 @@ def test_streaming_drift_monitor_matches_batch_and_flags_drift(spark, tmpdir):
     # report keeps answering after a rebuild
     publish_reference(ref, ref_path)
     assert drift_report(spark, ref_path, store).count() == 2
+
+
+def test_drift_merge_reads_only_its_own_batch(spark, tmpdir, monkeypatch):
+    """Every cell id embeds its batch_id, so an append dedups against its
+    own batch's rows only, however many batches the store holds, and an
+    empty batch reads no store data."""
+    from options_data_pipeline_spark.streaming.drift_stream import (
+        drift_merge_batch,
+        publish_reference,
+    )
+
+    ref_path, store = tmpdir + "/ref", tmpdir + "/cells"
+    events = spark.createDataFrame(
+        [(t, float(v)) for t in ("a", "b") for v in range(10)],
+        "event_type string, value double",
+    )
+    publish_reference(events, ref_path)
+    for batch_id in range(3):
+        assert drift_merge_batch(events, ref_path, store, batch_id) > 0
+    seen = _anti_join_reads(spark, monkeypatch)
+    n = drift_merge_batch(events, ref_path, store, 3)
+    assert drift_merge_batch(events, ref_path, store, 3) == 0
+    assert drift_merge_batch(events.limit(0), ref_path, store, 4) == 0
+    assert seen == [0, n]
 
 
 def test_drift_chi2_between_null_on_one_sided_type(spark):
