@@ -19,8 +19,9 @@ programs:
    idempotent sink, with checkpointing.
 
 Scale: everything between the tick scan and the sink groups/windows by
-symbol — one shuffle into (symbol, window) grain, then symbol-partitioned
-window functions and the ATR fold reuse that partitioning. The
+symbol — one shuffle into (symbol, window) grain, then one shuffle on
+symbol that gap-fill's span window, the TR window and the ATR fold all
+reuse; gap-fill's batch-wide last window is a scalar subquery. The
 batch sink is not partitioned: the append's dedup read prunes by a
 ``window_start`` range filter over the batch's own bounds, which parquet
 row-group statistics turn into skipped reads.
@@ -49,16 +50,16 @@ def enrich_candles(
     interval_seconds: int = 300,
     symbols: DataFrame | None = None,
     instruments: DataFrame | None = None,
-    cache_handles: list[DataFrame] | None = None,
 ) -> DataFrame:
     """ticks → gap-filled, TR/ATR-enriched, id'd candle rows (the
     market_data fact schema, reference schema_manager.py:20-24 + the
     explicit gap_filled column the reference drops by accident).
 
-    ``cache_handles``: pass a list to receive the internal cached frames
-    so the caller can unpersist them after its terminal action."""
+    Lazy and cache-free: the OHLC aggregate shuffles on (symbol, window),
+    and gap-fill's span window, the TR window and the ATR fold share one
+    symbol shuffle."""
     candles = ohlc_candles(ticks, interval)
-    filled = gap_fill(candles, interval_seconds, symbols=symbols, handles=cache_handles)
+    filled = gap_fill(candles, interval_seconds, symbols=symbols)
     enriched = with_wilder_atr(with_true_range(filled).drop("prev_close"))
     enriched = with_row_id(enriched)
     if instruments is not None:
@@ -83,9 +84,9 @@ def run_batch(
 
     The enriched chain is materialized once (cached) and read by three
     consumers: the sink's bound probe, its anti-join delta and the
-    ``atr_summary`` snapshot — so the gap-fill scaffold, TR window and
-    ATR fold run once per session, not once per action. Every
-    cache is released on return, also when a write raises."""
+    ``atr_summary`` snapshot — so gap-fill, the TR window and the ATR
+    fold run once per session, not once per action. That one cache is
+    released on return, also when a write raises."""
     if calendar is not None and "session_open" in calendar.columns:
         # full per-date gate: holidays drop, special sessions (Muhurat)
         # override the default hours AND trade on otherwise-closed days
@@ -96,19 +97,15 @@ def run_batch(
         if calendar is not None:
             ticks = calendar_gate(ticks, calendar)
         ticks = in_session(ticks, open_hm, close_hm)
-    handles: list[DataFrame] = []
+    enriched = enrich_candles(
+        ticks, interval, interval_seconds, symbols, instruments
+    ).cache()
     try:
-        enriched = enrich_candles(
-            ticks, interval, interval_seconds, symbols, instruments,
-            cache_handles=handles,
-        ).cache()
-        handles.append(enriched)
         written = idempotent_append_batch(enriched, sink_path)
         if state_path is not None:
             overwrite_snapshot(atr_summary(enriched), state_path)
     finally:
-        for h in handles:
-            h.unpersist()
+        enriched.unpersist()
     return written
 
 
@@ -323,7 +320,7 @@ def run_streaming(
 
 
 class _Queries(tuple):
-    """Started-queries tuple + the optional listener handles."""
+    """Started-queries tuple + the optional listeners."""
 
     metrics = None
     alerts = None

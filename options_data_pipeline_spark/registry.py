@@ -269,11 +269,9 @@ WHERE (CASE WHEN tick_count IS NULL THEN prev_close ELSE "close" END) IS NOT NUL
 )
 def q_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W4: flat-candle gap fill w/ forward-filled close (reference
-    gap_fill.py:32-88); unfillable (cold-start) slots dropped. Uncached:
-    nothing could unpersist a cache under a lazily returned frame."""
-    return gap_fill(
-        ohlc_candles(load_ticks(spark, sf_dir), "3600 seconds"), 3600, cache=False
-    )
+    gap_fill.py:32-88); unfillable (cold-start) slots dropped. The span
+    form caches nothing, so the lazily returned frame leaves no cache."""
+    return gap_fill(ohlc_candles(load_ticks(spark, sf_dir), "3600 seconds"), 3600)
 
 
 @register(

@@ -5,13 +5,15 @@ window finalization, ``main.py:298-307``).
 Implementation: a ``foreachBatch`` densifier between the OHLC stage and
 the ATR stage. For each micro-batch of finalized candles:
 
- 1. scaffold = expected universe × the batch's window range;
- 2. left-join the batch's candles;
- 3. forward-fill closes — seeded with each symbol's last known close read
-    from the dense sink itself (partition-prunable lookback), so silence
-    spanning micro-batch boundaries still fills and the fill chains
-    (a symbol silent for N windows gets N flat candles);
- 4. append scaffold rows (real + flat) to the dense sink.
+ 1. seed each symbol with its last known close, read from the dense sink
+    itself (partition-prunable lookback), as one flat candle at its last
+    window;
+ 2. gap-fill seeds + batch candles as per-symbol spans
+    (``operators/gapfill.py``), so silence spanning micro-batch boundaries
+    still fills and the fill chains (a symbol silent for N windows gets N
+    flat candles);
+ 3. drop the seed rows and append the rest (real + flat) to the dense
+    sink.
 
 Because the dense sink is also the seed source, the operator is
 self-contained; exactly-once comes from the deterministic (symbol,
@@ -82,10 +84,7 @@ def densify_batch(
         "symbol", "window_start", "open", "high", "low", "close", "tick_count"
     )
     unioned = candles.unionByName(seeds) if seeds is not None else candles
-    # cache=False: this runs every micro-batch for the life of the stream —
-    # an internal cache would accumulate storage without bound. The batch
-    # frame re-reads source parquet cheaply.
-    dense = gap_fill(unioned, interval_seconds, symbols=universe, cache=False)
+    dense = gap_fill(unioned, interval_seconds, symbols=universe)
     if seeds is not None:
         # drop the synthetic seed rows (and anything at/before them —
         # those windows were already emitted by earlier batches)

@@ -351,7 +351,9 @@ def manifest_append_batch(
     manifest (segment min/max) and parquet row-group-stat levels, the same
     posture Delta data skipping takes on object stores. The dedup read
     keeps NULL prune values as :func:`idempotent_append_batch` does; an
-    empty batch returns 0 before any segment is read."""
+    empty batch returns 0 before any segment is read. Cache rule as
+    there: a batch the caller cached is left cached, and only the
+    sink's own cache is released, also when a write raises."""
     spark = batch.sparkSession
     b = lo = hi = None
     skip_lo = skip_hi = None
@@ -376,17 +378,22 @@ def manifest_append_batch(
             # parquet scan and prunes row groups by their stats
             sink = sink.filter(_prune_filter(prune_col, b))
         delta = batch.join(sink.select(id_col), id_col, "left_anti")
-    delta = delta.cache()
-    n = delta.count()
-    if n:
-        import uuid
+    own_cache = not delta.is_cached
+    if own_cache:
+        delta = delta.cache()
+    try:
+        n = delta.count()
+        if n:
+            import uuid
 
-        seg_name = uuid.uuid4().hex[:12]
-        delta.write.mode("overwrite").parquet(
-            os.path.join(sink_path, "segments", seg_name)
-        )
-        _publish_manifest(sink_path, seg_name, n, lo, hi, prune_col=prune_col)
-    delta.unpersist()
+            seg_name = uuid.uuid4().hex[:12]
+            delta.write.mode("overwrite").parquet(
+                os.path.join(sink_path, "segments", seg_name)
+            )
+            _publish_manifest(sink_path, seg_name, n, lo, hi, prune_col=prune_col)
+    finally:
+        if own_cache:
+            delta.unpersist()
     return n
 
 

@@ -2,14 +2,16 @@
 
 These are the sequential loops the engine's recursive indicators were
 first written as (Wilder ATR, EMA, RSI, MACD, Keltner, Heikin-Ashi, ADX,
-Holt). The engine now runs them as Spark SQL folds
-(``operators/fold.py``); the property tests compare the two with ``==``,
-so every fold step must run these loops' IEEE double operations in the
-same order. A ``None`` here is a NULL there; a NaN here (a NULL input
+Holt), plus the gap-fill loop. The engine now runs them as Spark SQL
+folds (``operators/fold.py``) and spans (``operators/gapfill.py``); the
+tests compare the two with ``==``, so every fold step must run these
+loops' IEEE double operations in the same order. A ``None`` here is a NULL there; a NaN here (a NULL input
 read through pandas) may be a NULL there.
 """
 
 from __future__ import annotations
+
+from datetime import timedelta
 
 
 def _wilder(trs, period: int):
@@ -249,3 +251,35 @@ def _adx_series(h, l, c, n: int = 14):
             adx_prev = (adx_prev * (n - 1) + d) / n
             adx_out.append(adx_prev)
     return di_p, di_m, dx, adx_out
+
+
+def _gap_fill_rows(candles, interval_seconds: int, symbols=None):
+    """Gap-fill as the dense scaffold does it: every symbol of the
+    universe (``symbols``, else the candles' own) × every window
+    ``w_min + k·interval`` up to ``w_max`` (bounds over all candles),
+    forward-filling the last non-NULL close into silent windows.
+
+    ``candles`` are (symbol, window_start, open, high, low, close,
+    tick_count) tuples; returns (…, tick_count, gap_filled) tuples in
+    (symbol, window_start) order. A row with no close to show (a real
+    candle with a NULL close, or silence before any close) is dropped."""
+    if not candles:
+        return []
+    starts = [c[1] for c in candles]
+    w_min, w_max = min(starts), max(starts)
+    step = timedelta(seconds=interval_seconds)
+    universe = symbols if symbols is not None else {c[0] for c in candles}
+    by_key = {(c[0], c[1]): c for c in candles}
+    out = []
+    for sym in sorted(universe):
+        prev_close, w = None, w_min
+        while w <= w_max:
+            c = by_key.get((sym, w))
+            if c is None:
+                if prev_close is not None:
+                    out.append((sym, w) + (prev_close,) * 4 + (0, True))
+            elif c[5] is not None:
+                out.append(tuple(c) + (False,))
+                prev_close = c[5]
+            w += step
+    return out

@@ -6,11 +6,16 @@ from __future__ import annotations
 
 from datetime import datetime
 
+import pytest
+
 from options_data_pipeline_spark.operators.gapfill import gap_fill
+from recursion_refs import _gap_fill_rows
 
 W0 = datetime(2024, 1, 1, 9, 15)
 W1 = datetime(2024, 1, 1, 9, 20)
 W2 = datetime(2024, 1, 1, 9, 25)
+W3 = datetime(2024, 1, 1, 9, 30)
+W4 = datetime(2024, 1, 1, 9, 35)
 
 
 def candles_df(spark, rows):
@@ -82,3 +87,61 @@ def test_registry_gap_fill_leaves_no_cache(spark, monkeypatch):
     out.write.format("noop").mode("overwrite").save()
     assert [r.tick_count for r in out.orderBy("window_start").collect()] == [1, 0, 1]
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _c(sym, w, close, ticks=1):
+    """One candle around ``close``; a NULL close makes O/H/L NULL too."""
+    if close is None:
+        return (sym, w, None, None, None, None, ticks)
+    return (sym, w, close - 1.0, close + 1.0, close - 2.0, close, ticks)
+
+
+# (candles, symbols universe or None); B's later last window makes the
+# batch's w_max lie past A's last candle, so A's trailing fill must reach it
+REFERENCE_CASES = {
+    "leading_middle_trailing_silence": (
+        [_c("A", W1, 10.0), _c("A", W3, 12.0), _c("B", W0, 5.0), _c("B", W4, 6.0)],
+        None,
+    ),
+    "symbol_silent_all_batch": (
+        [_c("A", W0, 10.0), _c("A", W2, 11.0)],
+        ["A", "B"],
+    ),
+    "null_close_candle": (
+        [_c("A", W0, 10.0), _c("A", W1, None, 3), _c("A", W3, 12.0), _c("B", W4, 1.0)],
+        None,
+    ),
+    "universe_adds_and_omits": (
+        [_c("A", W0, 10.0), _c("B", W1, 5.0), _c("B", W4, 6.0)],
+        ["A", "C"],
+    ),
+    "single_candle": ([_c("A", W2, 10.0)], None),
+    "empty": ([], None),
+}
+
+
+@pytest.mark.parametrize("case", sorted(REFERENCE_CASES))
+def test_gap_fill_matches_reference_loop(spark, case):
+    """The span form equals the dense scaffold's semantics, spelled out
+    as a plain loop (tests/recursion_refs.py::_gap_fill_rows)."""
+    rows, universe = REFERENCE_CASES[case]
+    symbols = None
+    if universe is not None:
+        symbols = spark.createDataFrame([(s,) for s in universe], "symbol string")
+    out = gap_fill(candles_df(spark, rows), 300, symbols=symbols)
+    got = sorted(tuple(r) for r in out.collect())
+    assert got == _gap_fill_rows(rows, 300, universe)
+
+
+def test_gap_fill_output_schema(spark):
+    out = gap_fill(candles_df(spark, [_c("A", W0, 10.0)]), 300)
+    assert out.dtypes == [
+        ("symbol", "string"),
+        ("window_start", "timestamp"),
+        ("open", "double"),
+        ("high", "double"),
+        ("low", "double"),
+        ("close", "double"),
+        ("tick_count", "bigint"),
+        ("gap_filled", "boolean"),
+    ]

@@ -102,17 +102,29 @@ def test_batch_pipeline_enriches_once(spark, tmpdir, monkeypatch):
             assert "FlatMapGroupsInPandas" not in got
 
 
-def all_plan_nodes(plan):
-    """Node names of a physical plan and of every cached relation in it."""
+def plan_walk(plan, in_subquery=False):
+    """(node, in_subquery) over a physical plan, every cached relation
+    and every subquery in it."""
+    yield plan, in_subquery
+    subs = plan.subqueries()
+    for i in range(subs.size()):
+        yield from plan_walk(subs.apply(i), True)
     name = plan.nodeName()
     if name == "AdaptiveSparkPlan":
-        return all_plan_nodes(plan.executedPlan())
-    if name == "InMemoryTableScan":
-        return [name] + all_plan_nodes(plan.relation().cachedPlan())
-    if name.endswith("QueryStage"):  # adaptive stages hold their plan
-        return [name] + all_plan_nodes(plan.plan())
-    kids = plan.children()
-    return [name] + [n for i in range(kids.size()) for n in all_plan_nodes(kids.apply(i))]
+        kids = [plan.executedPlan()]
+    elif name == "InMemoryTableScan":
+        kids = [plan.relation().cachedPlan()]
+    elif name.endswith("QueryStage"):  # adaptive stages hold their plan
+        kids = [plan.plan()]
+    else:
+        kids = [plan.children().apply(i) for i in range(plan.children().size())]
+    for kid in kids:
+        yield from plan_walk(kid, in_subquery)
+
+
+def all_plan_nodes(plan):
+    """Node names of a physical plan, its cached relations and subqueries."""
+    return [node.nodeName() for node, _ in plan_walk(plan)]
 
 
 _PYTHON_NODES = ("FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython", "ExistingRDD")
@@ -120,7 +132,11 @@ _PYTHON_NODES = ("FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython", 
 
 def test_batch_pipeline_runs_no_python_worker(spark, tmpdir, monkeypatch):
     """The enriched chain (ATR fold included) and the calendar plan no
-    pandas island, Python UDF or pickled Python RDD."""
+    pandas island, Python UDF or pickled Python RDD. The enriched chain
+    also holds no nested-loop or cartesian join and no cache but
+    ``run_batch``'s own, and shuffles twice in its main plan (OHLC on
+    (symbol, window), then symbol for gap-fill, TR and ATR) plus once to
+    SinglePartition in gap-fill's ``w_max`` subquery."""
     import json
 
     from options_data_pipeline_spark import pipeline
@@ -135,14 +151,23 @@ def test_batch_pipeline_runs_no_python_worker(spark, tmpdir, monkeypatch):
 
     def append(batch, sink_path):
         batch.count()  # materialize the cache the plan reads
-        plans.append(all_plan_nodes(batch._jdf.queryExecution().executedPlan()))
+        plans.append(list(plan_walk(batch._jdf.queryExecution().executedPlan())))
         return real_append(batch, sink_path)
 
     monkeypatch.setattr(pipeline, "idempotent_append_batch", append)
     ticks = local_frame(spark, session_ticks(spark).collect(), TICK_SCHEMA)
     assert run_batch(ticks, tmpdir + "/market", state_path=tmpdir + "/state", calendar=cal) == 8
-    [enriched] = plans
-    assert "InMemoryTableScan" in enriched and "LocalTableScan" in enriched
+    [walk] = plans
+    enriched = [node.nodeName() for node, _ in walk]
+    assert enriched.count("InMemoryTableScan") == 1 and "LocalTableScan" in enriched
+    assert not {"BroadcastNestedLoopJoin", "CartesianProduct"} & set(enriched)
+    shuffles = [
+        (sub, node.outputPartitioning().toString())
+        for node, sub in walk
+        if node.nodeName() == "Exchange"
+    ]
+    assert len([p for sub, p in shuffles if not sub]) <= 2, shuffles
+    assert [p for sub, p in shuffles if sub] == ["SinglePartition"], shuffles
     for nodes in (enriched, all_plan_nodes(cal._jdf.queryExecution().executedPlan())):
         assert not [n for n in nodes if any(p in n for p in _PYTHON_NODES)], nodes
 

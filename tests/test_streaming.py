@@ -329,6 +329,38 @@ def test_sink_failed_append_releases_delta_cache(spark, tmpdir, monkeypatch):
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
+def test_manifest_sink_failed_append_releases_delta_cache(spark, tmpdir, monkeypatch):
+    """A manifest append whose commit raises leaves no cache behind."""
+    from options_data_pipeline_spark.streaming import sink as sink_mod
+
+    def boom(sink_path, segment, n_rows, lo, hi, **kw):
+        raise RuntimeError("crash before manifest publish")
+
+    monkeypatch.setattr(sink_mod, "_publish_manifest", boom)
+    batch = spark.createDataFrame([("a", 1.0)], "id string, v double").withColumn(
+        "window_start", F.lit("2024-01-01 09:15:00").cast("timestamp")
+    )
+    spark.catalog.clearCache()
+    with pytest.raises(RuntimeError):
+        sink_mod.manifest_append_batch(batch, tmpdir + "/msink")
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_manifest_sink_keeps_caller_cache_on_empty_sink(spark, tmpdir):
+    """Into an empty sink the delta is the batch itself: a batch the
+    caller cached is still cached after the append."""
+    from options_data_pipeline_spark.streaming.sink import manifest_append_batch
+
+    batch = spark.createDataFrame([("a", 1.0)], "id string, v double").withColumn(
+        "window_start", F.lit("2024-01-01 09:15:00").cast("timestamp")
+    ).cache()
+    try:
+        assert manifest_append_batch(batch, tmpdir + "/msink") == 1
+        assert batch.is_cached
+    finally:
+        batch.unpersist()
+
+
 def test_sink_crash_before_promotion_leaves_sink_clean(spark, tmpdir, monkeypatch):
     """A crash after the staging write but before any rename must leave
     ZERO visible files in the sink — the replay then writes everything."""

@@ -67,8 +67,6 @@ BNLJ_OK = {
     "bm25_rank",  # 1-row corpus avgdl/N stats normalizer
     "bm25_rank_indexed",  # the SAME 1-row stats normalizer, store-served
     "hybrid_rrf_retrieval_indexed",  # same stats row via the sparse arm
-    # bounded scaffold: symbols × day-window sequence
-    "gap_fill",
     # broadcast 1-ROW bloom filter crossJoined onto the probe side (the
     # whole point: membership testing without a join)
     "bloom_prefilter_stats",
